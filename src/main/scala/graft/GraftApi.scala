@@ -218,16 +218,29 @@ object GraftApi {
       // CorpusCuration.release, or globally by releaseCaches) — without
       // this, each handoff self-join would re-run the full upstream
       // lineage (the regex passes twice, the quality scoring three times).
-      val cleaned = spread.withColumn("text", TextAnalysis.cleanMarkup(col("text")))
+      // fenced: the quality filter below reads the cleaned text in
+      // ~10 places, and without the fence Catalyst substitutes the
+      // whole cleanMarkup regex chain into every one of them (a
+      // FilterExec has no common-subexpression elimination) — the
+      // chain runs once per row here instead
+      val cleaned = operators.fence(
+        spread.withColumn("text", TextAnalysis.cleanMarkup(col("text"))))
       stages += ("strip_markup" -> cleaned)
       // the rule gate is a pure PREDICATE over the row (qualityKeepExpr
       // == qualityFilter's keep bit) — filtering in place keeps the
       // stage scan-local; the r15 form joined the report's keep set
       // back on doc_id, a whole broadcast-join stage (and its Catalyst
       // depth, re-analyzed by every downstream action) to re-derive a
-      // column that never left the row
+      // column that never left the row. The keep bit is PROJECTED
+      // behind a fence, then filtered on: a projection shares the
+      // token kernel across its conjuncts (subexpression elimination),
+      // where a Filter would tokenize the text ~7 times per row — and
+      // the stage's cost then swings with how soon the JIT compiles
+      // those kernels (same input, 4-core host: task CPU 0.7-1.5 s
+      // inline, 0.5-0.7 s projected)
       val afterQuality = Caches.persistTracked(
-        cleaned.filter(TextAnalysis.qualityKeepExpr()))
+        operators.fence(cleaned.withColumn("_keep", TextAnalysis.qualityKeepExpr()))
+          .filter(col("_keep")).drop("_keep"))
       stages += ("quality_filter" -> afterQuality)
       // optional C4-style kill-list: a pure filter over the cached
       // quality survivors (single consumer — no persist needed)

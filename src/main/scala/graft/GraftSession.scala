@@ -44,6 +44,10 @@ object GraftSession {
       // only duplicates work; scale-independent, not a local tune.
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+      // plans operators.fence (a no-op node the optimizer cannot push
+      // filters through) as its child
+      .withExtensions(_.injectPlannerStrategy(_ =>
+        org.apache.spark.sql.graftbridge.FenceStrategy))
 
   def get(): SparkSession = {
     val s = builder().getOrCreate()

@@ -2659,8 +2659,11 @@ object SparkEntry {
     // the composed pipeline (see the q_curate queries entry): shared
     // stage chain + span cut k=20 over normalized windows (cut applies
     // to ORIGINAL-case tokens; an uncut doc passes through verbatim,
-    // mirroring cutSpans' when(size(ivs)=0) arm) + PII redaction +
-    // per-source quota-10 Knuth-salt sample
+    // mirroring cutSpans' when(size(ivs)=0) arm; `okeep` nulls each cut
+    // token instead of dropping its row, so a doc whose every token is
+    // cut still has a `rebuilt` row, and string_agg over all-null gives
+    // NULL → '', as in cutSpans) + PII redaction + per-source quota-10
+    // Knuth-salt sample
     "q_curate" -> (curateOracleStages +
       s"""
         |), wins AS (
@@ -2690,9 +2693,11 @@ object SparkEntry {
         |  FROM (SELECT doc_id, string_split(trim(text), ' ') AS otoks FROM nd
         |        WHERE doc_id IN (SELECT DISTINCT doc_id FROM ivs))
         |), okeep AS (
-        |  SELECT ote.doc_id, ote.i, ote.otoks[ote.i + 1] AS t FROM ote
-        |  WHERE NOT EXISTS (SELECT 1 FROM ivs
+        |  SELECT ote.doc_id, ote.i,
+        |         CASE WHEN NOT EXISTS (SELECT 1 FROM ivs
         |                    WHERE ivs.doc_id = ote.doc_id AND ote.i >= ivs.s AND ote.i < ivs.e)
+        |              THEN ote.otoks[ote.i + 1] END AS t
+        |  FROM ote
         |), rebuilt AS (
         |  SELECT doc_id, string_agg(t, ' ' ORDER BY i) AS text_cut
         |  FROM okeep GROUP BY doc_id

@@ -4,14 +4,58 @@
 // Catalyst extensions.
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, ExpressionInfo, ExpressionSet}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+
+/** Optimizer fence: an identity logical node that no Catalyst pushdown
+  * rule sees through. `PushPredicateThroughNonJoin` only moves a Filter
+  * past the unary nodes it knows, so a Filter written above a Fence
+  * stays above it, and a Filter over an aliased projection below the
+  * Fence can no longer be rewritten to recompute the alias. Column
+  * pruning still passes: ColumnPruning's generic "project below a node
+  * that forwards its child's output" case inserts the pruning Project
+  * under the Fence. Constraints and maxRows forward unchanged, since
+  * the rows do. [[FenceStrategy]] plans it as its child, so it costs no
+  * physical operator, exchange or materialization. */
+case class Fence(child: LogicalPlan) extends UnaryNode {
+  override def output: Seq[Attribute] = child.output
+  override def maxRows: Option[Long] = child.maxRows
+  override protected lazy val validConstraints: ExpressionSet = child.constraints
+  override protected def withNewChildInternal(newChild: LogicalPlan): Fence =
+    copy(child = newChild)
+}
+
+/** Plans a [[Fence]] as its child's physical plan. */
+object FenceStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case Fence(child) => planLater(child) :: Nil
+    case _ => Nil
+  }
+}
 
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `df` under a [[Fence]]. The strategy is registered on
+    * `df.sparkSession` first unless the session's planner already has
+    * it (GraftSession.builder injects it as an extension), so a frame
+    * fenced on an externally built session still plans. */
+  def fence(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    if (!spark.sessionState.planner.strategies.contains(FenceStrategy)) {
+      val experimental = spark.experimental
+      experimental.synchronized {
+        if (!experimental.extraStrategies.contains(FenceStrategy))
+          experimental.extraStrategies = FenceStrategy +: experimental.extraStrategies
+      }
+    }
+    org.apache.spark.sql.classic.Dataset.ofRows(spark, Fence(df.queryExecution.analyzed))
+  }
 
   /** Drain the asynchronous listener bus (private[spark], reachable
     * here because org.apache.spark.sql.* is inside the spark access

@@ -5,6 +5,7 @@ import org.apache.spark.ml.classification.RandomForestClassifier
 import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, RegressionEvaluator}
 import org.apache.spark.ml.regression._
 import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
+import org.apache.spark.mllib.evaluation.RegressionMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -57,12 +58,19 @@ object Models {
       (name, model, regressionMetrics(pred))
     }
 
-  /** mse / rmse / mae / r2 (weather_predictor.py:242-254). */
+  /** mse / rmse / mae / r2 (weather_predictor.py:242-254) from ONE
+    * pass over the predictions. Each `RegressionEvaluator.evaluate`
+    * call re-executes the whole prediction lineage for one metric; this
+    * builds the same `RegressionMetrics` the evaluator builds (double
+    * casts, unit weights, not through the origin) once and reads all
+    * four from its single summary, so the values are bit-identical. */
   def regressionMetrics(pred: DataFrame, labelCol: String = "label",
                         predCol: String = "prediction"): Map[String, Double] = {
-    val ev = new RegressionEvaluator().setLabelCol(labelCol).setPredictionCol(predCol)
-    Seq("mse", "rmse", "mae", "r2")
-      .map(m => m -> ev.setMetricName(m).evaluate(pred)).toMap
+    val m = new RegressionMetrics(
+      pred.select(col(predCol).cast("double"), col(labelCol).cast("double"), lit(1.0))
+        .rdd.map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2))))
+    Map("mse" -> m.meanSquaredError, "rmse" -> m.rootMeanSquaredError,
+      "mae" -> m.meanAbsoluteError, "r2" -> m.r2)
   }
 
   /** Rain classifier (weather_predictor.py:313-391): RandomForest with

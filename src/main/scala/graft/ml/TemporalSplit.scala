@@ -15,9 +15,18 @@ import org.apache.spark.sql.functions._
 object TemporalSplit {
 
   /** Timestamp threshold at the given chronological fraction. */
-  private def thresholdAt(df: DataFrame, tsCol: String, frac: Double): Long =
+  private[graft] def thresholdAt(df: DataFrame, tsCol: String, frac: Double): Long =
     df.select(percentile_approx(col(tsCol).cast("long"), lit(frac), lit(10000))
       .as("t")).collect()(0).getLong(0)
+
+  /** Thresholds at several fractions from ONE sketch pass: the same
+    * percentile_approx summary answers every fraction, so each value
+    * equals its single-fraction [[thresholdAt]]. */
+  private[graft] def thresholdsAt(df: DataFrame, tsCol: String,
+                                  fracs: Seq[Double]): Seq[Long] =
+    df.select(percentile_approx(col(tsCol).cast("long"),
+        array(fracs.map(lit): _*), lit(10000)).as("t"))
+      .collect()(0).getSeq[Long](0)
 
   /** (train, test): first `trainFrac` of time to train, rest to test. */
   def split(df: DataFrame, tsCol: String = "ts", trainFrac: Double = 0.8)
@@ -33,7 +42,7 @@ object TemporalSplit {
     * expand). */
   def walkForward(df: DataFrame, tsCol: String = "ts", k: Int = 3)
       : Seq[(DataFrame, DataFrame)] = {
-    val cuts = (1 to k + 1).map(i => thresholdAt(df, tsCol, i.toDouble / (k + 1)))
+    val cuts = thresholdsAt(df, tsCol, (1 to k + 1).map(i => i.toDouble / (k + 1)))
     (0 until k).map { i =>
       val trainEnd = cuts(i)
       val testEnd = cuts(i + 1)

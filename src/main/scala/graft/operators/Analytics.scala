@@ -154,12 +154,13 @@ object Analytics {
   def jsonIngest(events: DataFrame): DataFrame =
     // spread before the parse: JSON-path extraction is the per-row
     // cost here and a single-file table serializes it onto one core
-    // (size-gated — a partitioned ingest at scale passes through)
-    spreadToCores(events
+    // (size-gated — a partitioned ingest at scale passes through);
+    // fenced so the null filter reads `k` instead of re-parsing
+    fence(spreadToCores(events
       .select(col("event_id"), col("user_id"), col("props"), col("value")))
       .select(col("event_id"), col("user_id"),
         jsonLong(col("props"), "$.k").as("k"),
-        col("value"))
+        col("value")))
       .filter(col("k").isNotNull)
       .orderBy("event_id")
 

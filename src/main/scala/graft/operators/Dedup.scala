@@ -34,11 +34,13 @@ object Dedup {
   /** Distinct hashed n-gram shingles (array<long>, codegen'd). The
     * input spreads to full parallelism first — tokenization + hashing
     * is the corpus-wide per-row kernel, and a single-partition small
-    * table would run it on one core. */
+    * table would run it on one core. The result is fenced: callers
+    * filter on `size(sh)`, which would otherwise recompute the kernel
+    * inside the filter and again in the projection. */
   def shingleHashes(docs: DataFrame, n: Int = 3): DataFrame =
-    spreadToCores(docs).select(
+    fence(spreadToCores(docs).select(
       col("doc_id"),
-      GraftFunctions.shingleHash64(TextAnalysis.tokens(col("text")), n).as("sh"))
+      GraftFunctions.shingleHash64(TextAnalysis.tokens(col("text")), n).as("sh")))
 
   /** MinHash+LSH near-dup pairs: 128 minhashes → `bands` bands of
     * 128/bands rows; docs agreeing on any band's slice are candidates;
@@ -647,10 +649,8 @@ object Dedup {
     * int64. */
   def decontaminateFuzzy(corpus: DataFrame, benchmark: DataFrame,
                          n: Int = 3, tau: Double = 0.8): DataFrame = {
-    val benchSh = spreadToCores(
-      benchmark.select(col("doc_id").as("bench_id"), col("text")))
-      .select(col("bench_id"),
-        GraftFunctions.shingleHash64(TextAnalysis.tokens(col("text")), n).as("sh"))
+    val benchSh = shingleHashes(benchmark, n)
+      .select(col("doc_id").as("bench_id"), col("sh"))
       .filter(size(col("sh")) > 0)
       .select(col("bench_id"), size(col("sh")).as("nb"), explode(col("sh")).as("s"))
     val hits = shingleHashes(corpus, n)

@@ -2175,15 +2175,20 @@ object TextAnalysis {
     * could never match) keeps all its rows via try_element_at's null,
     * identical to the join's null salt_bound. Bounds cardinality is
     * the stratum-key cardinality (quota buckets / sources / langs) —
-    * the same bounded-literal class as the sourceOverlap totals. */
+    * the same bounded-literal class as the sourceOverlap totals. A
+    * null-key bound row is dropped before the fold: a map literal
+    * rejects a null key, and the join it replaces never matched one,
+    * so null-key rows keep all their rows either way. */
   private def saltBoundFilter(bounds: Array[org.apache.spark.sql.Row],
-                              key: Column): Column =
-    if (bounds.isEmpty) lit(true)
+                              key: Column): Column = {
+    val keyed = bounds.filterNot(_.isNullAt(0))
+    if (keyed.isEmpty) lit(true)
     else {
-      val m = map(bounds.flatMap(r =>
+      val m = map(keyed.flatMap(r =>
         Seq(lit(r.get(0)), lit(r.getLong(1)))).toSeq: _*)
       try_element_at(m, key).isNull || col("sample_key") < try_element_at(m, key)
     }
+  }
 
   /** (doc_id, bucket, mean_nll) under `thresholds` — [[mixByQuality]]'s
     * scoring+bucketing stage, shared with its whole-window test oracle. */

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{floor, lit, round}
 
 package object operators {
@@ -98,13 +98,34 @@ package object operators {
     * trivially cheap at that size), and a frame with UNKNOWN stats
     * (e.g. an RDD-backed LogicalRDD reporting Long.MaxValue) is
     * treated as large and passes through — callers feeding non-file
-    * sources to quadratic kernels should pre-partition explicitly. */
-  def spreadToCores(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    * sources to quadratic kernels should pre-partition explicitly.
+    *
+    * Fence contract: a repartitioned result is [[fence]]d, so per-row
+    * work written after the call runs after the exchange, on every
+    * core. Catalyst would otherwise push a later Filter below the
+    * repartition, into the one-split scan task the spread exists to
+    * escape. A filter meant for the scan (parquet pushdown, partition
+    * pruning) goes BEFORE the call, as [[Analytics.pricingSummary]]
+    * does. A large input passes through unfenced: its scan is already
+    * wide, and a later filter may still reach it. */
+  def spreadToCores(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val par = spark.sparkContext.defaultParallelism
     val maxPartitionBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estBytes < BigInt(par) * maxPartitionBytes) df.repartition(par) else df
+    if (estBytes < BigInt(par) * maxPartitionBytes) fence(df.repartition(par)) else df
   }
+
+  /** `df` behind an optimizer fence: no Filter written on the result is
+    * pushed into `df`'s plan, and no Filter over one of `df`'s computed
+    * columns is rewritten to recompute that column's expression (a
+    * FilterExec has no common-subexpression elimination, so a filter
+    * with k conjuncts over an aliased kernel would run the kernel k
+    * times per row). Column pruning still reaches the scan. The fence
+    * is a logical node only: it plans to `df`'s own physical plan, with
+    * no operator, exchange or materialization of its own. Use it after
+    * projecting an expensive per-row kernel that later filters read. */
+  def fence(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graftbridge.Bridge.fence(df)
 }

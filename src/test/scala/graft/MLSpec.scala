@@ -51,6 +51,29 @@ class MLSpec extends AnyFunSuite {
     }
   }
 
+  test("walk-forward cut points from one sketch pass equal the per-fraction thresholds") {
+    for (k <- Seq(1, 3, 5)) {
+      val fracs = (1 to k + 1).map(i => i.toDouble / (k + 1))
+      assert(TemporalSplit.thresholdsAt(frame, "ts", fracs) ==
+        fracs.map(f => TemporalSplit.thresholdAt(frame, "ts", f)), s"k=$k")
+    }
+  }
+
+  test("one-pass regression metrics are bit-identical to RegressionEvaluator") {
+    import org.apache.spark.ml.evaluation.RegressionEvaluator
+    import org.apache.spark.ml.regression.LinearRegression
+    val (train, test) = splitPair
+    val pred = new LinearRegression().setMaxIter(20).fit(train).transform(test)
+    val ev = new RegressionEvaluator()
+    val got = Models.regressionMetrics(pred)
+    assert(got.keySet == Set("mse", "rmse", "mae", "r2"))
+    got.foreach { case (m, v) =>
+      val want = ev.setMetricName(m).evaluate(pred)
+      assert(java.lang.Double.doubleToRawLongBits(v) ==
+        java.lang.Double.doubleToRawLongBits(want), s"$m: $v != $want")
+    }
+  }
+
   test("walk-forward CV metrics: a mean and std per regression metric") {
     import graft.ml.Inference
     import graft.operators.TimeSeries

@@ -405,6 +405,21 @@ class TextAnalysisSpec extends AnyFunSuite {
     })
   }
 
+  test("stratifiedSample keeps every row of a null source over quota") {
+    import spark.implicits._
+    // 5 null-source rows and 5 'a' rows at quota 2: both strata reach
+    // the quota, so the bounds carry a null-key row. The literal fold
+    // must drop it (a map literal rejects a null key) and, as the join
+    // it replaced did, keep the null stratum's rows for the rank window
+    val d = (1L to 10L).map(i => (i, if (i <= 5) null else "a")).toDF("doc_id", "source")
+    val refined = TextAnalysis.stratifiedSample(d, 2)
+      .collect().map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2))).toSeq.sorted
+    val exact = TextAnalysis.stratifiedSampleExact(d, 2)
+      .collect().map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2))).toSeq.sorted
+    assert(refined == exact)
+    assert(refined.count(_._2.isEmpty) == 2 && refined.count(_._2.contains("a")) == 2)
+  }
+
   test("threshold-refined sample is bit-identical to the whole-corpus rank") {
     import org.apache.spark.sql.functions.col
     // both test tables, both a tiny and an over-quota perSource: the
