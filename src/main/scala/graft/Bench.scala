@@ -1,6 +1,9 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.monitoring.PerformanceTracker
 
@@ -236,6 +239,21 @@ object Bench {
     (alloc, cutoff)
   }
 
+  /** `body`, or `default` when it fails — with the reason on stderr,
+    * so a substituted value is never silent. */
+  private def orWarn[T](what: String, default: T)(body: => T): T =
+    try body catch { case NonFatal(e) =>
+      System.err.println(s"[bench] $what: $e")
+      default
+    }
+
+  /** The 1/5/15-minute load averages; empty when unreadable. */
+  private def loadavg(): Seq[String] =
+    orWarn("/proc/loadavg unreadable", Seq.empty[String]) {
+      val f = scala.io.Source.fromFile("/proc/loadavg")
+      try f.mkString.trim.split("\\s+").take(3).toSeq finally f.close()
+    }
+
   /** Key under which a slope window's WALL-TIME maps publish (the
     * ratio maps AND the raw per-query seconds): a CONVICTED window
     * (sustained sentinel contention, or suite-level load) renames the
@@ -273,51 +291,16 @@ object Bench {
     // threshold), but the artifact's load.pre_1m then distinguishes
     // "arm disabled, /proc/loadavg unreadable" from "genuinely idle
     // box" — a 0.0 fallback conflated the two.
-    val preLoad1m: Double = try {
-      val f = scala.io.Source.fromFile("/proc/loadavg")
-      try f.mkString.trim.split("\\s+")(0).toDouble finally f.close()
-    } catch { case _: Throwable => -1.0 }
+    val preLoad1m: Double = loadavg().headOption.fold(-1.0)(_.toDouble)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // required for TIMESTAMP(NANOS) events.parquet (see GraftSession)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(spark)
+    val spark = GraftSession.get()
     val tracker = PerformanceTracker.install(spark)
-
-    // bus-quiescence wait: give the FIRST event after `floor` a longer
-    // window (the async bus can lag behind the returned action by tens
-    // of ms under load — the pre-round-4 wait allowed 100 ms), then
-    // drain until no further event arrives for `idleMs`. Bounded by
-    // `maxMs` so a wedged bus cannot hang the bench. Normal case: one
-    // first-event poll plus one ~8 ms idle check.
-    def quiesce(floor: Int, idleMs: Long = 8,
-                firstMs: Long = 150, maxMs: Long = 500): Unit = {
-      val deadline = System.nanoTime() + maxMs * 1000000L
-      val firstDeadline = System.nanoTime() + firstMs * 1000000L
-      while (tracker.recorded.size == floor && System.nanoTime() < firstDeadline)
-        Thread.sleep(2)
-      var last = tracker.recorded.size
-      var idleSince = System.nanoTime()
-      while (System.nanoTime() < deadline &&
-             System.nanoTime() - idleSince < idleMs * 1000000L) {
-        Thread.sleep(2)
-        val cur = tracker.recorded.size
-        if (cur != last) { last = cur; idleSince = System.nanoTime() }
-      }
-    }
 
     // warmup: JIT + codegen + shuffle machinery on the smallest SF;
     // drain its listener events so they are not attributed to the
     // alphabetically-first query's delta
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    quiesce(floor = 0)
+    orWarn("warmup failed", 0L)(SparkEntry.entry(spark).count())
+    Bridge.drainListenerBus(spark)
 
     // CHECKSUM ACTION: graft.Checksum.fullEval — xxhash64 over every
     // output column + a terminal BIT_XOR aggregate (the r13
@@ -341,18 +324,20 @@ object Bench {
         if (name.nonEmpty && breakKey.contains(name))
           sys.error(s"bench break hook fired for $name")
         Checksum.fullEval(fn(spark, dir)); true
-      } catch { case _: Throwable => false }
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] ${if (name.isEmpty) "a sentinel or repass run" else name} failed: $e")
+        false
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       // drop operator-internal caches so no query's footprint leaks
       // into the next measurement (the shared-session pollution fix)
       graft.operators.Caches.releaseAll()
-      // the listener bus is async: wait until it goes QUIET (no new
-      // event for an idle window), not merely until ONE event lands —
-      // eager queries fire several actions and waiting for the first
-      // would undercount exec/shuffle for the rest and misattribute
-      // the stragglers to the NEXT query's delta. Outside the timed
-      // region; bounded so a wedged bus cannot hang the bench.
-      quiesce(floor = before)
+      // the listener bus is async: drain it so every action this run
+      // fired (eager queries fire several) has posted its SQL
+      // execution end to the tracker before the delta is read, and no
+      // straggler lands in the NEXT query's delta. Outside the timed
+      // region.
+      Bridge.drainListenerBus(spark)
       val runOps = tracker.recorded.drop(before).filterNot(_.failed)
       val exec = runOps.map(_.durationMs).sum / 1e3
       // total shuffle the run caused, across EVERY action it fired
@@ -439,11 +424,7 @@ object Bench {
     //     extra timed runs, so a transient stall that survived three
     //     interleaved passes still gets two more chances to recover.
     val cpusAvail = Runtime.getRuntime.availableProcessors
-    def loadavgJ(): String = try {
-      val f = scala.io.Source.fromFile("/proc/loadavg")
-      val s = try f.mkString.trim.split("\\s+") finally f.close()
-      s"[${s(0)},${s(1)},${s(2)}]"
-    } catch { case _: Throwable => "[]" }
+    def loadavgJ(): String = loadavg().mkString("[", ",", "]")
     // the sentinel is a DEDICATED fixed query, deliberately NOT a
     // suite member: re-timing a suite query at every checkpoint (plus
     // the warmups below) would leave its pass-0 sample warm and
@@ -491,32 +472,33 @@ object Bench {
     // the r9 phantom, Spark-measured exec inflated WITH wall
     // (q_quality_missing 2.57 wall / 2.44 exec vs a 0.48 quiet
     // reality), because starved tasks run slowly rather than waiting.
-    def readQueryBaseline(path: String): Map[String, Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8")
-      import org.json4s._
-      val parsed = org.json4s.jackson.JsonMethods.parse(txt)
-      // only comparable baselines: a detail line from a DIFFERENT SF
-      // (a stray subset artifact, an sf0.01 iteration file) would make
-      // every larger-SF query "exceed 2x prior" and mis-trigger the
-      // repass budget. Compare NORMALIZED paths — a trailing slash or
-      // ./-relative spelling of the same dir must not silently drop
-      // the baseline and blind arm (b)
-      def normPath(s: String): String =
-        java.nio.file.Paths.get(s).normalize.toString.replaceAll("/+$", "")
-      val sameSf = (parsed \ "sf") match {
-        case JString(s) => normPath(s) == normPath(sfDir)
-        case _          => false
+    def readQueryBaseline(path: String): Map[String, Double] =
+      orWarn(s"no per-query baseline from $path", Map.empty[String, Double]) {
+        val txt = new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(path)), "UTF-8")
+        import org.json4s._
+        val parsed = org.json4s.jackson.JsonMethods.parse(txt)
+        // only comparable baselines: a detail line from a DIFFERENT SF
+        // (a stray subset artifact, an sf0.01 iteration file) would make
+        // every larger-SF query "exceed 2x prior" and mis-trigger the
+        // repass budget. Compare NORMALIZED paths — a trailing slash or
+        // ./-relative spelling of the same dir must not silently drop
+        // the baseline and blind arm (b)
+        def normPath(s: String): String =
+          java.nio.file.Paths.get(s).normalize.toString.replaceAll("/+$", "")
+        val sameSf = (parsed \ "sf") match {
+          case JString(s) => normPath(s) == normPath(sfDir)
+          case _          => false
+        }
+        if (!sameSf) Map.empty
+        else (parsed \ "queries") match {
+          case JObject(fs) => fs.collect {
+            case (k, JDouble(v)) => k -> v
+            case (k, JInt(v))    => k -> v.toDouble
+          }.toMap
+          case _ => Map.empty
+        }
       }
-      if (!sameSf) Map.empty
-      else (parsed \ "queries") match {
-        case JObject(fs) => fs.collect {
-          case (k, JDouble(v)) => k -> v
-          case (k, JInt(v))    => k -> v.toDouble
-        }.toMap
-        case _ => Map.empty
-      }
-    } catch { case _: Throwable => Map.empty }
     val prevDetail = readQueryBaseline(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "bench_detail.json"))
     val quietBase = readQueryBaseline(
@@ -806,7 +788,7 @@ object Bench {
     // upper-step ratios (10x-synthetic -> 100x-synthetic)
     var slope2Times = Map.empty[String, Double]
     var slope2Bytes = Map.empty[String, Long]
-    val slope2 = (try {
+    val slope2 = orWarn("slope2 probe omitted", Option.empty[String]) {
       // documents family (token-bijective copies) + events family
       // (user-offset copies): the scaled dir carries BOTH tables, so
       // the windowed/sessionized/keyed-dedup 100 TB claims get their
@@ -902,7 +884,7 @@ object Bench {
           s""""${ratioKey("slope2_ratios", s2Conv)}":$ratios,""" +
           s""""slope2_shuffle_ratios":$sratios""" + loadJ)
       }
-    } catch { case _: Throwable => None }).getOrElse("")
+    }.getOrElse("")
 
     // THIRD-decade slope probe: factor=100 ScaledCorpus (~500k docs /
     // 10M events at sf0.1) for the heaviest representative of each
@@ -921,7 +903,7 @@ object Bench {
     // generation is one-time and marker-cached. Disable with
     // SPARK_GRAFT_SLOPE3=0; override the dir with
     // SPARK_GRAFT_SLOPE3=<dir>.
-    val slope3 = (try {
+    val slope3 = orWarn("slope3 probe omitted", Option.empty[String]) {
       // r19 (the r18 verdict's item 8): q_dsir_select and q_ann_pq
       // join the 100x instrument so their decade claims regenerate
       // every round instead of living as BASELINE prose; q_semdedup
@@ -987,17 +969,17 @@ object Bench {
         // per-row memory and the quadratic-work hot spot, the exact
         // quantity the k ≈ √N sizing rule bounds. Byte-free and
         // load-independent, so it never renames under conviction.
-        val semJ = try {
+        val semJ = orWarn("slope3_semdedup_clusters omitted", "") {
           val (n, mx, cp) = graft.operators.Similarity.semDedupClusterStats(
             graft.sources.Tables.embeddings(spark, hugeDir))
           s""","slope3_semdedup_clusters":{"n":$n,"max":$mx,"cand_pairs":$cp}"""
-        } catch { case _: Throwable => "" }
+        }
         Some(s""","slope3_sf":"$hugeDir","slope3_factor":100,""" +
           s""""${ratioKey("slope3_queries", s3Conv)}":$qsJ,""" +
           s""""${ratioKey("slope3_ratios", s3Conv)}":$ratios,""" +
           s""""slope3_shuffle_ratios":$sratios""" + stepJ + semJ + loadJ)
       }
-    } catch { case _: Throwable => None }).getOrElse("")
+    }.getOrElse("")
 
     // LSH bucket-population probes: a skew regression in band/RHP
     // bucketing (one hot bucket -> quadratic candidate blowup) shows
@@ -1008,10 +990,10 @@ object Bench {
       // each probe fails INDEPENDENTLY (r18 review fix: one shared
       // try made a failure in any probe erase the others' telemetry)
       def probe(name: String)(f: => (Long, Long, Long)): String =
-        try {
+        orWarn(s"lsh_buckets.$name omitted", "") {
           val (n, mx, cp) = f
           s""""$name":{"n":$n,"max":$mx,"cand_pairs":$cp}"""
-        } catch { case _: Throwable => "" }
+        }
       val blocks = Seq(
         probe("minhash") {
           val m = Dedup.minhashBucketStats(Tables.documents(spark, sfDir)).collect()(0)
@@ -1035,11 +1017,11 @@ object Bench {
     // from the JSON): incidents, buckets touched, pre-filter equi-join
     // rows, hottest bucket. Computed from the bucket histograms, never
     // by running the join.
-    val rjs = try {
+    val rjs = orWarn("range_join_stats omitted", "") {
       val r = graft.operators.TimeSeries
         .rangeJoinStats(graft.sources.Tables.events(spark, sfDir)).collect()(0)
       s""","range_join_stats":{"n_incidents":${r.getLong(0)},"n_buckets":${r.getLong(1)},"cand_rows":${r.getLong(2)},"max_bucket_cand":${r.getLong(3)}}"""
-    } catch { case _: Throwable => "" }
+    }
     // Full per-query detail line, under its OWN metric name: a parser
     // keying on metric=="total" must never race two candidates (one of
     // them truncatable — BENCH_r04/r05 recorded `parsed: null` when
@@ -1096,20 +1078,26 @@ object Bench {
     // tens-of-KB line (BENCH_r04/r05 `parsed: null`; BENCH_r07 lost
     // half the per-query comparisons) — the file survives regardless
     // of stdout limits. Path override for sandboxed runs.
-    try {
-      // subset runs NEVER default to the repo-root file: the default
-      // path is the driver-owned artifact, and a SPARK_GRAFT_BENCH_ONLY
-      // iteration run silently clobbering it with a partial line (then
-      // swept in by `git add -A`) happened twice in round 9 — a
-      // filtered run without an explicit override lands in tmp instead
-      val detailPath = sys.env.get("SPARK_GRAFT_BENCH_DETAIL").getOrElse(
-        if (onlyEnv.isDefined)
+    //
+    // Subset runs and runs on fewer or more cores than the host has
+    // NEVER default to the repo-root files: those are the driver-owned
+    // whole-suite, whole-host artifacts, and a SPARK_GRAFT_BENCH_ONLY
+    // iteration run silently clobbering them with a partial line (then
+    // swept in by `git add -A`) happened twice in round 9 — such a run
+    // without an explicit override lands in tmp instead. A failed
+    // write leaves any earlier file in place, so it says so.
+    val redirect = onlyEnv.isDefined || GraftSession.cpus != cpusAvail
+    def writeArtifact(overrideEnv: String, name: String, line: String): Unit = {
+      val path = sys.env.getOrElse(overrideEnv,
+        if (redirect)
           java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-            "bench_detail_subset.json").toString
-        else "bench_detail.json")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath),
-        fullLine + "\n")
-    } catch { case _: Throwable => () }
+            s"${name}_subset.json").toString
+        else s"$name.json")
+      orWarn(s"$path not written (any earlier copy is stale)", ()) {
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(path), line + "\n")
+      }
+    }
+    writeArtifact("SPARK_GRAFT_BENCH_DETAIL", "bench_detail", fullLine)
     // THE "total" metric line: compact, printed LAST so a bounded tail
     // capture always carries it whole — the official wall-clock record.
     val slowest = results.sortBy(-_._3).take(5)
@@ -1121,7 +1109,7 @@ object Bench {
     // the map is ~5 KB — far under any sane tail bound — so carrying
     // it here costs nothing and makes the official record
     // self-contained (the detail line keeps the full telemetry).
-    val compactLine = s"""{"metric":"total","failed_count":$failedCount,"value":$total,"unit":"sec","cold_total":$coldTotal,"n_queries":${results.size},"queries":$qs,"failed":$failed,"retried_ok":$retriedJ,"bench_excluded":$excludedJ,"spill_bytes_total":$spillTotal,"slowest5":$slowest,"floor_drift":$floorDrift,"load_max_1m":$loadMax,"load_triggered":$loadEvident,"n_repassed":${repassed.size},"sf":"$sfDir"}"""
+    val compactLine = s"""{"metric":"total","failed_count":$failedCount,"value":$total,"unit":"sec","cold_total":$coldTotal,"n_queries":${results.size},"queries":$qs,"failed":$failed,"retried_ok":$retriedJ,"bench_excluded":$excludedJ,"spill_bytes_total":$spillTotal,"slowest5":$slowest,"floor_drift":$floorDrift,"load_max_1m":$loadMax,"load_triggered":$loadEvident,"n_repassed":${repassed.size},"cpus":${GraftSession.cpus},"sf":"$sfDir"}"""
     println(compactLine)
     // r21 (VERDICT r20 item 1): the driver's parse of the bench stdout
     // recorded `parsed: null` in ALL 20 rounds — the line reaches its
@@ -1129,18 +1117,9 @@ object Bench {
     // compact line (a) bare on stderr (build.sbt now passes forked run
     // output through unprefixed) and (b) to a small fixed-size file
     // next to bench_detail.json, so any reasonable parse succeeds.
-    // Subset runs redirect to tmp exactly like the detail file (same
-    // r9 clobber guard).
+    // Redirected to tmp exactly like the detail file.
     System.err.println(compactLine)
-    try {
-      val totalPath = sys.env.get("SPARK_GRAFT_BENCH_TOTAL").getOrElse(
-        if (onlyEnv.isDefined)
-          java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-            "bench_total_subset.json").toString
-        else "bench_total.json")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(totalPath),
-        compactLine + "\n")
-    } catch { case _: Throwable => () }
+    writeArtifact("SPARK_GRAFT_BENCH_TOTAL", "bench_total", compactLine)
     spark.stop()
   }
 }

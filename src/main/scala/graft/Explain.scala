@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected (or
   * all) SparkEntry queries. Used to keep the scale claims honest —
   * parquet filter pushdown (PushedFilters), column pruning
@@ -14,16 +12,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // same session tuning as Bench/Verify so the audited plans are the
-    // plans those surfaces actually execute (r20: the excluded-rule
-    // list changes plan shape)
-    GraftSession.tune(spark)
+    // the same session as Bench/Verify, so the audited plans are the
+    // plans those surfaces actually execute
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n===== $name =====")

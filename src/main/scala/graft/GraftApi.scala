@@ -292,7 +292,7 @@ object GraftApi {
               // (the streaming curationGate's pinned contract). The
               // join/agg/anti-join chain this replaces was +12 AQE
               // stage-jobs (~1.9 s) of the composed pipeline's
-              // gate-scale wall (CurateProbe r18 decomposition) while
+              // gate-scale wall (r18 decomposition of q_curate) while
               // filtering 4750 docs against 500. Past the cap the
               // join form stands — [[Dedup.fitsShingleBroadcast]] is
               // the SAME stats tier decontaminate itself uses, so

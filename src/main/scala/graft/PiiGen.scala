@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Generative regex-dialect probe for q_redact_pii and q_strip_markup
   * (the Spark half).
   *
@@ -65,12 +63,7 @@ object PiiGen {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val n = if (args.length > 1) args(1).toInt else 400
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val docs = corpus(n).toDF("doc_id", "text")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Scratch profiler: times a named query N times in one session to
   * separate fixed (planning/codegen) cost from marginal (data) cost.
@@ -11,16 +11,8 @@ object Profile {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // match Bench's session tuning (nanos flag, excluded rules) so
-    // profiled plans are the benched plans
-    GraftSession.tune(spark)
+    // Bench's session, so profiled plans are the benched plans
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // job-count + summed-execution listener: the floor decomposition
     // (wall − Σ job execution = driver-side gaps: Catalyst analysis,
@@ -63,7 +55,9 @@ object Profile {
           }
         }
       })
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    try SparkEntry.entry(spark).count() catch { case NonFatal(e) =>
+      System.err.println(s"[profile] warmup failed: $e")
+    }
     (1 to reps).foreach { i =>
       jobs.set(0); execNanos.set(0L)
       val t0 = System.nanoTime()

@@ -36,13 +36,7 @@ object ScaleGen {
     val srcDir = args(0)
     val factor = if (args.length > 1) args(1).toInt else 10
     val mode = if (args.length > 2) args(2) else "bijective"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val out = mode match {
       case "dup"       => dupDir(spark, srcDir, factor)
@@ -55,13 +49,17 @@ object ScaleGen {
     spark.stop()
   }
 
-  // collision-resistant path token + atomic marker-gated publication
-  // (r16, ADVICE) — shared with ScaledCorpus via sources.CorpusCache
-  private def pathToken(srcDir: String): String =
-    graft.sources.CorpusCache.pathToken(srcDir)
-  private def publish(out: String, markerName: String, stamp: String)
-                     (write: String => Unit): String =
-    graft.sources.CorpusCache.publish(out, markerName, stamp)(write)
+  /** The `kind` corpus dir under java.io.tmpdir, written by `write`
+    * unless already published: collision-resistant path token +
+    * atomic marker-gated publication (r16, ADVICE), shared with
+    * ScaledCorpus via sources.CorpusCache. */
+  private def publish(kind: String, srcDir: String, factor: Int)
+                     (write: String => Unit): String = {
+    import graft.sources.CorpusCache
+    val out = java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+      s"graft_${kind}_${factor}x_${CorpusCache.pathToken(srcDir)}").toString
+    CorpusCache.publish(out, s"_GRAFT_${kind.toUpperCase}", s"$srcDir factor=$factor v1")(write)
+  }
 
   /** Text-preserving duplicate corpus (marker-cached like
     * [[graft.sources.ScaledCorpus.dir]]): `factor` copies of
@@ -69,12 +67,8 @@ object ScaleGen {
     * n_chars verbatim — duplicate rate (factor-1)/factor by
     * construction. */
   def dupDir(spark: SparkSession, srcDir: String, factor: Int): String = {
-    import java.nio.file.Paths
     import org.apache.spark.sql.functions._
-    val out = Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft_dup_${factor}x_${pathToken(srcDir)}").toString
-    publish(out, "_GRAFT_DUP", s"$srcDir factor=$factor v1") { dir =>
+    publish("dup", srcDir, factor) { dir =>
       val docs = graft.sources.Tables.documents(spark, srcDir)
         .select("doc_id", "text", "lang", "source", "n_chars")
       (0 until factor).map { i =>
@@ -95,12 +89,8 @@ object ScaleGen {
     * decorrelate: per-vector work (assignment, scoring) is linear by
     * construction. vec_id offset i·10⁸ (mod-20 splits preserved). */
   def embedDir(spark: SparkSession, srcDir: String, factor: Int): String = {
-    import java.nio.file.Paths
     import org.apache.spark.sql.functions._
-    val out = Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft_embed_${factor}x_${pathToken(srcDir)}").toString
-    publish(out, "_GRAFT_EMBED", s"$srcDir factor=$factor v1") { dir =>
+    publish("embed", srcDir, factor) { dir =>
       val emb = graft.sources.Tables.embeddings(spark, srcDir)
         .select("vec_id", "embedding", "label")
       val dimRow = emb.agg(max(size(col("embedding")))).collect()(0)
@@ -132,12 +122,8 @@ object ScaleGen {
     * doc_ids offset i·10⁸; stopwords, whitespace structure, and
     * punctuation counts are untouched. */
   def crawlDir(spark: SparkSession, srcDir: String, factor: Int): String = {
-    import java.nio.file.Paths
     import org.apache.spark.sql.functions._
-    val out = Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft_crawl_${factor}x_${pathToken(srcDir)}").toString
-    publish(out, "_GRAFT_CRAWL", s"$srcDir factor=$factor v1") { dir =>
+    publish("crawl", srcDir, factor) { dir =>
       val stops = graft.operators.TextAnalysis.stopwords
       def b26(i: Int): String =
         if (i < 26) ('a' + i).toChar.toString

@@ -2,6 +2,7 @@ package graft.monitoring
 
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
@@ -31,7 +32,10 @@ class PerformanceTracker extends QueryExecutionListener {
     // has merged them synchronously, so the values are final
     val shuffle =
       try PlanMetrics.shuffleStats(qe.executedPlan)
-      catch { case _: Throwable => PlanMetrics.zero }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[tracker] $funcName shuffle stats recorded as zero: $e")
+        PlanMetrics.zero
+      }
     ops.add(Op(funcName, durationNs / 1e6, failed = false, shuffle))
   }
 

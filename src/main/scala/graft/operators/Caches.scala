@@ -5,6 +5,7 @@ import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
 import scala.util.DynamicVariable
+import scala.util.control.NonFatal
 
 /** Lifecycle registry for operator-internal persisted frames.
   *
@@ -106,11 +107,16 @@ object Caches {
     drop.foreach { case (_, df) =>
       // the guard and the unpersist fail independently: a plan-analysis
       // failure in sharedElsewhere must default to "not shared" (still
-      // unpersist — leaking the entry is the worse outcome), so only
-      // the unpersist itself gets the swallow-and-continue treatment
-      val shared = try sharedElsewhere(df) catch { case _: Throwable => false }
+      // unpersist — leaking the entry is the worse outcome); either
+      // failure is reported and the drain continues
+      val shared = try sharedElsewhere(df) catch { case NonFatal(e) =>
+        System.err.println(s"[caches] sharing check failed, unpersisting anyway: $e")
+        false
+      }
       if (!shared)
-        try df.unpersist(blocking = false) catch { case _: Throwable => () }
+        try df.unpersist(blocking = false) catch { case NonFatal(e) =>
+          System.err.println(s"[caches] unpersist failed, entry may leak: $e")
+        }
     }
   }
 

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Locks the driver contract's internal consistency: every oracle has
@@ -112,5 +114,18 @@ class ContractSpec extends AnyFunSuite {
         s"$file: $name's scaladoc must carry an `@note 100TB:` pointer " +
           "to its scale-path counterpart")
     }
+  }
+
+  test("only GraftSession builds a SparkSession") {
+    // one session configuration for every program: a second builder
+    // drifts (two did — their plans kept an optimizer rule every other
+    // surface excludes)
+    val builders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator.asScala.map(_.toString)
+      .filter(p => p.endsWith(".scala") && !p.endsWith("/graft/GraftSession.scala"))
+      .filter(p => new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(p)), "UTF-8").contains("SparkSession.builder("))
+      .toSeq
+    assert(builders.isEmpty, s"build the session through GraftSession.builder: $builders")
   }
 }

@@ -7,8 +7,13 @@ Loads each <outDir>/<name> parquet (written by graft.Verify), runs the
 matching SQL from <outDir>/oracle_sql.json in DuckDB against the raw
 testdata tables, and compares: schema (column names), row count, and a
 hash over all values with columns sorted by name and rows sorted.
+
+Every non-recursive CTE runs with DuckDB's MATERIALIZED hint
+(`materialized` below): results are unchanged, but without it DuckDB
+inlines a CTE at every reference, and the curation oracles' CTE chains
+(each CTE used by several later ones) then run out of memory at sf0.1.
 """
-import sys, json, glob, os
+import sys, json, glob, os, re
 import duckdb
 import pandas as pd
 import numpy as np
@@ -23,6 +28,46 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = df[c].astype("float64")
     df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
     return df
+
+CTE_HEAD = re.compile(
+    r"(?i)(\bWITH\s+(?:RECURSIVE\s+)?|\)\s*,\s*)"
+    r"([A-Za-z_]\w*)(\s*\([\w\s,]*\))?\s+AS\s+\(")
+
+
+def body_end(sql: str, open_at: int) -> int:
+    """Index of the parenthesis closing the one at `open_at`, skipping
+    quoted literals and identifiers."""
+    depth, i = 0, open_at
+    while i < len(sql):
+        c = sql[i]
+        if c in "'\"":
+            i = sql.index(c, i + 1)
+            while sql.startswith(c, i + 1):  # doubled quote escapes itself
+                i = sql.index(c, i + 2)
+        elif c == "(":
+            depth += 1
+        elif c == ")":
+            depth -= 1
+            if depth == 0:
+                return i
+        i += 1
+    raise ValueError("unbalanced parentheses in oracle SQL")
+
+
+def materialized(sql: str) -> str:
+    """The oracle SQL with DuckDB's MATERIALIZED hint on every CTE
+    whose body does not read from its own name (a recursive CTE cannot
+    take the hint)."""
+    out, last = [], 0
+    for m in CTE_HEAD.finditer(sql):
+        name, body_at = m.group(2), m.end() - 1
+        body = sql[body_at:body_end(sql, body_at) + 1]
+        if re.search(rf"(?i)\b(?:FROM|JOIN)\s+{re.escape(name)}\b", body):
+            continue
+        out.append(sql[last:body_at] + "MATERIALIZED ")
+        last = body_at
+    return "".join(out) + sql[last:]
+
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
@@ -40,7 +85,7 @@ def main():
             print(f"FAIL {name}: no spark output"); n_fail += 1; continue
         try:
             mine = pd.concat([pd.read_parquet(f) for f in sorted(files)])
-            ref = con.execute(oracles[name]).fetchdf()
+            ref = con.execute(materialized(oracles[name])).fetchdf()
         except Exception as e:
             print(f"FAIL {name}: {e}"); n_fail += 1; continue
         if sorted(mine.columns) != sorted(ref.columns):
