@@ -132,66 +132,14 @@ object Bench {
                                  maxRatio: Double): Boolean =
     wallRatio > maxRatio && byteRatio <= maxRatio * 0.6
 
-  /** Repass selection, pure so MonitoringSpec can pin the r12-ADVICE
-    * scenario as an executable fact: arm-flagged queries get their
-    * OWN 16-slot budget ON TOP of the unconditional refinement tail
-    * (bounded <=32 repasses). The r12 form re-sorted the union and
-    * re-capped at 16, which always collapsed to the refinement set —
-    * a flagged MID-PACK 2x blowout never got its repass. Within the
-    * arm budget, per-query arms (a)/(b) rank BEFORE the load arm (c):
-    * arm (c) flags every ok query on a loaded round, and letting it
-    * share one slowest-first pool would reproduce the collapse (the
-    * slowest-16 of everything IS the refinement tail) on exactly the
-    * loaded rounds where the mid-pack blowout matters most.
+  /** Repass selection, pure so MonitoringSpec can pin it. Arm-flagged
+    * queries rank by quiet-baseline deviation (steady / committed
+    * baseline; slowest first breaks ties): the per-query arms (a)/(b)
+    * first, then arm (d) — queries past 1.3x their baseline — then the
+    * load arm (c), which flags every ok query on a loaded round. The
+    * first 16 form the arm base.
     *
-    * r15 (the BENCH_r14 starvation fix): ranking inside the arm
-    * budget is by BASELINE DEVIATION (steady / committed quiet
-    * baseline), not absolute slowness, and queries past 1.3x their
-    * quiet baseline form their own arm (d) between (a)/(b) and (c).
-    * BENCH_r14 spent its entire arm budget re-timing the slowest
-    * queries — which were already at their quiet floors — while five
-    * mid-pack queries sat 1.4-1.8x above theirs (below the 2x arm
-    * (b) conviction bar) and went unrepassed. Deviation ranking gives
-    * the budget to the queries whose published minima would otherwise
-    * be the round's least trustworthy; slowest-first survives only as
-    * the tiebreak for queries with no baseline (deviation 0).
-    *
-    * (See also [[ratioKey]] — the companion publication rule for the
-    * slope windows' wall-time ratio maps.)
-    *
-    * r16 (the BENCH_r15 residual): arm (d) additionally holds a
-    * RESERVED budget past the base 16 — on a loaded round arms
-    * (a)/(b) can legitimately fill the base budget, which starved the
-    * deviation-flagged q_train_bpe (1.31x) in r15 even under
-    * deviation ranking.
-    *
-    * r18 (the BENCH_r17 starvation): the reserve was 8, and two
-    * consecutive burst-regime rounds overflowed it (14 then 20
-    * deviators left unrepassed as `arm_budget_exhausted...`) — the
-    * burst regimes push a third of the suite past 1.3x at once. The
-    * reserve is now [[ArmDReserve]] (32): every arm-(d) suspect gets
-    * its repass unless more than base+32 queries deviate at once (a
-    * box so loaded that arm (c) conviction already routes readers
-    * away from the times; the cap still protects the wall clock —
-    * worst case 64 repasses x 2 runs ≈ one extra suite pass). The
-    * budget ships in the artifact (`repass_budget`) so a non-empty
-    * `suspect_unrepassed` is adjudicable against it. */
-  private[graft] val ArmDReserve = 32
-  private[graft] def selectSuspects(armAB: Seq[String], armC: Seq[String],
-                                    refine: Seq[String],
-                                    steadyOf: Map[String, Double],
-                                    deviationOf: Map[String, Double] = Map.empty)
-      : Seq[String] = {
-    def rank(ks: Seq[String]): Seq[String] =
-      ks.distinct.sortBy(k => (-deviationOf.getOrElse(k, 0.0),
-        -steadyOf.getOrElse(k, 0.0), k))
-    val armD = deviationOf.collect { case (k, d) if d > 1.3 => k }.toSeq
-    val base = (rank(armAB) ++ rank(armD) ++ rank(armC)).distinct.take(16)
-    val reservedD = rank(armD).filterNot(base.contains).take(ArmDReserve)
-    (base ++ reservedD ++ refine).distinct
-  }
-
-  /** r19 (the BENCH_r18 residual, verdict item 6): repass RUNS are a
+    * r19 (the BENCH_r18 residual, verdict item 6): repass RUNS are a
     * budget allocated by DEVIATION RANK with a 1-run floor, replacing
     * the fixed-cardinality reserve whose overflow truncated the tail
     * on every burst-regime round (r17: 20 unrepassed; r18: 16 even at
@@ -609,7 +557,7 @@ object Bench {
     val refine = results0.filter(_._5).sortBy(-_._3).map(_._1).take(16)
     // arm-flagged queries get their OWN budget on top of the
     // unconditional refinement tail, ranked by quiet-baseline
-    // deviation with >1.3x deviators as arm (d) — see [[selectSuspects]]
+    // deviation with >1.3x deviators as arm (d) — see [[allocateRepasses]]
     val deviationOf = results0.collect {
       case (k, _, v, _, true, _) if baselineFor(k).isDefined =>
         k -> v / math.max(baselineFor(k).get, 1e-3)

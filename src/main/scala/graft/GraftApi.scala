@@ -162,7 +162,7 @@ object GraftApi {
     * an action. For composition into larger pipelines (and for a cache
     * scope you can release without touching other pipelines' caches)
     * use [[curatePlan]]. */
-  def curateCorpus(docs: DataFrame, perSource: Int = Int.MaxValue,
+  def curateCorpus(docs: DataFrame,
                    spanDedupK: Option[Int] = None,
                    benchmark: Option[DataFrame] = None,
                    decontamMinShared: Int = 3,
@@ -173,7 +173,7 @@ object GraftApi {
                    semanticDedupTau: Option[Double] = None,
                    semanticDedupK: Int = 16)
       : DataFrame =
-    curatePlan(docs, perSource, spanDedupK, benchmark, decontamMinShared,
+    curatePlan(docs, spanDedupK, benchmark, decontamMinShared,
       mix, blocklist, decontam, qualityModel, semanticDedupTau,
       semanticDedupK).frame
 
@@ -187,7 +187,7 @@ object GraftApi {
     * at FIRST ACCESS of `frame`, not at construction, so composing a
     * curation into a larger program has no surprise side effects at
     * build time and the caller decides when the resolution cost lands. */
-  def curatePlan(docs: DataFrame, perSource: Int = Int.MaxValue,
+  def curatePlan(docs: DataFrame,
                  spanDedupK: Option[Int] = None,
                  benchmark: Option[DataFrame] = None,
                  decontamMinShared: Int = 3,
@@ -300,20 +300,13 @@ object GraftApi {
               // is unchanged. The stats tier is an ESTIMATE: if the
               // actual distinct set still blows the cap (filter
               // selectivity under-estimated near the boundary), the
-              // bounded collect's own require fires — degrade to the
-              // join form, which is decontaminate's OWN fallback past
-              // the cap, instead of failing the whole plan (r18
-              // advice).
+              // bounded collect yields None — degrade to the join
+              // form, which is decontaminate's OWN fallback past the
+              // cap, instead of failing the whole plan (r18 advice).
               val scanLocal =
                 if (!Dedup.fitsShingleBroadcast(bench)) None
-                else
-                  try Some(afterExact.filter(Dedup.decontaminateKeepExpr(
-                    Dedup.benchmarkShingles(bench), minShared = minShared)))
-                  catch {
-                    case e: IllegalArgumentException
-                        if e.getMessage != null &&
-                          e.getMessage.contains("maxShingles") => None
-                  }
+                else Dedup.benchmarkShinglesWithin(bench).map(sh =>
+                  afterExact.filter(Dedup.decontaminateKeepExpr(sh, minShared = minShared)))
               ("decontaminate", scanLocal.getOrElse(
                 afterExact.join(
                   Dedup.decontaminate(afterExact, bench, minShared = minShared)
@@ -401,10 +394,7 @@ object GraftApi {
       val redacted = afterNearDup.select(col("doc_id"), col("source"),
         TextAnalysis.redactTextExpr(col("text")).as("text"))
       stages += ("redact_pii" -> redacted)
-      // legacy perSource parameter maps onto the generalized mix stage
-      val mixStage = mix.orElse(
-        if (perSource == Int.MaxValue) None else Some(MixStage.PerSource(perSource)))
-      val out = mixStage match {
+      val out = mix match {
         case None => redacted.orderBy("doc_id")
         case Some(m) =>
           // the sampling branch consumes `redacted` twice (rank + output)

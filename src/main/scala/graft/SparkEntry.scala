@@ -864,7 +864,7 @@ object SparkEntry {
   }
 
   /** Shared DuckDB restatement of the hashing-trick embedding
-    * ([[graft.functions.HashEmbed]]): token poly64 then the mix64
+    * ([[graft.functions.GraftFunctions.hashEmbed]]): token poly64 then the mix64
     * finalizer — two xor-shift rounds and two WRAPPING 64-bit
     * multiplies, emulated 32x32 split in HUGEINT (a direct 64x64
     * product overflows even HUGEINT):

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.graftbridge.Bridge
 
-/** SQL surface for the custom expressions: registers them as native
+/** SQL surface for the kernels: registers them as native
   * SQL functions so `spark.sql("SELECT fingerprint64(text) ...")`
   * works. Two paths:
   *
@@ -21,6 +21,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  import GraftFunctions._
 
   private def intArg(e: Expression, what: String): Int = e match {
     case Literal(v: Int, _) => v
@@ -34,68 +35,53 @@ object GraftExtensions {
       s"$what must be a long literal, got $other")
   }
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+  /** SQL function `name`, built through its [[GraftFunctions]] wrapper
+    * over the argument columns. */
+  private def fn(name: String, usage: String)(build: Seq[Expression] => Column)
+      : (String, ExpressionInfo, Seq[Expression] => Expression) =
+    (name, new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
+      (args: Seq[Expression]) => Bridge.expression(build(args)))
+  private def c(e: Expression): Column = Bridge.column(e)
 
   val functions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("fingerprint64",
-      info("fingerprint64", "fingerprint64(str) - 64-bit polynomial content fingerprint"),
-      (args: Seq[Expression]) => Fingerprint64(args.head)),
-    ("simhash64",
-      info("simhash64", "simhash64(array<string>) - 64-bit SimHash of a token array"),
-      (args: Seq[Expression]) => SimHash64(args.head)),
-    ("minhash_sig",
-      info("minhash_sig", "minhash_sig(array<string>, k) - k-element MinHash signature"),
-      (args: Seq[Expression]) => MinHashSig(args.head, intArg(args(1), "k"))),
-    ("hamming64",
-      info("hamming64", "hamming64(a, b) - hamming distance of two 64-bit hashes"),
-      (args: Seq[Expression]) => Hamming64(args.head, args(1))),
-    ("dot_fd",
-      info("dot_fd", "dot_fd(array<float>, array<float>) - double-precision dot product"),
-      (args: Seq[Expression]) => DotFD(args.head, args(1))),
-    ("shingle_hash64",
-      info("shingle_hash64", "shingle_hash64(array<string>, n) - distinct hashed n-gram shingles"),
-      (args: Seq[Expression]) => ShingleHash64(args.head, intArg(args(1), "n"))),
-    ("rhp_sig",
-      info("rhp_sig", "rhp_sig(array<float>, nPlanes, seed) - random-hyperplane LSH bucket"),
-      (args: Seq[Expression]) =>
-        RhpSig(args.head, intArg(args(1), "nPlanes"), longArg(args(2), "seed"))),
-    ("hash_embed",
-      info("hash_embed", "hash_embed(array<string>, dim) - L2-normalized feature-hashing embedding"),
-      (args: Seq[Expression]) => HashEmbed(args.head, intArg(args(1), "dim"))),
-    ("bpe_count",
-      info("bpe_count", "bpe_count(array<string>) - greedy-BPE token count under the default merge table"),
-      (args: Seq[Expression]) =>
-        BpeCount(args.head, graft.operators.TextAnalysis.defaultBpeMerges)),
-    ("bpe_tokens",
-      info("bpe_tokens", "bpe_tokens(array<string>) - greedy-BPE pieces under the default merge table"),
-      (args: Seq[Expression]) =>
-        BpeTokens(args.head, graft.operators.TextAnalysis.defaultBpeMerges)),
-    ("count_in_set",
-      info("count_in_set", "count_in_set(array<string>, 'a,b,c') - tokens matching a comma-separated literal set"),
-      (args: Seq[Expression]) => CountInSet(args.head, args(1) match {
+    fn("fingerprint64", "fingerprint64(str) - 64-bit polynomial content fingerprint")(
+      a => fingerprint64(c(a.head))),
+    fn("simhash64", "simhash64(array<string>) - 64-bit SimHash of a token array")(
+      a => simhash64(c(a.head))),
+    fn("minhash_sig", "minhash_sig(array<string>, k) - k-element MinHash signature")(
+      a => minhashSig(c(a.head), intArg(a(1), "k"))),
+    fn("hamming64", "hamming64(a, b) - hamming distance of two 64-bit hashes")(
+      a => hamming64(c(a.head), c(a(1)))),
+    fn("dot_fd", "dot_fd(array<float>, array<float>) - double-precision dot product")(
+      a => dotFD(c(a.head), c(a(1)))),
+    fn("shingle_hash64", "shingle_hash64(array<string>, n) - distinct hashed n-gram shingles")(
+      a => shingleHash64(c(a.head), intArg(a(1), "n"))),
+    fn("rhp_sig", "rhp_sig(array<float>, nPlanes, seed) - random-hyperplane LSH bucket")(
+      a => rhpSig(c(a.head), intArg(a(1), "nPlanes"), longArg(a(2), "seed"))),
+    fn("hash_embed", "hash_embed(array<string>, dim) - L2-normalized feature-hashing embedding")(
+      a => hashEmbed(c(a.head), intArg(a(1), "dim"))),
+    fn("bpe_count", "bpe_count(array<string>) - greedy-BPE token count under the default merge table")(
+      a => bpeCount(c(a.head), graft.operators.TextAnalysis.defaultBpeMerges)),
+    fn("bpe_tokens", "bpe_tokens(array<string>) - greedy-BPE pieces under the default merge table")(
+      a => bpeTokens(c(a.head), graft.operators.TextAnalysis.defaultBpeMerges)),
+    fn("count_in_set", "count_in_set(array<string>, 'a,b,c') - tokens matching a comma-separated literal set")(
+      a => countInSet(c(a.head), a(1) match {
         case Literal(s, _) if s != null => s.toString.split(",").toSeq
         case other => throw new IllegalArgumentException(
           s"count_in_set word list must be a string literal, got $other")
       })),
-    ("sorted_intersect_count",
-      info("sorted_intersect_count", "sorted_intersect_count(array<long>, array<long>) - |A ∩ B| of two sorted arrays (merge walk)"),
-      (args: Seq[Expression]) => SortedIntersectCount(args.head, args(1))),
-    ("normalize_ws",
-      info("normalize_ws", "normalize_ws(str) - lowercase, 0x20-trim, \\s+ runs collapsed (one byte scan)"),
-      (args: Seq[Expression]) => NormalizeWs(args.head)),
-    ("ws_tokens",
-      info("ws_tokens", "ws_tokens(str) - whitespace tokens of normalize_ws (one byte scan)"),
-      (args: Seq[Expression]) => WsTokens(args.head)),
-    ("count_punct",
-      info("count_punct", "count_punct(str) - code points outside ASCII alnum/\\s (regex-free)"),
-      (args: Seq[Expression]) => CountPunct(args.head)),
-    ("count_upper_ascii",
-      info("count_upper_ascii", "count_upper_ascii(str) - [A-Z] count (regex-free)"),
-      (args: Seq[Expression]) => CountUpperAscii(args.head)),
-    ("count_token_runs",
-      info("count_token_runs", "count_token_runs(str) - letter runs | digit runs | other code points (BPE-ish lexer count)"),
-      (args: Seq[Expression]) => CountTokenRuns(args.head)))
+    fn("sorted_intersect_count", "sorted_intersect_count(array<long>, array<long>) - |A ∩ B| of two sorted arrays (merge walk)")(
+      a => sortedIntersectCount(c(a.head), c(a(1)))),
+    fn("normalize_ws", "normalize_ws(str) - lowercase, 0x20-trim, \\s+ runs collapsed (one byte scan)")(
+      a => normalizeWs(c(a.head))),
+    fn("ws_tokens", "ws_tokens(str) - whitespace tokens of normalize_ws (one byte scan)")(
+      a => wsTokens(c(a.head))),
+    fn("count_punct", "count_punct(str) - code points outside ASCII alnum/\\s (regex-free)")(
+      a => countPunct(c(a.head))),
+    fn("count_upper_ascii", "count_upper_ascii(str) - [A-Z] count (regex-free)")(
+      a => countUpperAscii(c(a.head))),
+    fn("count_token_runs", "count_token_runs(str) - letter runs | digit runs | other code points (BPE-ish lexer count)")(
+      a => countTokenRuns(c(a.head))))
 
   /** Register every graft function on a live session. */
   def register(spark: SparkSession): Unit =

@@ -219,7 +219,7 @@ object TextHash {
     * count code points, neither is grapheme-aware — the established
     * parity class of lower/trim/length). A string shorter than nMin
     * code points emits nothing (the empty document embeds to zero).
-    * ([[graft.functions.CharNgrams]]) */
+    * ([[graft.functions.GraftFunctions.charNgrams]]) */
   def charNgrams(input: UTF8String, nMin: Int, nMax: Int): ArrayData = {
     val arr = input.getBytes
     val n = arr.length
@@ -499,8 +499,8 @@ object TextHash {
     * vector split into `codebooks.length` subspaces, each assigned
     * the ARGMIN-squared-L2 centroid of its subspace codebook (ties →
     * lowest code), returning one int code per subspace
-    * ([[graft.functions.PqEncode]]). The codebooks ride into
-    * generated code as a reference object (the IvfAssign shape), so
+    * ([[graft.functions.GraftFunctions.pqEncode]]). The codebooks ride into
+    * generated code as a reference object (the ivfAssign shape), so
     * encoding a corpus is a pure scan-local map. Distances are
     * left-to-right double sums of (v_i − c_i)² — the exact arithmetic
     * the DuckDB oracle restates over the codebook literals, so the
@@ -627,7 +627,7 @@ object TextHash {
   /** SemDeDup within-cluster drop set — one CLUSTER per row as
     * array<struct<vec_id, v float[], nrm double>>, returning the ids
     * that have a LOWER-id neighbor at rounded cosine ≥ tau
-    * ([[graft.functions.SemDedupDrops]]). Semantics bit-identical to
+    * ([[graft.functions.GraftFunctions.semDedupDrops]]). Semantics bit-identical to
     * the pair-join form it replaced (r18): cosine = dot/(nrm_i·nrm_j)
     * with the dot the same left-to-right float→double widened sum as
     * [[dotFD]], skipped when the norm product is not > 0 (zero-norm
@@ -740,7 +740,7 @@ object TextHash {
     * hashing-trick embedding uses (poly64 + mix64, restated in DuckDB
     * by the hashEmbedCte emulation, which is what makes the oracle
     * possible). Documents with fewer than two surviving tokens emit
-    * no features. ([[graft.functions.BigramBuckets]]) */
+    * no features. ([[graft.functions.GraftFunctions.bigramBuckets]]) */
   def bigramBuckets(toks: ArrayData, nBuckets: Int): ArrayData = {
     val n = toks.numElements()
     val clean = new scala.collection.mutable.ArrayBuffer[UTF8String](n)
@@ -772,12 +772,12 @@ object TextHash {
     * hashed vector; [[bigramBuckets]] is the bigram-only sibling).
     * One bucket id per surviving token plus one per adjacent pair,
     * bucket = (mix64(poly64(s)) >>> 1) mod nBuckets with s the token
-    * itself or "t1 t2" — the same poly64+mix64 family as HashEmbed,
+    * itself or "t1 t2" — the same poly64+mix64 family as hashEmbed,
     * so the DuckDB HUGEINT emulation restates it over the unioned
     * unigram+bigram feature strings. Empty tokens are dropped first;
     * a one-token document still emits its unigram feature (unlike the
     * bigram-only form, which needs two); an empty document emits
-    * nothing. ([[graft.functions.NgramBuckets]]) */
+    * nothing. ([[graft.functions.GraftFunctions.ngramBuckets]]) */
   def ngramBuckets(toks: ArrayData, nBuckets: Int): ArrayData = {
     val n = toks.numElements()
     val clean = new scala.collection.mutable.ArrayBuffer[UTF8String](n)
@@ -812,7 +812,7 @@ object TextHash {
     * n_tf: bigint>> over the token array in ONE row-local hash pass
     * (first-occurrence order, empty tokens skipped) — the scan-local
     * form of explode → groupBy(doc_id, token) → count
-    * ([[graft.functions.TokenTf]]): the (doc_id, token) wordcount is a
+    * ([[graft.functions.GraftFunctions.tokenTf]]): the (doc_id, token) wordcount is a
     * per-document statistic, so at corpus scale the exploded token
     * stream never needs to shuffle to compute it. Entry ORDER is
     * deterministic but not meaningful — every consumer re-keys or
@@ -844,7 +844,7 @@ object TextHash {
 
   /** Left-to-right double dot of a FLOAT vector against a trained
     * DOUBLE weight vector (each element widened before the multiply) —
-    * the linear-model scoring kernel ([[graft.functions.LogitDot]]).
+    * the linear-model scoring kernel ([[graft.functions.GraftFunctions.logitDot]]).
     * Same summation order as [[dotFD]] and the DuckDB oracle's
     * list_sum(list_transform(...)), so cross-engine doubles are
     * bit-identical. Clamps to the shorter side like dotFD. */

@@ -1,652 +1,231 @@
 package graft.functions
 
+import java.lang.invoke.{MethodHandle, MethodHandles}
+import java.lang.reflect.Modifier
+
+import scala.util.hashing.MurmurHash3
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions for the text/dedup kernels that the
+/** Catalyst expressions for the text, dedup and ANN kernels that the
   * built-in function set can't express (SURVEY.md §2H: fingerprint,
-  * simhash, minhash). Each implements `doGenCode` so it stays inside
-  * whole-stage codegen — the generated code calls the same static
-  * kernels in [[TextHash]] as the interpreted path.
+  * simhash, minhash, ...). Every kernel is a static method of
+  * [[TextHash]], and one expression calls it: [[UnaryKernel]], or
+  * [[BinaryKernel]] for two column inputs. Generated code calls the
+  * method directly, so each kernel stays inside whole-stage codegen;
+  * interpreted eval calls the same method through a method handle.
+  *
+  * Adding a kernel takes a `TextHash` method and one
+  * [[GraftFunctions]] wrapper line that names it.
   */
 
-/** 64-bit polynomial rolling-hash fingerprint of a string. */
-case class Fingerprint64(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    TextHash.poly64(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.poly64($c)")
-  override protected def withNewChildInternal(newChild: Expression): Fingerprint64 =
+/** A kernel's static description.
+  *
+  * @param name       the expression's node name, which also seeds its
+  *                   hash; lowercased, it names the expression in plans
+  *                   and SQL text
+  * @param method     the [[TextHash]] method the expression calls
+  * @param inputTypes the column inputs' types
+  * @param prep       how each constant reaches the method */
+case class Kernel(name: String, method: String, inputTypes: Seq[DataType],
+                  dataType: DataType, prep: Prep)
+
+/** How a kernel takes its constants: as given, or as an object built
+  * from each one once per expression instance. Case objects, so two
+  * calls with equal constants stay semantically equal (subexpression
+  * elimination shares them). */
+sealed abstract class Prep extends Serializable { def apply(const: Any): Any }
+object Prep {
+  case object AsIs extends Prep { def apply(const: Any): Any = const }
+  /** A word list as a `HashSet[UTF8String]` ([[TextHash.countInSet]]). */
+  case object WordSet extends Prep {
+    def apply(const: Any): Any = {
+      val words = const.asInstanceOf[Seq[String]]
+      val s = new java.util.HashSet[UTF8String](words.size * 2)
+      words.foreach(w => s.add(UTF8String.fromString(w)))
+      s
+    }
+  }
+  /** A sorted copy of a `long[]` ([[TextHash.countInLongSet]]). */
+  case object Sorted extends Prep {
+    def apply(const: Any): Any = {
+      val a = const.asInstanceOf[Array[Long]].clone(); java.util.Arrays.sort(a); a
+    }
+  }
+  /** A merge list as a [[BpeTable]] with its memo. */
+  case object Bpe extends Prep {
+    def apply(const: Any): Any = new BpeTable(const.asInstanceOf[Seq[(String, String)]])
+  }
+}
+
+/** What both kernel forms share. Plans print `name(inputs, consts)`;
+  * generated code is `graft.functions.TextHash.method(inputs, consts)`
+  * with Int/Long/Double constants inlined and every other constant
+  * passed as a reference object. Null handling is the parent form's:
+  * a null input gives null without calling the kernel. */
+trait KernelCall extends ExpectsInputTypes {
+  def kernel: Kernel
+  def consts: Seq[Any]
+
+  override def inputTypes: Seq[DataType] = kernel.inputTypes
+  override def dataType: DataType = kernel.dataType
+  override def nodeName: String = kernel.name
+  // Hashes as a case class `name(inputs, consts)` does, the form every
+  // kernel had as its own class, so that hash-ordered planner output
+  // (the order of common subexpressions in generated code) stays put.
+  override def hashCode(): Int = hash
+  @transient private lazy val hash: Int = {
+    val fields = children ++ consts
+    MurmurHash3.finalizeHash(fields.foldLeft(
+      MurmurHash3.mix(MurmurHash3.productSeed, kernel.name.hashCode))((h, f) =>
+      MurmurHash3.mix(h, f.##)), fields.size)
+  }
+  override protected def flatArguments: Iterator[Any] =
+    children.iterator ++ consts.iterator.flatMap {
+      case t: Iterable[_] => t
+      case c => Iterator.single(c)
+    }
+
+  @transient private lazy val args: Seq[Any] = consts.map(kernel.prep(_))
+
+  @transient private lazy val handle: MethodHandle = {
+    val m = Class.forName(KernelCall.Owner).getMethods
+      .find(m => m.getName == kernel.method && Modifier.isStatic(m.getModifiers))
+      .getOrElse(throw new NoSuchMethodException(s"${KernelCall.Owner}.${kernel.method}"))
+    MethodHandles.insertArguments(MethodHandles.publicLookup().unreflect(m),
+      children.size, args.map(_.asInstanceOf[AnyRef]): _*)
+  }
+
+  protected def call(inputs: Any*): Any =
+    handle.invokeWithArguments(inputs.map(_.asInstanceOf[AnyRef]): _*)
+
+  /** The kernel call over generated input terms. Registers the
+    * reference constants first, as the child code is generated after. */
+  protected def callCode(ctx: CodegenContext): Seq[String] => String = {
+    val cs = args.map {
+      case i: Int => i.toString
+      case l: Long => s"${l}L"
+      case d: Double => s"${d}D"
+      case o => ctx.addReferenceObj(kernel.method, o)
+    }
+    inputs => s"${KernelCall.Owner}.${kernel.method}(${(inputs ++ cs).mkString(", ")})"
+  }
+}
+object KernelCall { private val Owner = "graft.functions.TextHash" }
+
+/** A kernel over one column input, with constants after it. */
+case class UnaryKernel(kernel: Kernel, child: Expression, consts: Seq[Any])
+    extends UnaryExpression with KernelCall {
+  override def nullSafeEval(input: Any): Any = call(input)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val code = callCode(ctx)
+    defineCodeGen(ctx, ev, c => code(Seq(c)))
+  }
+  override protected def withNewChildInternal(newChild: Expression): UnaryKernel =
     copy(child = newChild)
 }
 
-/** 64-bit SimHash of a token array (frequency-weighted bit votes). */
-case class SimHash64(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    TextHash.simhash64(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.simhash64($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-/** MinHash signature (array<long> of length k) of a token array. */
-case class MinHashSig(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    TextHash.minhash(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.minhash($c, $k)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** Hamming distance between two 64-bit hashes. */
-case class Hamming64(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TextHash.hamming64(a.asInstanceOf[Long], b.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.TextHash.hamming64($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Hamming64 =
+/** A kernel over two column inputs of one type. */
+case class BinaryKernel(kernel: Kernel, left: Expression, right: Expression)
+    extends BinaryExpression with KernelCall {
+  override def consts: Seq[Any] = Nil
+  override def nullSafeEval(a: Any, b: Any): Any = call(a, b)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val code = callCode(ctx)
+    defineCodeGen(ctx, ev, (a, b) => code(Seq(a, b)))
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): BinaryKernel =
     copy(left = l, right = r)
 }
 
-/** Double-precision dot product of two float vectors. */
-case class DotFD(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TextHash.dotFD(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.TextHash.dotFD($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotFD =
-    copy(left = l, right = r)
-}
-
-/** Distinct hashed word n-gram shingles of a token array. */
-case class ShingleHash64(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    TextHash.shingleHash64(input.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.shingleHash64($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): ShingleHash64 =
-    copy(child = newChild)
-}
-
-/** Positional hashed word n-gram shingles (one hash per start
-  * position, duplicates kept — the span-dedup kernel). */
-case class ShingleHashPos(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    TextHash.shingleHashPos(input.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.shingleHashPos($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashPos =
-    copy(child = newChild)
-}
-
-/** SimHash64 over pre-hashed shingles (array<long>). */
-case class SimHash64L(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    TextHash.simhashL(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.simhashL($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64L =
-    copy(child = newChild)
-}
-
-/** MinHash signature over pre-hashed shingles (array<long>). */
-case class MinHashSigL(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    TextHash.minhashL(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.minhashL($c, $k)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigL =
-    copy(child = newChild)
-}
-
-/** Nearest-centroid id of a float vector (IVF coarse quantizer).
-  * The unit-normalized centroid matrix rides along as a reference
-  * object inside generated code, so assignment is a pure map — no
-  * join, no shuffle — over the corpus. */
-case class IvfAssign(child: Expression, cents: Array[Array[Float]])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    TextHash.ivfAssign(input.asInstanceOf[ArrayData], cents)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = ctx.addReferenceObj("ivfCents", cents, "float[][]")
-    defineCodeGen(ctx, ev, v => s"graft.functions.TextHash.ivfAssign($v, $c)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): IvfAssign =
-    copy(child = newChild)
-}
-
-/** Per-document token-entropy statistics — struct<n_tokens: bigint,
-  * n_distinct: bigint, clogc: double> from the token array in one
-  * row-local pass ([[TextHash.tokenEntropyStats]]). Replaces the
-  * explode → per-(doc, token) count → per-doc rollup TWO-SHUFFLE
-  * shape: entropy is a per-document statistic, so at corpus scale the
-  * tokenized corpus never needs to leave its scan. */
-case class TokenEntropyStats(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false),
-    StructField("clogc", DoubleType, nullable = false)))
-  override def nullSafeEval(input: Any): Any =
-    TextHash.tokenEntropyStats(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.tokenEntropyStats($c)")
-  override protected def withNewChildInternal(newChild: Expression): TokenEntropyStats =
-    copy(child = newChild)
-}
-
-/** Per-document term-frequency entries — array<struct<token, n_tf>>
-  * from the token array in one row-local pass ([[TextHash.tokenTf]]).
-  * Replaces the explode → groupBy(doc_id, token) → count corpus-sized
-  * shuffle: term frequency is a per-document statistic, so the
-  * tokenized corpus computes it inside its own scan (the
-  * [[TokenEntropyStats]] doctrine, keeping the entries for consumers
-  * that need the per-term rows — tf-idf, vocab rollups). */
-case class TokenTf(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("token", StringType, nullable = false),
-    StructField("n_tf", LongType, nullable = false))), containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    TextHash.tokenTf(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.tokenTf($c)")
-  override protected def withNewChildInternal(newChild: Expression): TokenTf =
-    copy(child = newChild)
-}
-
-/** Hashed-bigram feature buckets — array<bigint> of one bucket id per
-  * adjacent token pair ([[TextHash.bigramBuckets]]): the DSIR hashed
-  * n-gram construction, scan-local like [[TokenTf]] (the pair
-  * formation and hashing never leave the row; only B-bounded bucket
-  * ids flow on). */
-case class BigramBuckets(child: Expression, nBuckets: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    TextHash.bigramBuckets(input.asInstanceOf[ArrayData], nBuckets)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextHash.bigramBuckets($c, $nBuckets)")
-  override protected def withNewChildInternal(newChild: Expression): BigramBuckets =
-    copy(child = newChild)
-}
-
-/** Pooled hashed n-gram feature buckets — unigrams AND bigrams in one
-  * shared bucket space ([[TextHash.ngramBuckets]]): the full DSIR
-  * feature construction, scan-local like [[BigramBuckets]] (features
-  * are formed and hashed inside the row; only B-bounded bucket ids
-  * flow on). */
-case class NgramBuckets(child: Expression, nBuckets: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    TextHash.ngramBuckets(input.asInstanceOf[ArrayData], nBuckets)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextHash.ngramBuckets($c, $nBuckets)")
-  override protected def withNewChildInternal(newChild: Expression): NgramBuckets =
-    copy(child = newChild)
-}
-
-/** Product-quantization codes — one int per subspace, argmin-squared-
-  * L2 against a TRAINED codebook reference object
-  * ([[TextHash.pqEncode]]): encoding a 100 TB corpus is a scan-local
-  * codegen'd map, and the emitted codes are the ENTIRE index payload
-  * (m ints vs d floats — the memory-bounded ANN axis). */
-case class PqEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    TextHash.pqEncode(input.asInstanceOf[ArrayData], codebooks)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cb = ctx.addReferenceObj("pqCodebooks", codebooks, "float[][][]")
-    defineCodeGen(ctx, ev, v => s"graft.functions.TextHash.pqEncode($v, $cb)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PqEncode =
-    copy(child = newChild)
-}
-
-/** Character n-gram windows of a (pre-normalized) string
-  * ([[TextHash.charNgrams]]) — the fastText feature basis: code-point
-  * windows of nMin..nMax, formed row-locally so the char-level
-  * embedding costs one scan like the word-token form. */
-case class CharNgrams(child: Expression, nMin: Int, nMax: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    TextHash.charNgrams(input.asInstanceOf[UTF8String], nMin, nMax)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.charNgrams($c, $nMin, $nMax)")
-  override protected def withNewChildInternal(newChild: Expression): CharNgrams =
-    copy(child = newChild)
-}
-
-/** IVF-PQ index entry — `[cid, code_0..code_{m-1}]` in one scan-local
-  * codegen'd map ([[TextHash.ivfPqEncode]]): coarse inverted-list
-  * assignment plus residual PQ codes, the IVFADC construction (Jégou
-  * 2011 §III). Both trained matrices ride into generated code as
-  * reference objects; m+1 ints ARE the whole index payload. */
-case class IvfPqEncode(child: Expression, cents: Array[Array[Float]],
-                       codebooks: Array[Array[Array[Float]]])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    TextHash.ivfPqEncode(input.asInstanceOf[ArrayData], cents, codebooks)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ct = ctx.addReferenceObj("ivfPqCents", cents, "float[][]")
-    val cb = ctx.addReferenceObj("ivfPqCodebooks", codebooks, "float[][][]")
-    defineCodeGen(ctx, ev, v => s"graft.functions.TextHash.ivfPqEncode($v, $ct, $cb)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): IvfPqEncode =
-    copy(child = newChild)
-}
-
-/** SemDeDup within-cluster drop ids from ONE cluster's
-  * array<struct<vec_id, v, nrm>> row ([[TextHash.semDedupDrops]]) —
-  * the pairwise cosine loop at memory speed instead of through a
-  * per-pair join (r18; semantics bit-identical, see the kernel
-  * scaladoc). */
-case class SemDedupDrops(child: Expression, tau: Double)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("v", ArrayType(FloatType)),
-    StructField("nrm", DoubleType)))))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    TextHash.semDedupDrops(input.asInstanceOf[ArrayData], tau)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextHash.semDedupDrops($c, ${tau}D)")
-  override protected def withNewChildInternal(newChild: Expression): SemDedupDrops =
-    copy(child = newChild)
-}
-
-/** Linear-model score of a float vector against a TRAINED double
-  * weight vector (left-to-right widened dot — [[TextHash.logitDot]]).
-  * The weights ride into generated code as a reference object, so
-  * scoring a corpus is a pure scan-local map — no join, no shuffle —
-  * exactly the IvfAssign shape with a weight vector instead of a
-  * centroid matrix. */
-case class LogitDot(child: Expression, weights: Array[Double])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(input: Any): Any =
-    TextHash.logitDot(input.asInstanceOf[ArrayData], weights)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("logitWeights", weights, "double[]")
-    defineCodeGen(ctx, ev, v => s"graft.functions.TextHash.logitDot($v, $w)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): LogitDot =
-    copy(child = newChild)
-}
-
-/** Count of tokens present in a fixed word set (duplicates included).
-  * The set materializes once per executor (transient lazy) and rides
-  * into generated code as a reference object — the codegen'd form of
-  * `size(filter(toks, _.isInCollection(words)))`, whose HOF version
-  * is CodegenFallback. */
-case class CountInSet(child: Expression, words: Seq[String])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  @transient private lazy val set: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](words.size * 2)
-    words.foreach(w => s.add(UTF8String.fromString(w)))
-    s
-  }
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    TextHash.countInSet(input.asInstanceOf[ArrayData], set)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("wordSet", set, "java.util.HashSet")
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.countInSet($c, $ref)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): CountInSet =
-    copy(child = newChild)
-}
-
-/** Count of int64 values (shingle hashes) present in a fixed set,
-  * carried as a SORTED array and binary-searched per element — the
-  * [[CountInSet]] pattern for the streaming decontamination gate:
-  * the benchmark's shingle set rides into generated code as one
-  * reference object (8 bytes/shingle, shared per executor), so the
-  * "shares ≥ k shingles with the eval set" predicate is a pure
-  * scan-local codegen'd map — no join, no shuffle, stream-safe. */
-case class CountInLongSet(child: Expression, hashes: Array[Long])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
-  @transient private lazy val sorted: Array[Long] = {
-    val a = hashes.clone(); java.util.Arrays.sort(a); a
-  }
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    TextHash.countInLongSet(input.asInstanceOf[ArrayData], sorted)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("hashSet", sorted, "long[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.countInLongSet($c, $ref)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): CountInLongSet =
-    copy(child = newChild)
-}
-
-/** Greedy-BPE token count of a token array under a fixed merge table
-  * (public GPT-2 merges.txt semantics; see
-  * [[TextHash.bpeWord]]/tools/bpe_reference.py for the mirrored apply
-  * algorithm). The table+memo object rides into generated code as a
-  * reference object, so counting is a pure codegen'd map over the
-  * scan. */
-case class BpeCount(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  @transient private lazy val table = new BpeTable(merges)
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    TextHash.bpeCount(input.asInstanceOf[ArrayData], table)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val t = ctx.addReferenceObj("bpeTable", table, "graft.functions.BpeTable")
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.bpeCount($c, $t)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BpeCount =
-    copy(child = newChild)
-}
-
-/** Greedy-BPE TOKENIZATION under a fixed merge table — the pieces
-  * [[BpeCount]] counts, concatenated across the input tokens in
-  * document order ([[TextHash.bpeTokens]]; same kernel loop, same
-  * bounded per-table memo, array-of-symbols flavored). */
-case class BpeTokens(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  @transient private lazy val table = new BpeTable(merges)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    TextHash.bpeTokens(input.asInstanceOf[ArrayData], table)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val t = ctx.addReferenceObj("bpeTable", table, "graft.functions.BpeTable")
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.bpeTokens($c, $t)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BpeTokens =
-    copy(child = newChild)
-}
-
-/** Feature-hashing document embedding of a token array
-  * ([[TextHash.hashEmbed]]): model-free signed-bucket counts,
-  * L2-normalized — text in, `array<float>` out, directly consumable
-  * by the [[graft.operators.Similarity]] family. */
-case class HashEmbed(child: Expression, dim: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  require(dim > 0, s"embedding dim must be positive: $dim")
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    TextHash.hashEmbed(input.asInstanceOf[ArrayData], dim)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.hashEmbed($c, $dim)")
-  override protected def withNewChildInternal(newChild: Expression): HashEmbed =
-    copy(child = newChild)
-}
-
-/** Random-hyperplane LSH signature (int bucket) of a float vector. */
-case class RhpSig(child: Expression, nPlanes: Int, seed: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    TextHash.rhpSig(input.asInstanceOf[ArrayData], nPlanes, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.rhpSig($c, $nPlanes, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): RhpSig =
-    copy(child = newChild)
-}
-
-/** Canonical text normalization (lowercase, 0x20-trim, \s+ runs
-  * collapsed to one space) as one byte scan — bit-exact with
-  * `regexp_replace(lower(trim(text)), "\\s+", " ")` but with no regex
-  * engine in the scan (see [[TextHash.normalizeWs]]). */
-case class NormalizeWs(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    TextHash.normalizeWs(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.normalizeWs($c)")
-  override protected def withNewChildInternal(newChild: Expression): NormalizeWs =
-    copy(child = newChild)
-}
-
-/** Whitespace tokenization (split of [[NormalizeWs]] on single
-  * spaces, Spark split semantics — leading/trailing empties kept) as
-  * one byte scan (see [[TextHash.wsTokens]]). The tokenizer runs in
-  * the scan of every text operator — this removes the
-  * java.util.regex pass from that hot path. */
-case class WsTokens(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    TextHash.wsTokens(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.wsTokens($c)")
-  override protected def withNewChildInternal(newChild: Expression): WsTokens =
-    copy(child = newChild)
-}
-
-/** regexp_count(text, "[^a-zA-Z0-9\\s]") as one byte scan (see
-  * [[TextHash.countPunct]]) — the quality family's punctuation count
-  * without a regex pass per row. */
-case class CountPunct(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    TextHash.countPunct(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.countPunct($c)")
-  override protected def withNewChildInternal(newChild: Expression): CountPunct =
-    copy(child = newChild)
-}
-
-/** The PII IPv4 stage as ONE non-backtracking byte scan, byte-exact
-  * to TWO `regexp_replace(ipPat, "$1<IP>$2")` passes (see
-  * [[TextHash.redactIps]] for the equivalence argument). The r15
-  * measurement that motivated it: one ipPat regex pass over a 100 MB
-  * corpus cost 2.2 s of wall on 32 threads (~1.4 MB/s/core — Java's
-  * backtracking on the leading-alternation, 4×-bounded-quantifier
-  * pattern), and redactPii runs four such passes; the scan does the
-  * whole stage at memory speed. The DuckDB oracle keeps the regex
-  * restatement, so every Verify run cross-checks this kernel against
-  * an independent regex engine; KernelPropertySpec pins it against
-  * java.util.regex on adversarial generated text. */
-case class RedactIps(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    TextHash.redactIps(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.redactIps($c)")
-  override protected def withNewChildInternal(newChild: Expression): RedactIps =
-    copy(child = newChild)
-}
-
-/** [[RedactIps]] and [[CountIps]] as ONE evaluation returning
-  * struct<redacted: string, n: int> — redactPii projects both columns,
-  * and two independent single-output kernels each ran both ipPass
-  * scans (r16, ADVICE: the stage did ~2× its necessary work). The
-  * kernel is [[TextHash.redactCountIps]]; the single-output forms stay
-  * for callers (and pins) that need just one side. */
-case class RedactCountIps(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("redacted", StringType, nullable = false),
-    StructField("n", IntegerType, nullable = false)))
-  override def nullSafeEval(input: Any): Any =
-    TextHash.redactCountIps(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.redactCountIps($c)")
-  override protected def withNewChildInternal(newChild: Expression): RedactCountIps =
-    copy(child = newChild)
-}
-
-/** Total ipPat match count across both passes (= [[RedactIps]]'s
-  * replacement count) as the same single scan. */
-case class CountIps(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    TextHash.countIps(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.countIps($c)")
-  override protected def withNewChildInternal(newChild: Expression): CountIps =
-    copy(child = newChild)
-}
-
-/** regexp_count(text, "[A-Z]") as one byte scan (see
-  * [[TextHash.countUpperAscii]]). */
-case class CountUpperAscii(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    TextHash.countUpperAscii(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.countUpperAscii($c)")
-  override protected def withNewChildInternal(newChild: Expression): CountUpperAscii =
-    copy(child = newChild)
-}
-
-/** regexp_count(text, "[a-z]+|[0-9]+|[^a-z0-9 ]") — the BPE-ish
-  * lexer count — as one byte scan (see [[TextHash.countTokenRuns]]). */
-case class CountTokenRuns(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    TextHash.countTokenRuns(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.countTokenRuns($c)")
-  override protected def withNewChildInternal(newChild: Expression): CountTokenRuns =
-    copy(child = newChild)
-}
-
-/** |A ∩ B| of two SORTED long arrays (single merge walk, zero
-  * allocation — see [[TextHash.sortedIntersectCount]]). The verify
-  * stage of the exact-Jaccard candidate joins calls this once per
-  * candidate pair; array_intersect's hash-set build + intersection
-  * materialization was the per-pair hot spot there. */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TextHash.sortedIntersectCount(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.TextHash.sortedIntersectCount($a, $b)")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): SortedIntersectCount =
-    copy(left = l, right = r)
-}
-
-/** Column-API wrappers. */
+/** Column-API wrappers, one [[TextHash]] kernel each (see the kernel
+  * method for semantics). */
 object GraftFunctions {
-  private def e(c: Column): Expression = Bridge.expression(c)
-  def fingerprint64(c: Column): Column = Bridge.column(Fingerprint64(e(c)))
-  def simhash64(tokens: Column): Column = Bridge.column(SimHash64(e(tokens)))
-  def minhashSig(tokens: Column, k: Int): Column = Bridge.column(MinHashSig(e(tokens), k))
-  def hamming64(a: Column, b: Column): Column = Bridge.column(Hamming64(e(a), e(b)))
+  private val Str = StringType
+  private val Strs = ArrayType(StringType)
+  private val Longs = ArrayType(LongType)
+  private val Floats = ArrayType(FloatType)
+  private def out(t: DataType) = ArrayType(t, containsNull = false)
+  private def row(fields: (String, DataType)*) =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+
+  private def methodOf(name: String) = name.head.toLower +: name.tail
+
+  /** Kernel `name` (calling `TextHash.method`, by default `name` with a
+    * lowercase first letter) over one input of type `in`, with
+    * `consts` after it. */
+  private def unary(name: String, in: DataType, res: DataType, method: String = "",
+                    prep: Prep = Prep.AsIs)(c: Column, consts: Any*): Column =
+    Bridge.column(UnaryKernel(
+      Kernel(name, if (method.isEmpty) methodOf(name) else method, Seq(in), res, prep),
+      Bridge.expression(c), consts))
+  private def binary(name: String, in: DataType, res: DataType)(a: Column, b: Column): Column =
+    Bridge.column(BinaryKernel(Kernel(name, methodOf(name), Seq(in, in), res, Prep.AsIs),
+      Bridge.expression(a), Bridge.expression(b)))
+
+  def fingerprint64(c: Column): Column = unary("Fingerprint64", Str, LongType, "poly64")(c)
+  def simhash64(tokens: Column): Column = unary("SimHash64", Strs, LongType, "simhash64")(tokens)
+  def minhashSig(tokens: Column, k: Int): Column =
+    unary("MinHashSig", Strs, out(LongType), "minhash")(tokens, k)
+  def hamming64(a: Column, b: Column): Column = binary("Hamming64", LongType, IntegerType)(a, b)
   def rhpSig(vec: Column, nPlanes: Int, seed: Long): Column =
-    Bridge.column(RhpSig(e(vec), nPlanes, seed))
-  def dotFD(a: Column, b: Column): Column = Bridge.column(DotFD(e(a), e(b)))
-  def tokenEntropyStats(tokens: Column): Column =
-    Bridge.column(TokenEntropyStats(e(tokens)))
+    unary("RhpSig", Floats, IntegerType)(vec, nPlanes, seed)
+  def dotFD(a: Column, b: Column): Column = binary("DotFD", Floats, DoubleType)(a, b)
+  def tokenEntropyStats(tokens: Column): Column = unary("TokenEntropyStats", Strs,
+    row("n_tokens" -> LongType, "n_distinct" -> LongType, "clogc" -> DoubleType))(tokens)
   def logitDot(vec: Column, weights: Array[Double]): Column =
-    Bridge.column(LogitDot(e(vec), weights))
+    unary("LogitDot", Floats, DoubleType)(vec, weights)
   def ivfAssign(vec: Column, cents: Array[Array[Float]]): Column =
-    Bridge.column(IvfAssign(e(vec), cents))
+    unary("IvfAssign", Floats, IntegerType)(vec, cents)
   def shingleHash64(tokens: Column, n: Int): Column =
-    Bridge.column(ShingleHash64(e(tokens), n))
+    unary("ShingleHash64", Strs, out(LongType))(tokens, n)
   def shingleHashPos(tokens: Column, n: Int): Column =
-    Bridge.column(ShingleHashPos(e(tokens), n))
-  def simhash64L(hashes: Column): Column = Bridge.column(SimHash64L(e(hashes)))
+    unary("ShingleHashPos", Strs, out(LongType))(tokens, n)
+  def simhash64L(hashes: Column): Column = unary("SimHash64L", Longs, LongType, "simhashL")(hashes)
   def minhashSigL(hashes: Column, k: Int): Column =
-    Bridge.column(MinHashSigL(e(hashes), k))
+    unary("MinHashSigL", Longs, out(LongType), "minhashL")(hashes, k)
   def countInSet(tokens: Column, words: Seq[String]): Column =
-    Bridge.column(CountInSet(e(tokens), words))
+    unary("CountInSet", Strs, IntegerType, prep = Prep.WordSet)(tokens, words)
   def countInLongSet(hashes: Column, set: Array[Long]): Column =
-    Bridge.column(CountInLongSet(e(hashes), set))
+    unary("CountInLongSet", Longs, IntegerType, prep = Prep.Sorted)(hashes, set)
   def sortedIntersectCount(a: Column, b: Column): Column =
-    Bridge.column(SortedIntersectCount(e(a), e(b)))
-  def normalizeWs(text: Column): Column = Bridge.column(NormalizeWs(e(text)))
-  def wsTokens(text: Column): Column = Bridge.column(WsTokens(e(text)))
-  def tokenTf(toks: Column): Column = Bridge.column(TokenTf(e(toks)))
+    binary("SortedIntersectCount", Longs, IntegerType)(a, b)
+  def normalizeWs(text: Column): Column = unary("NormalizeWs", Str, StringType)(text)
+  def wsTokens(text: Column): Column = unary("WsTokens", Str, out(StringType))(text)
+  def tokenTf(toks: Column): Column =
+    unary("TokenTf", Strs, out(row("token" -> StringType, "n_tf" -> LongType)))(toks)
   def bigramBuckets(toks: Column, nBuckets: Int): Column =
-    Bridge.column(BigramBuckets(e(toks), nBuckets))
+    unary("BigramBuckets", Strs, out(LongType))(toks, nBuckets)
   def ngramBuckets(toks: Column, nBuckets: Int): Column =
-    Bridge.column(NgramBuckets(e(toks), nBuckets))
-  def semDedupDrops(cluster: Column, tau: Double): Column =
-    Bridge.column(SemDedupDrops(e(cluster), tau))
+    unary("NgramBuckets", Strs, out(LongType))(toks, nBuckets)
+  def semDedupDrops(cluster: Column, tau: Double): Column = unary("SemDedupDrops",
+    ArrayType(StructType(Seq(StructField("vec_id", LongType), StructField("v", Floats),
+      StructField("nrm", DoubleType)))), out(LongType))(cluster, tau)
   def pqEncode(v: Column, codebooks: Array[Array[Array[Float]]]): Column =
-    Bridge.column(PqEncode(e(v), codebooks))
+    unary("PqEncode", Floats, out(IntegerType))(v, codebooks)
   def ivfPqEncode(v: Column, cents: Array[Array[Float]],
                   codebooks: Array[Array[Array[Float]]]): Column =
-    Bridge.column(IvfPqEncode(e(v), cents, codebooks))
+    unary("IvfPqEncode", Floats, out(IntegerType))(v, cents, codebooks)
   def charNgrams(text: Column, nMin: Int, nMax: Int): Column =
-    Bridge.column(CharNgrams(e(text), nMin, nMax))
-  def countPunct(text: Column): Column = Bridge.column(CountPunct(e(text)))
-  def redactIps(text: Column): Column = Bridge.column(RedactIps(e(text)))
-  def countIps(text: Column): Column = Bridge.column(CountIps(e(text)))
-  def redactCountIps(text: Column): Column = Bridge.column(RedactCountIps(e(text)))
-  def countUpperAscii(text: Column): Column =
-    Bridge.column(CountUpperAscii(e(text)))
-  def countTokenRuns(text: Column): Column =
-    Bridge.column(CountTokenRuns(e(text)))
+    unary("CharNgrams", Str, out(StringType))(text, nMin, nMax)
+  def countPunct(text: Column): Column = unary("CountPunct", Str, IntegerType)(text)
+  def redactIps(text: Column): Column = unary("RedactIps", Str, StringType)(text)
+  def countIps(text: Column): Column = unary("CountIps", Str, IntegerType)(text)
+  def redactCountIps(text: Column): Column =
+    unary("RedactCountIps", Str, row("redacted" -> StringType, "n" -> IntegerType))(text)
+  def countUpperAscii(text: Column): Column = unary("CountUpperAscii", Str, IntegerType)(text)
+  def countTokenRuns(text: Column): Column = unary("CountTokenRuns", Str, IntegerType)(text)
   def bpeCount(tokens: Column, merges: Seq[(String, String)]): Column =
-    Bridge.column(BpeCount(e(tokens), merges))
+    unary("BpeCount", Strs, LongType, prep = Prep.Bpe)(tokens, merges)
   def bpeTokens(tokens: Column, merges: Seq[(String, String)]): Column =
-    Bridge.column(BpeTokens(e(tokens), merges))
-  def hashEmbed(tokens: Column, dim: Int): Column =
-    Bridge.column(HashEmbed(e(tokens), dim))
+    unary("BpeTokens", Strs, out(StringType), prep = Prep.Bpe)(tokens, merges)
+  def hashEmbed(tokens: Column, dim: Int): Column = {
+    require(dim > 0, s"embedding dim must be positive: $dim")
+    unary("HashEmbed", Strs, out(FloatType))(tokens, dim)
+  }
 }

@@ -12,7 +12,7 @@ import graft.functions.GraftFunctions
   * O(n²) pair space is never materialized. MinHash bands and SimHash
   * chunks are hash-shuffle keys; each bucket's pair expansion is local
   * to its partition. Shingles are carried as 8-byte hashes (codegen'd
-  * ShingleHash64 expression), never as strings, so bucket joins and
+  * shingleHash64 kernel), never as strings, so bucket joins and
   * set intersections run on longs; shingle sets that feed multiple
   * plan branches are persisted once instead of recomputed per branch.
   */
@@ -401,17 +401,25 @@ object Dedup {
     * as a long[]) enforces that contract instead of letting a corpus
     * mistakenly passed as `benchmark` OOM the driver. */
   def benchmarkShingles(benchmark: DataFrame, n: Int = 3,
-                        maxShingles: Long = DefaultMaxBroadcastShingles): Array[Long] = {
+                        maxShingles: Long = DefaultMaxBroadcastShingles): Array[Long] =
+    benchmarkShinglesWithin(benchmark, n, maxShingles).getOrElse(
+      throw new IllegalArgumentException(
+        s"benchmark shingle set exceeds maxShingles=$maxShingles — " +
+          "is the corpus being passed as the benchmark?"))
+
+  /** [[benchmarkShingles]] as one bounded collect that yields None
+    * past `maxShingles` distinct shingles, for callers with a
+    * fallback. */
+  def benchmarkShinglesWithin(benchmark: DataFrame, n: Int = 3,
+                              maxShingles: Long = DefaultMaxBroadcastShingles)
+      : Option[Array[Long]] = {
     val rows = spreadToCores(benchmark.select(col("text")))
       .select(explode(
         GraftFunctions.shingleHash64(TextAnalysis.tokens(col("text")), n)).as("s"))
       .distinct()
       .limit(math.min(maxShingles + 1, Int.MaxValue.toLong).toInt)
       .collect()
-    require(rows.length <= maxShingles,
-      s"benchmark shingle set exceeds maxShingles=$maxShingles — " +
-        "is the corpus being passed as the benchmark?")
-    rows.map(_.getLong(0))
+    if (rows.length > maxShingles) None else Some(rows.map(_.getLong(0)))
   }
 
   /** Scan-local keep predicate: true iff the row's text shares fewer

@@ -25,8 +25,8 @@ import graft.functions.GraftFunctions
   *     the same seeded full-batch GD as the quality classifier
   *     (deterministic to the bit; driver state = |langs|·(dim+1)
   *     doubles).
-  *  3. SCORE scan-locally: one [[graft.functions.HashEmbed]] per row,
-  *     one [[graft.functions.LogitDot]] per class against it, argmax
+  *  3. SCORE scan-locally: one [[graft.functions.GraftFunctions.hashEmbed]] per row,
+  *     one [[graft.functions.GraftFunctions.logitDot]] per class against it, argmax
   *     with ties to the alphabetically-first class (the heuristic's
   *     tie rule). No join, no shuffle — 100 TB embarrassingly
   *     parallel.
@@ -143,7 +143,7 @@ object LangIdModel {
     * tie discipline). Pure scan-local codegen'd projection: the
     * embedding is computed once per row as a non-cheap multi-consumer
     * alias (CollapseProject leaves it alone — the redactCountIps
-    * precedent), each class score is one LogitDot against it. */
+    * precedent), each class score is one logitDot against it. */
   def score(docs: DataFrame, model: Model, dim: Int = 64,
             charGrams: Boolean = false): DataFrame = {
     val scored = docs.select(col("doc_id"),

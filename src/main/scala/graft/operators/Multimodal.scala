@@ -696,7 +696,7 @@ object Multimodal {
     import frames.sparkSession.implicits._
     frames.map { f =>
       val n = f.pixels.length
-      // float elements: the ANN stack (Similarity via DotFD/RhpSig)
+      // float elements: the ANN stack (Similarity via dotFD/rhpSig)
       // consumes array<float> — a double array would be read wrongly
       val vec = Array.tabulate(dim) { d =>
         var acc = 0.0; var i = d

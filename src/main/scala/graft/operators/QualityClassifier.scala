@@ -28,7 +28,7 @@ import graft.functions.GraftFunctions
   *     The weight vector is dim+1 doubles — KBs — the only driver
   *     state.
   *  3. SCORE the corpus scan-locally: the weights ride into generated
-  *     code as a reference object ([[graft.functions.LogitDot]]), so
+  *     code as a reference object ([[graft.functions.GraftFunctions.logitDot]]), so
   *     inference is a pure codegen'd map — no join, no shuffle, 100 TB
   *     embarrassingly parallel.
   *

@@ -18,7 +18,7 @@ import graft.functions.GraftFunctions
 object Similarity {
 
   /** Left-to-right double-precision dot product of two float arrays —
-    * the codegen'd DotFD expression (the zip_with/aggregate HOF chain
+    * the codegen'd dotFD kernel (the zip_with/aggregate HOF chain
     * is CodegenFallback and ~10x slower on the hot path). */
   private def dot(a: Column, b: Column): Column = GraftFunctions.dotFD(a, b)
 
@@ -28,7 +28,7 @@ object Similarity {
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
 
   /** Model-free document embeddings via the hashing trick
-    * ([[graft.functions.HashEmbed]]): token multiset → signed-bucket
+    * ([[graft.functions.GraftFunctions.hashEmbed]]): token multiset → signed-bucket
     * counts → L2-normalized `array<float>`, emitted in this module's
     * (vec_id, embedding) shape so every similarity operator —
     * [[embedDedup]], [[embedDedupLsh]], [[annTopK]]/[[annLsh]]/
@@ -476,7 +476,7 @@ object Similarity {
     * Scale shape: assignment is the codegen'd scan-local `ivfAssign`
     * map; each cluster then resolves ROW-LOCALLY — one collect_list
     * regroup on cid and the codegen'd
-    * [[graft.functions.SemDedupDrops]] kernel runs the pairwise
+    * [[graft.functions.GraftFunctions.semDedupDrops]] kernel runs the pairwise
     * cosine loop over primitive arrays at memory speed. The r18 pair-
     * JOIN form (both sides partitioned on cid) was semantically
     * identical but paid ~100 ns of row materialization per candidate
@@ -728,7 +728,7 @@ object Similarity {
     * order-dependent). Top-k per query by (adist, cand_id).
     *
     * Scale shape: encoding is the scan-local codegen'd [[graft
-    * .functions.PqEncode]] map; the only corpus-sized rows in motion
+    * .functions.GraftFunctions.pqEncode]] map; the only corpus-sized rows in motion
     * are (sub, code, vec_id) ints through ONE broadcast join and one
     * (query, cand) rollup — vectors never shuffle, never broadcast.
     * Approximation contract: PQ ranks by quantized distance —
@@ -829,7 +829,7 @@ object Similarity {
     * — independent of corpus size; the INDEX stays m+1 ints/vector.
     *
     * Scale shape: encoding is ONE scan-local codegen'd map
-    * ([[graft.functions.IvfPqEncode]] — both trained matrices ride as
+    * ([[graft.functions.GraftFunctions.ivfPqEncode]] — both trained matrices ride as
     * reference objects); the only corpus-sized rows in motion are
     * (cid, sub, code, vec_id) ints through ONE broadcast join against
     * the per-(query, probed-list) LUT and one (query, cand) rollup;

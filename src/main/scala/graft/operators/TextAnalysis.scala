@@ -307,7 +307,7 @@ object TextAnalysis {
   }
 
   /** REAL tokenizer counts — greedy BPE under a merges.txt-format
-    * table ([[graft.functions.BpeCount]], a codegen'd scan-local
+    * table ([[graft.functions.GraftFunctions.bpeCount]], a codegen'd scan-local
     * projection; the whitespace proxy in [[tokenCount]] misprices
     * long/rare words exactly where training-data budgeting cares).
     * Parity with an independent Python implementation
@@ -325,7 +325,7 @@ object TextAnalysis {
     * per piece in document order: (doc_id, pos, piece). What the
     * training pipeline actually feeds a model after packing; counting
     * alone cannot drive an embedding lookup. The merge loop runs
-    * codegen'd inside the scan ([[graft.functions.BpeTokens]]), and
+    * codegen'd inside the scan ([[graft.functions.GraftFunctions.bpeTokens]]), and
     * the posexplode is a Generate over the scan-local array — no
     * shuffle except the presentation sort. BpeSpec pins: pieces
     * re-concatenate to each normalized word, per-doc piece count
@@ -1109,7 +1109,7 @@ object TextAnalysis {
   }
 
   /** [[packSequences]] budgeted in REAL model tokens: greedy BPE under
-    * a merges.txt-format table ([[graft.functions.BpeCount]], codegen'd
+    * a merges.txt-format table ([[graft.functions.GraftFunctions.bpeCount]], codegen'd
     * and scan-local, so the plan shape is identical to the whitespace
     * form — one window shuffle, the counter fused into the scan).
     * The pack invariants (assignment = cum_before div budget, offsets
@@ -1202,7 +1202,7 @@ object TextAnalysis {
 
   def redactPii(docs: DataFrame): DataFrame = {
     val t1 = regexp_replace(col("text"), emailPat, "<EMAIL>")
-    // the IP stage runs as graft.functions.RedactCountIps — ONE
+    // the IP stage runs as the redactCountIps kernel — ONE
     // non-backtracking byte scan byte-exact to the two regex passes
     // (r15: four ipPat regex passes were ~9 s of the 13.8 s 10x
     // corpus wall; the kernel runs the stage at memory speed), and
@@ -1373,7 +1373,7 @@ object TextAnalysis {
     * ranking raw doubles could disagree where rounded values tie.
     *
     * Scale shape (r17): term frequency is computed INSIDE the scan —
-    * the [[graft.functions.TokenTf]] kernel emits each document's
+    * the [[graft.functions.GraftFunctions.tokenTf]] kernel emits each document's
     * (token, n_tf) entries in one row-local hash pass, so the exploded
     * corpus token stream never shuffles into a wordcount (the old
     * form's corpus-sized (doc_id, token) exchange, gone). The tf
@@ -1593,7 +1593,7 @@ object TextAnalysis {
     * per doc tf-weighted. */
   def importanceWeights(docs: DataFrame, target: DataFrame): DataFrame = {
     // r17: both wordcounts and the score join consume the scan-local
-    // tf entries ([[docsTf]] / [[graft.functions.TokenTf]]) instead
+    // tf entries ([[docsTf]] / [[graft.functions.GraftFunctions.tokenTf]]) instead
     // of the exploded token stream — same exactness argument as
     // [[unigramScores]] (DECIMAL tf-weighted sums of the 6dp-rounded
     // llr are bit-identical to the per-occurrence sums).
@@ -1642,7 +1642,7 @@ object TextAnalysis {
     * rather than resample.
     *
     * Scale shape: pair formation and hashing are SCAN-LOCAL
-    * ([[graft.functions.BigramBuckets]] — text never leaves its row);
+    * ([[graft.functions.GraftFunctions.bigramBuckets]] — text never leaves its row);
     * everything that shuffles is B-BOUNDED (two bucket wordcounts and
     * a ≤B-row model merge — even better than the unigram form's
     * Zipf-bounded vocab, the model side is CONSTANT-size by
@@ -1764,7 +1764,7 @@ object TextAnalysis {
     * exponentiated weight) — the paper-complete composition the two
     * `importanceWeights*` forms feed into, closing the two gaps their
     * scaladocs record: features here POOL unigrams and bigrams into
-    * one shared `nBuckets` space ([[graft.functions.NgramBuckets]] —
+    * one shared `nBuckets` space ([[graft.functions.GraftFunctions.ngramBuckets]] —
     * the paper's construction; the ng sibling is bigrams-only), and
     * the output is the SELECTED sample, not the weight column.
     *
@@ -1823,7 +1823,7 @@ object TextAnalysis {
     * ([[bucketsByQuality]] → bucket window) pays that twice-computed
     * sort for nothing, so internal consumers take this form. */
   private[graft] def unigramScores(docs: DataFrame): DataFrame = {
-    // Deliberately the EXPLODED-token form, not the TokenTf-kernel
+    // Deliberately the EXPLODED-token form, not the tokenTf-kernel
     // form (r17 measured both): with the raw token stream the
     // planner's build-side choice broadcasts whichever side is small
     // — at gate SF that is the DOC side, which leaves the scoring
@@ -1860,7 +1860,7 @@ object TextAnalysis {
   }
 
   /** The corpus as scan-local (doc_id, token, n_tf) term-frequency
-    * entries ([[graft.functions.TokenTf]]) — empty tokens skipped,
+    * entries ([[graft.functions.GraftFunctions.tokenTf]]) — empty tokens skipped,
     * null text contributes nothing, exactly the rows of
     * explode → filter('' ) → groupBy(doc_id, token) → count without
     * the corpus-sized exchange that shape pays. */

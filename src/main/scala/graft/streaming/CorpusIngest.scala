@@ -248,7 +248,7 @@ object CorpusIngest {
     // optional MODEL quality gate (r16 — the batch pipeline's
     // qualityModel stage, streaming-safe by the same construction:
     // keepExpr is a pure scan-local projection whose trained weights
-    // ride inside the LogitDot expression; train the model on a BATCH
+    // ride inside the logitDot kernel call; train the model on a BATCH
     // corpus offline, gate the stream with it)
     val modeled = qualityModel match {
       case Some(m) =>

@@ -7,6 +7,17 @@ object TestSession {
   lazy val spark: SparkSession = GraftSession.builder(master = "local[4]", shufflePartitions = 4)
     .getOrCreate()
   val sfDir = "/root/testdata/sf0.001"
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
+
+  /** A fresh temp directory named `prefix`..., deleted with its
+    * contents when the test JVM exits. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(dir.toFile)
+    dir
+  }
 }
 
 class AnalyticsSpec extends AnyFunSuite {

@@ -18,7 +18,7 @@ class FormatsSpec extends AnyFunSuite {
     StructField("value", DoubleType)))
 
   test("CSV round-trips the events table under an explicit schema") {
-    val dir = Files.createTempDirectory("graft-csv").toString
+    val dir = tempDir("graft-csv").toString
     val ev = Tables.events(spark, sfDir)
       .select("event_id", "user_id", "event_type", "value")
     Formats.writeCsv(ev, dir)
@@ -35,7 +35,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("JSONL round-trips and quarantines malformed lines") {
-    val dir = Files.createTempDirectory("graft-jsonl").toString
+    val dir = tempDir("graft-jsonl").toString
     val ev = Tables.events(spark, sfDir).limit(100)
       .select("event_id", "user_id", "event_type", "value")
     Formats.writeJsonl(ev, dir)
@@ -50,7 +50,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("CSV reader quarantines rows that cannot be parsed into the schema") {
-    val dir = Files.createTempDirectory("graft-badcsv").toString
+    val dir = tempDir("graft-badcsv").toString
     Files.writeString(java.nio.file.Paths.get(dir, "data.csv"),
       "event_id,user_id,event_type,value\n" +
         "1,10,view,2.5\n" +
@@ -64,7 +64,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("quarantine caches are pinned: releaseAll() cannot break an in-flight split") {
-    val dir = Files.createTempDirectory("graft-pincsv").toString
+    val dir = tempDir("graft-pincsv").toString
     Files.writeString(java.nio.file.Paths.get(dir, "data.csv"),
       "event_id,user_id,event_type,value\n" +
         "1,10,view,2.5\n" +
@@ -83,7 +83,7 @@ class FormatsSpec extends AnyFunSuite {
   test("scoped quarantine release: one batch's handle leaves the other batch pinned") {
     import graft.operators.Caches
     def writeBatch(tag: String): String = {
-      val dir = Files.createTempDirectory(s"graft-scope$tag").toString
+      val dir = tempDir(s"graft-scope$tag").toString
       Files.writeString(java.nio.file.Paths.get(dir, "data.csv"),
         "event_id,user_id,event_type,value\n" +
           s"1,10,$tag,2.5\n" +

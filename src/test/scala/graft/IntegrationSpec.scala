@@ -61,7 +61,7 @@ class IntegrationSpec extends AnyFunSuite {
     assert(preds.count() == assembled.count())
 
     // save/load/predict cycle through the registry
-    val dir = java.nio.file.Files.createTempDirectory("graft-e2e").toString
+    val dir = tempDir("graft-e2e").toString
     val reg = new ModelRegistry(dir)
     reg.register("temperature", model, metrics)
     val loaded = reg.load("temperature", LinearRegressionModel)
@@ -83,7 +83,7 @@ class IntegrationSpec extends AnyFunSuite {
       .collect()(0).getAs[Double]("value")
     assert(n == ev.count().toDouble)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-report").toString
+    val dir = tempDir("graft-report").toString
     graft.operators.Quality.writeReport(report, dir)
     val back = spark.read.parquet(dir)
     assert(back.count() == report.count())
@@ -93,7 +93,7 @@ class IntegrationSpec extends AnyFunSuite {
 
   test("batch-inference facade: train, register, reload, score latest per entity") {
     val ev = Tables.events(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft-predict").toString
+    val dir = tempDir("graft-predict").toString
     val reg = new graft.ml.ModelRegistry(dir)
 
     // train + register (the reference's train_temperature_models +
@@ -172,7 +172,7 @@ class IntegrationSpec extends AnyFunSuite {
     assert(graft.operators.Dedup.minhashPairs(survivors).count() == 0,
       "curated corpus must contain no near-dup pair")
     // quota sampling composes
-    val sampled = GraftApi.curateCorpus(corpus, perSource = 3)
+    val sampled = GraftApi.curateCorpus(corpus, mix = Some(MixStage.PerSource(3)))
     val bySource = sampled.collect().groupBy(_.getAs[String]("source"))
     assert(bySource.values.forall(_.length <= 3))
     GraftApi.releaseCaches()
@@ -184,7 +184,7 @@ class IntegrationSpec extends AnyFunSuite {
     val base = graft.sources.Tables.documents(spark, sfDir)
       .select("doc_id", "source", "text")
     val nIn = base.count()
-    val curation = GraftApi.curatePlan(base, perSource = 3, spanDedupK = Some(20))
+    val curation = GraftApi.curatePlan(base, mix = Some(MixStage.PerSource(3)), spanDedupK = Some(20))
     try {
       val nOut = curation.frame.count()
       val m = curation.manifest.collect()
@@ -431,7 +431,7 @@ class IntegrationSpec extends AnyFunSuite {
       .select("doc_id", "source", "text")
     val bench = Seq((1L, "what is the boiling point of water at sea level"))
       .toDF("q_id", "text")
-    val curation = GraftApi.curatePlan(base, perSource = 3,
+    val curation = GraftApi.curatePlan(base, mix = Some(MixStage.PerSource(3)),
       spanDedupK = Some(20), benchmark = Some(bench),
       blocklist = Seq("dup"))
     try {

@@ -403,4 +403,126 @@ class KernelPropertySpec extends AnyFunSuite {
           s"got (${both.getString(0)}, ${both.getInt(1)}), want ($want, $wc)")
     }
   }
+
+  // One call of every GraftFunctions kernel over the columns of
+  // `kernelInputs`, keyed by wrapper name. Each call builds its Seq
+  // constants afresh; the array constants are shared references.
+  private val cents = Array(Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f), Array(0f, 0f, 1f, 1f))
+  private val codebooks = Array.tabulate(2, 3, 2)((s, c, i) => (s + c * 0.5f - i) / 2f)
+  private val weights = Array(0.5, -1.0, 2.0, 0.25)
+  private val longSet = Array(7L, 3L, 11L)
+  private val merges = Seq(("a", "b"), ("ab", "c"), ("l", "o"))
+  private def everyKernel(): Seq[(String, org.apache.spark.sql.Column)] = {
+    val (s, t, h, v) = (col("s"), split(col("s"), " "), col("h1"), col("v"))
+    Seq(
+      "fingerprint64" -> fingerprint64(s), "simhash64" -> simhash64(t),
+      "minhashSig" -> minhashSig(t, 4), "hamming64" -> hamming64(col("a"), col("b")),
+      "rhpSig" -> rhpSig(v, 6, 3L), "dotFD" -> dotFD(v, col("w")),
+      "tokenEntropyStats" -> tokenEntropyStats(t), "logitDot" -> logitDot(v, weights),
+      "ivfAssign" -> ivfAssign(v, cents), "shingleHash64" -> shingleHash64(t, 2),
+      "shingleHashPos" -> shingleHashPos(t, 2), "simhash64L" -> simhash64L(h),
+      "minhashSigL" -> minhashSigL(h, 4), "countInSet" -> countInSet(t, Seq("ab", "cd")),
+      "countInLongSet" -> countInLongSet(h, longSet),
+      "sortedIntersectCount" -> sortedIntersectCount(h, col("h2")),
+      "normalizeWs" -> normalizeWs(s), "wsTokens" -> wsTokens(s), "tokenTf" -> tokenTf(t),
+      "bigramBuckets" -> bigramBuckets(t, 64), "ngramBuckets" -> ngramBuckets(t, 64),
+      "semDedupDrops" -> semDedupDrops(col("cl"), 0.8), "pqEncode" -> pqEncode(v, codebooks),
+      "ivfPqEncode" -> ivfPqEncode(v, cents, codebooks), "charNgrams" -> charNgrams(s, 2, 3),
+      "countPunct" -> countPunct(s), "redactIps" -> redactIps(s), "countIps" -> countIps(s),
+      "redactCountIps" -> redactCountIps(s), "countUpperAscii" -> countUpperAscii(s),
+      "countTokenRuns" -> countTokenRuns(s), "bpeCount" -> bpeCount(t, merges),
+      "bpeTokens" -> bpeTokens(t, merges), "hashEmbed" -> hashEmbed(t, 8))
+  }
+
+  private lazy val kernelInputs = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val vec = ArrayType(FloatType)
+    val schema = StructType(Seq(StructField("id", IntegerType),
+      StructField("s", StringType), StructField("a", LongType), StructField("b", LongType),
+      StructField("h1", ArrayType(LongType)), StructField("h2", ArrayType(LongType)),
+      StructField("v", vec), StructField("w", vec),
+      StructField("cl", ArrayType(StructType(Seq(StructField("vec_id", LongType),
+        StructField("v", vec), StructField("nrm", DoubleType)))))))
+    def member(id: Long, x: Seq[Float]) =
+      Row(id, x, math.sqrt(x.map(f => f.toDouble * f).sum))
+    val rows = Seq(
+      Row(0, "Hello, World! ab cd ab cd 10.0.0.1 lo", 5L, 9L, Seq(3L, 7L, 11L),
+        Seq(1L, 7L, 11L), Seq(0.5f, -1f, 2f, 0.25f), Seq(1f, 1f, 1f, 1f),
+        Seq(member(1L, Seq(1f, 0f)), member(2L, Seq(1f, 0.01f)), member(3L, Seq(0f, 1f)))),
+      Row(1, "  abc  DEF 1.2.3.4 é世 x", -1L, 0L, Seq(2L), Seq.empty[Long],
+        Seq(0f, 0f, 0f, 0f), Seq(3f, -2f, 0.5f, 1f), Seq(member(9L, Seq(0f, 0f)))),
+      Row(2, "", 0L, 0L, Seq.empty[Long], Seq(5L), Seq(1f, 2f, 3f, 4f),
+        Seq(0f, 1f, 0f, 1f), Seq.empty[Row]),
+      Row(3, null, null, null, null, null, null, null, null))
+    // the repartition keeps the optimizer from folding the projection
+    // into a local relation, so the kernels run in the executed plan
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).repartition(2)
+  }
+
+  private def runKernels(confs: Map[String, String]): Seq[(String, Seq[Any])] = {
+    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val ks = everyKernel()
+      val rows = kernelInputs.select(col("id") +: ks.map { case (n, c) => c.as(n) }: _*)
+        .collect().sortBy(_.getInt(0))
+      ks.map(_._1).zipWithIndex.map { case (n, i) => n -> rows.map(_.get(i + 1)).toSeq }
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("every kernel: interpreted eval equals codegen, and a null input gives null") {
+    val interpreted = runKernels(Map("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false"))
+    val generated = runKernels(Map.empty)
+    // every public GraftFunctions wrapper is in the list
+    val wrappers = graft.functions.GraftFunctions.getClass.getDeclaredMethods
+      .filter(m => java.lang.reflect.Modifier.isPublic(m.getModifiers) &&
+        m.getReturnType == classOf[org.apache.spark.sql.Column] && !m.getName.contains("$"))
+      .map(_.getName).toSet
+    assert(interpreted.map(_._1).toSet == wrappers && interpreted.size == wrappers.size)
+    assert(generated.map(_._1) == interpreted.map(_._1))
+    interpreted.zip(generated).foreach { case ((name, i), (_, g)) =>
+      assert(i == g, s"$name: interpreted $i != codegen $g")
+      assert(g.last == null, s"$name: null input gave ${g.last}")
+      assert(g.init.forall(_ != null), s"$name: non-null input gave null: $g")
+    }
+  }
+
+  test("kernel expressions: semantic equality follows kernel and constants; plans name the kernel") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
+    def resolved(cs: Seq[org.apache.spark.sql.Column]): Seq[Expression] =
+      kernelInputs.select(cs.zipWithIndex.map { case (c, i) => c.as(s"k$i") }: _*)
+        .queryExecution.analyzed.expressions.map { case a: Alias => a.child }
+    val names = everyKernel().map(_._1)
+    val once = resolved(everyKernel().map(_._2))
+    val twice = resolved(everyKernel().map(_._2))
+    names.indices.foreach { i =>
+      assert(once(i).semanticEquals(twice(i)), s"${names(i)} differs from itself")
+      assert(once(i).prettyName == names(i).toLowerCase, once(i).toString)
+      names.indices.filter(_ != i).foreach(j =>
+        assert(!once(i).semanticEquals(once(j)), s"${names(i)} equals ${names(j)}"))
+    }
+    val (t, h, v) = (split(col("s"), " "), col("h1"), col("v"))
+    val differing = Seq(
+      minhashSig(t, 4) -> minhashSig(t, 5), rhpSig(v, 6, 3L) -> rhpSig(v, 6, 4L),
+      shingleHash64(t, 2) -> shingleHash64(t, 3), charNgrams(col("s"), 2, 3) -> charNgrams(col("s"), 2, 4),
+      semDedupDrops(col("cl"), 0.8) -> semDedupDrops(col("cl"), 0.9),
+      hashEmbed(t, 8) -> hashEmbed(t, 16),
+      countInSet(t, Seq("ab", "cd")) -> countInSet(t, Seq("ab", "ce")),
+      bpeCount(t, merges) -> bpeCount(t, merges.take(2)),
+      // array constants compare by reference, as arrays do
+      countInLongSet(h, longSet) -> countInLongSet(h, longSet.clone()),
+      ivfAssign(v, cents) -> ivfAssign(v, cents.clone()),
+      logitDot(v, weights) -> logitDot(v, weights.clone()))
+    val (l, r) = (resolved(differing.map(_._1)), resolved(differing.map(_._2)))
+    l.zip(r).foreach { case (a, b) => assert(!a.semanticEquals(b), s"$a equals $b") }
+    // plans print the kernel with its constants after its input
+    val printed = resolved(Seq(minhashSigL(h, 4), charNgrams(col("s"), 2, 3))).map(_.toString)
+    assert(printed.head.matches("""minhashsigl\(h1#\d+, 4\)""") &&
+      printed(1).matches("""charngrams\(s#\d+, 2, 3\)"""), printed)
+  }
 }

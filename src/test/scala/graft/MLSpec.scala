@@ -139,7 +139,7 @@ class MLSpec extends AnyFunSuite {
   }
 
   test("registry versions models and loads them back") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-registry").toString
+    val dir = tempDir("graft-registry").toString
     val (train, test) = splitPair
     val lr = new org.apache.spark.ml.regression.LinearRegression().setMaxIter(10)
     val model = lr.fit(train)

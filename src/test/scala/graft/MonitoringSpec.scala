@@ -112,121 +112,6 @@ class MonitoringSpec extends AnyFunSuite {
     assert(math.abs(sustainedDrift(Seq(0.2, 0.5)) - 2.5) < 1e-9)
   }
 
-  test("repass selection gives arm-flagged queries their own budget") {
-    import graft.Bench.selectSuspects
-    val steady = (1 to 40).map(i => f"q$i%02d" -> i * 0.1).toMap
-    // refinement tail = the 16 slowest (q25..q40 by steady)
-    val refine = steady.toSeq.sortBy(-_._2).map(_._1).take(16)
-    // the r12-ADVICE scenario: a MID-PACK query flagged by arm (b)
-    // (2x baseline blowout) is NOT in the heavy tail — it must still
-    // be selected (the old union-recap form dropped it every time)
-    val got = selectSuspects(armAB = Seq("q05"), armC = Seq.empty,
-      refine = refine, steadyOf = steady)
-    assert(got.contains("q05"))
-    assert(refine.forall(got.contains), "refinement tail must be kept whole")
-    assert(got.size <= 32)
-    // the LOADED-round variant: arm (c) flags every ok query, but the
-    // per-query arms rank FIRST inside the arm budget, so the
-    // mid-pack blowout keeps its slot instead of being flooded out by
-    // arm (c)'s slowest-first pool (which is just refine again)
-    val loaded = selectSuspects(armAB = Seq("q05"),
-      armC = steady.keys.toSeq, refine = refine, steadyOf = steady)
-    assert(loaded.contains("q05"),
-      "arm-(b) mid-pack query must survive arm-(c) flooding")
-    assert(refine.forall(loaded.contains))
-    assert(loaded.size <= 32)
-    // arm (c) alone degenerates to the heavy tail: its slowest-16 IS
-    // refine and dedup collapses the union (no baseline deviations
-    // known -> slowest-first tiebreak, the pre-r15 behavior)
-    val many = selectSuspects(armAB = Seq.empty, armC = steady.keys.toSeq,
-      refine = refine, steadyOf = steady)
-    assert(many.toSet == refine.toSet)
-  }
-
-  test("repass ranking prioritizes baseline deviators (the BENCH_r14 starvation)") {
-    import graft.Bench.selectSuspects
-    val steady = (1 to 40).map(i => f"q$i%02d" -> i * 0.1).toMap
-    val refine = steady.toSeq.sortBy(-_._2).map(_._1).take(16)
-    // the r14 artifact, distilled: a loaded round flags every query
-    // (arm c), the 16 slowest sit AT their quiet floors (deviation
-    // ~1.0-1.1), while five MID-PACK queries sit 1.4-1.8x above
-    // theirs — below arm (b)'s 2x conviction bar. The r14 selector
-    // ranked arm (c) slowest-first, so the arm budget re-timed the
-    // already-at-floor tail and the five suspects went unrepassed.
-    val suspects5 = Seq("q07", "q11", "q14", "q18", "q21")
-    val dev = steady.keys.map { k =>
-      k -> (if (suspects5.contains(k)) 1.6 else 1.05)
-    }.toMap
-    val got = selectSuspects(armAB = Seq.empty, armC = steady.keys.toSeq,
-      refine = refine, steadyOf = steady, deviationOf = dev)
-    assert(suspects5.forall(got.contains),
-      s"every 1.3x+ deviator must be repassed before at-floor queries: $got")
-    assert(refine.forall(got.contains), "refinement tail must be kept whole")
-    assert(got.size <= 32)
-    // arm (d) fires WITHOUT load conviction: deviators past 1.3x get
-    // repassed even when arms (a)-(c) are all silent
-    val quiet = selectSuspects(armAB = Seq.empty, armC = Seq.empty,
-      refine = refine, steadyOf = steady, deviationOf = dev)
-    assert(suspects5.forall(quiet.contains),
-      "arm (d) must fire on deviation alone")
-    // and a query with NO committed baseline cannot be starved out of
-    // arm (a)/(b) conviction by deviators (per-query arms rank first)
-    val withAB = selectSuspects(armAB = Seq("q03"), armC = Seq.empty,
-      refine = refine, steadyOf = steady, deviationOf = dev)
-    assert(withAB.contains("q03"))
-  }
-
-  test("reserved arm-(d) budget: a deviator survives a FULL arm (a)/(b) budget (BENCH_r15 starvation)") {
-    import graft.Bench.selectSuspects
-    val steady = (1 to 40).map(i => f"q$i%02d" -> i * 0.1).toMap
-    val refine = steady.toSeq.sortBy(-_._2).map(_._1).take(16)
-    // the r15 artifact, distilled: 23 queries convicted by arms
-    // (a)/(b) at high deviation fill the 16-slot base budget; one
-    // flagged-but-unconvicted suspect (q_train_bpe at 1.31x) ranked
-    // below all of them and fell off. The reserved arm-(d) floor must
-    // still repass it.
-    val armAB = (1 to 23).map(i => f"q$i%02d")
-    val dev = steady.keys.map { k =>
-      k -> (if (k == "q31") 1.31 else if (armAB.contains(k)) 2.5 else 1.0)
-    }.toMap
-    val got = selectSuspects(armAB = armAB, armC = Seq.empty,
-      refine = refine, steadyOf = steady, deviationOf = dev)
-    assert(got.contains("q31"),
-      s"the 1.31x deviator must get its reserved repass: $got")
-    assert(refine.forall(got.contains), "refinement tail must be kept whole")
-    // budget math: base 16 + reserved <=ArmDReserve + refinement 16
-    assert(got.size <= 16 + graft.Bench.ArmDReserve + 16)
-    // the reserve is CAPPED: a fully-deviating board (every query past
-    // 1.3x — the loaded-box stampede) cannot exceed base+reserve+refine
-    val allDev = steady.keys.map(_ -> 2.0).toMap
-    val flood = selectSuspects(armAB = Seq.empty, armC = steady.keys.toSeq,
-      refine = refine, steadyOf = steady, deviationOf = allDev)
-    assert(flood.size <= 16 + graft.Bench.ArmDReserve + 16,
-      s"reserve must stay bounded: ${flood.size}")
-  }
-
-  test("arm-(d) reserve covers a burst-regime deviator board (BENCH_r17 starvation)") {
-    import graft.Bench.selectSuspects
-    // the r17/r18-run1 artifact, distilled: arms (a)/(b) fill the base
-    // 16 AND ~20 further mid-pack queries deviate 1.3-1.5x at once —
-    // under the old 8-slot reserve, 12+ deviators went unrepassed
-    // (`arm_budget_exhausted_by_higher_deviators`). With the reserve
-    // at ArmDReserve every one of them gets its repass.
-    val steady = (1 to 60).map(i => f"q$i%02d" -> i * 0.1).toMap
-    val refine = steady.toSeq.sortBy(-_._2).map(_._1).take(16)
-    val armAB = (1 to 16).map(i => f"q$i%02d")
-    val midPack = (17 to 36).map(i => f"q$i%02d") // 20 deviators
-    val dev = steady.keys.map { k =>
-      k -> (if (armAB.contains(k)) 2.5
-            else if (midPack.contains(k)) 1.4 else 1.0)
-    }.toMap
-    val got = selectSuspects(armAB = armAB, armC = Seq.empty,
-      refine = refine, steadyOf = steady, deviationOf = dev)
-    assert(midPack.forall(got.contains),
-      s"every burst-regime deviator must be repassed: " +
-        midPack.filterNot(got.contains).mkString(","))
-  }
-
   test("repass run allocation: 1-run floor by deviation rank, published cutoff (BENCH_r18 residual)") {
     import graft.Bench.{allocateRepasses, RepassRunBudget}
     val steady = (1 to 80).map(i => f"q$i%02d" -> i * 0.1).toMap

@@ -555,7 +555,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("partitioned lake writes create prunable directories") {
-    val out = java.nio.file.Files.createTempDirectory("graft-lake").toString
+    val out = tempDir("graft-lake").toString
     val ev = Tables.events(spark, sfDir)
       .withColumn("day", to_date(col("ts")).cast("string"))
     Tables.writePartitioned(ev, out)

@@ -352,7 +352,7 @@ class ScaleSpec extends AnyFunSuite {
       // simulate the restart: catalog entry gone, directory intact
       val wh = new java.io.File(
         Bucketed.warehousePath(spark, table).toUri.getPath)
-      val aside = java.nio.file.Files.createTempDirectory("graft-bm-aside")
+      val aside = tempDir("graft-bm-aside")
         .resolve("data").toFile
       org.apache.commons.io.FileUtils.copyDirectory(wh, aside)
       Bucketed.dropTable(spark, table)
@@ -409,7 +409,7 @@ class ScaleSpec extends AnyFunSuite {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val table = "corpus_hashes_tier_t"
-    val deltaDir = java.nio.file.Files.createTempDirectory("graft-tier-d").toString
+    val deltaDir = tempDir("graft-tier-d").toString
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -489,7 +489,7 @@ class ScaleSpec extends AnyFunSuite {
     import graft.streaming.{CorpusIngest, NearDupStore}
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val bandDir = java.nio.file.Files.createTempDirectory("graft-band-d").toString
+    val bandDir = tempDir("graft-band-d").toString
     val nd = NearDupStore("corpus_bands_tier_t", bandDir)
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")

@@ -143,8 +143,8 @@ class StreamingSpec extends AnyFunSuite {
   test("resilient sink routes corrupt rows to the dead-letter path and keeps going") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    val dlqDir = java.nio.file.Files.createTempDirectory("graft-dlq").toString
+    val outDir = tempDir("graft-sink").toString
+    val dlqDir = tempDir("graft-dlq").toString
     val ms = MemoryStream[EventRow]
     val q = EventsStream.resilientSink(ms.toDF(), outDir, dlqDir, sleep = _ => ()).start()
     try {
@@ -172,8 +172,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("resilient sink is idempotent per batch id: redelivery does not duplicate") {
     import spark.implicits._
-    val outDir = java.nio.file.Files.createTempDirectory("graft-sink-idem").toString
-    val dlqDir = java.nio.file.Files.createTempDirectory("graft-dlq-idem").toString
+    val outDir = tempDir("graft-sink-idem").toString
+    val dlqDir = tempDir("graft-dlq-idem").toString
     val batch = Seq(
       EventRow(1, ts(10), 1, "view", 10.0),
       EventRow(2, ts(11), 1, null, 11.0)).toDF()
@@ -191,8 +191,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("redelivered batch that reclassifies clean clears its stale DLQ partition") {
     import spark.implicits._
-    val outDir = java.nio.file.Files.createTempDirectory("graft-sink-reclass").toString
-    val dlqDir = java.nio.file.Files.createTempDirectory("graft-dlq-reclass").toString
+    val outDir = tempDir("graft-sink-reclass").toString
+    val dlqDir = tempDir("graft-dlq-reclass").toString
     // first delivery: one row fails validation and lands in the DLQ
     EventsStream.resilientBatch(
       Seq(EventRow(1, ts(10), 1, "view", 10.0),
@@ -215,13 +215,13 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.CorpusIngest
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft-corpus").toString
-    val hashDir = java.nio.file.Files.createTempDirectory("graft-corpus-h").toString
+    val corpusDir = tempDir("graft-corpus").toString
+    val hashDir = tempDir("graft-corpus-h").toString
     val ms = MemoryStream[(Long, String, String)]
     val docs = ms.toDF().toDF("doc_id", "source", "text")
     val q = CorpusIngest.sink(docs, corpusDir, hashDir)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-corpus-ck").toString)
+        tempDir("graft-corpus-ck").toString)
       .start()
     try {
       // batch 0: an in-batch duplicate pair plus one unique doc
@@ -252,8 +252,8 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.CorpusIngest
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft-gate-c").toString
-    val hashDir = java.nio.file.Files.createTempDirectory("graft-gate-h").toString
+    val corpusDir = tempDir("graft-gate-c").toString
+    val hashDir = tempDir("graft-gate-h").toString
     val ms = MemoryStream[(Long, String, String)]
     val docs = ms.toDF().toDF("doc_id", "source", "text")
     val good = "the quick brown horse walks over the quiet bridge and then " +
@@ -264,7 +264,7 @@ class StreamingSpec extends AnyFunSuite {
         CorpusIngest.curationGate(docs, blocklist = Seq("dup")),
         corpusDir, hashDir)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-gate-ck").toString)
+        tempDir("graft-gate-ck").toString)
       .start()
     try {
       ms.addData(
@@ -286,9 +286,9 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.CorpusIngest
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft-dgate-c").toString
-    val hashDir = java.nio.file.Files.createTempDirectory("graft-dgate-h").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-dgate-ck").toString
+    val corpusDir = tempDir("graft-dgate-c").toString
+    val hashDir = tempDir("graft-dgate-h").toString
+    val ckDir = tempDir("graft-dgate-ck").toString
     val evalQ = "what is the boiling point of water at sea level pressure"
     val bench = Seq((1L, evalQ)).toDF("doc_id", "text")
     val filler = (s: String) => (1 to 30).map(i => s"the $s$i").mkString(" ")
@@ -338,8 +338,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.CorpusIngest
     import graft.sources.Bucketed
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft-bcorpus").toString
-    val deltaDir = java.nio.file.Files.createTempDirectory("graft-bcorpus-d").toString
+    val corpusDir = tempDir("graft-bcorpus").toString
+    val deltaDir = tempDir("graft-bcorpus-d").toString
     val table = "corpus_hashes_stream_t"
     Bucketed.dropTable(spark, table)
     Bucketed.dropTable(spark, table + "_staging")
@@ -352,7 +352,7 @@ class StreamingSpec extends AnyFunSuite {
       // compactEvery=2: batches 0,1 -> compaction folds both deltas
       val q = CorpusIngest.sinkBucketed(docs, corpusDir, table, deltaDir, compactEvery = 2)
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-bcorpus-ck").toString)
+          tempDir("graft-bcorpus-ck").toString)
         .start()
       try {
         // batch 0: in-batch duplicate pair + one unique
@@ -406,8 +406,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.CorpusIngest
     import graft.sources.Bucketed
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft-wcorpus").toString
-    val deltaDir = java.nio.file.Files.createTempDirectory("graft-wcorpus-d").toString
+    val corpusDir = tempDir("graft-wcorpus").toString
+    val deltaDir = tempDir("graft-wcorpus-d").toString
     val hashT = "corpus_hashes_wired_t"
     val rowsT = "corpus_rows_wired_t"
     Seq(hashT, rowsT).foreach { t =>
@@ -419,7 +419,7 @@ class StreamingSpec extends AnyFunSuite {
       val q = CorpusIngest.sinkBucketed(ms.toDF().toDF("doc_id", "source", "text"),
           corpusDir, hashT, deltaDir, compactEvery = 2, corpusTable = Some(rowsT))
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-wcorpus-ck").toString)
+          tempDir("graft-wcorpus-ck").toString)
         .start()
       try {
         for (batch <- Seq(
@@ -448,8 +448,8 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.streaming.CorpusIngest
     import graft.sources.Bucketed
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft-ccorpus").toString
-    val hashDir = java.nio.file.Files.createTempDirectory("graft-ccorpus-h").toString
+    val corpusDir = tempDir("graft-ccorpus").toString
+    val hashDir = tempDir("graft-ccorpus-h").toString
     val table = "corpus_rows_t"
     Bucketed.dropTable(spark, table)
     Bucketed.dropTable(spark, table + "_staging")
@@ -493,9 +493,9 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.streaming.{CorpusIngest, NearDupStore}
     import graft.sources.Bucketed
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft-nd").toString
-    val deltaDir = java.nio.file.Files.createTempDirectory("graft-nd-h").toString
-    val bandDir = java.nio.file.Files.createTempDirectory("graft-nd-b").toString
+    val corpusDir = tempDir("graft-nd").toString
+    val deltaDir = tempDir("graft-nd-h").toString
+    val bandDir = tempDir("graft-nd-b").toString
     val hashTable = "corpus_hashes_nd_t"
     val nd = NearDupStore("corpus_bands_nd_t", bandDir)
     def drop(): Unit = Seq(hashTable, hashTable + "_staging",
@@ -531,7 +531,7 @@ class StreamingSpec extends AnyFunSuite {
       for (t <- Seq(hashTable, nd.table)) {
         val wh = new java.io.File(
           Bucketed.warehousePath(spark, t).toUri.getPath)
-        val aside = java.nio.file.Files.createTempDirectory("graft-nd-aside")
+        val aside = tempDir("graft-nd-aside")
           .resolve("data").toFile
         org.apache.commons.io.FileUtils.copyDirectory(wh, aside)
         Bucketed.dropTable(spark, t)
@@ -561,9 +561,9 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.streaming.{CorpusIngest, NearDupStore}
     import graft.sources.Bucketed
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft-ndc").toString
-    val deltaDir = java.nio.file.Files.createTempDirectory("graft-ndc-h").toString
-    val bandDir = java.nio.file.Files.createTempDirectory("graft-ndc-b").toString
+    val corpusDir = tempDir("graft-ndc").toString
+    val deltaDir = tempDir("graft-ndc-h").toString
+    val bandDir = tempDir("graft-ndc-b").toString
     val hashTable = "corpus_hashes_ndc_t"
     val nd = NearDupStore("corpus_bands_ndc_t", bandDir,
       minBands = 1, k = 64, bands = 8)
@@ -598,8 +598,8 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.streaming.CorpusIngest
     import graft.sources.Bucketed
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft-rocorpus").toString
-    val hashDir = java.nio.file.Files.createTempDirectory("graft-rocorpus-h").toString
+    val corpusDir = tempDir("graft-rocorpus").toString
+    val hashDir = tempDir("graft-rocorpus-h").toString
     val table = "corpus_rows_ro_t"
     val staging = table + "_staging"
     Bucketed.dropTable(spark, table)
@@ -636,7 +636,7 @@ class StreamingSpec extends AnyFunSuite {
       // re-register the table (a read API must not mutate the catalog)
       val wh = new java.io.File(
         Bucketed.warehousePath(spark, table).toUri.getPath)
-      val aside = java.nio.file.Files.createTempDirectory("graft-ro-aside")
+      val aside = tempDir("graft-ro-aside")
         .resolve("data").toFile
       org.apache.commons.io.FileUtils.copyDirectory(wh, aside)
       Bucketed.dropTable(spark, table)
@@ -654,8 +654,8 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.streaming.CorpusIngest
     import graft.sources.Bucketed
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft-rcorpus").toString
-    val deltaDir = java.nio.file.Files.createTempDirectory("graft-rcorpus-d").toString
+    val corpusDir = tempDir("graft-rcorpus").toString
+    val deltaDir = tempDir("graft-rcorpus-d").toString
     val table = "corpus_hashes_restart_t"
     Bucketed.dropTable(spark, table)
     try {
@@ -669,7 +669,7 @@ class StreamingSpec extends AnyFunSuite {
       // dir), move it back
       val wh = new java.io.File(
         Bucketed.warehousePath(spark, table).toUri.getPath).toPath
-      val aside = java.nio.file.Files.createTempDirectory("graft-wh-aside")
+      val aside = tempDir("graft-wh-aside")
         .resolve("data")
       org.apache.commons.io.FileUtils.copyDirectory(wh.toFile, aside.toFile)
       Bucketed.dropTable(spark, table)
@@ -702,9 +702,9 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.streaming.{CorpusIngest, NearDupStore}
     import graft.sources.Bucketed
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft-fband").toString
-    val deltaDir = java.nio.file.Files.createTempDirectory("graft-fband-h").toString
-    val bandDir = java.nio.file.Files.createTempDirectory("graft-fband-b").toString
+    val corpusDir = tempDir("graft-fband").toString
+    val deltaDir = tempDir("graft-fband-h").toString
+    val bandDir = tempDir("graft-fband-b").toString
     val hashTable = "corpus_hashes_bl_t"
     val nd = NearDupStore("corpus_bands_lost_t", bandDir)
     def drop(): Unit = Seq(hashTable, hashTable + "_staging",
@@ -765,8 +765,8 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.streaming.CorpusIngest
     import graft.sources.Bucketed
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft-fcorpus").toString
-    val deltaDir = java.nio.file.Files.createTempDirectory("graft-fcorpus-d").toString
+    val corpusDir = tempDir("graft-fcorpus").toString
+    val deltaDir = tempDir("graft-fcorpus-d").toString
     val table = "corpus_hashes_lost_t"
     Bucketed.dropTable(spark, table)
     try {
@@ -823,15 +823,15 @@ class StreamingSpec extends AnyFunSuite {
     assert(expected.size < sample.size,
       "gate dropped nothing on 60 docs — the scenario is vacuous")
 
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft-mgate-c").toString
-    val hashDir = java.nio.file.Files.createTempDirectory("graft-mgate-h").toString
+    val corpusDir = tempDir("graft-mgate-c").toString
+    val hashDir = tempDir("graft-mgate-h").toString
     val ms = MemoryStream[(Long, String, String)]
     val q = CorpusIngest.sink(
       CorpusIngest.curationGate(ms.toDF().toDF("doc_id", "source", "text"),
         qualityModel = Some(model)),
       corpusDir, hashDir)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-mgate-ck").toString)
+        tempDir("graft-mgate-ck").toString)
       .start()
     try {
       ms.addData(sample: _*)

@@ -38,7 +38,7 @@ class TsEncodingSpec extends AnyFunSuite {
 
   /** Write events.parquet under `enc` into a fresh dir; return the dir. */
   private def writeEncoded(enc: String): String = {
-    val dir = Files.createTempDirectory(s"graft-tsenc-$enc").toString
+    val dir = tempDir(s"graft-tsenc-$enc").toString
     if (enc == "nanos-annotated") { writeNanosAnnotated(dir); return dir }
     val ts = enc match {
       // the nanos file reads back as LongType — the same shape the
@@ -159,7 +159,7 @@ class TsEncodingSpec extends AnyFunSuite {
     import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
     import org.apache.spark.sql.streaming.Trigger
     val results = encodings.map { case (enc, _) =>
-      val flat = JFiles.createTempDirectory(s"graft-tsenc-stream-$enc")
+      val flat = tempDir(s"graft-tsenc-stream-$enc")
       val partDir = Paths.get(dirs(enc), "events.parquet")
       // spark writes a directory of part files; the hand-written
       // nanos-annotated arm is already a flat file (the driver layout)
@@ -172,7 +172,7 @@ class TsEncodingSpec extends AnyFunSuite {
         StandardCopyOption.REPLACE_EXISTING)
       val stream = graft.streaming.EventsStream.readEvents(spark, flat.toString)
       assert(stream.schema("ts").dataType == TimestampType, s"$enc stream not normalized")
-      val outDir = JFiles.createTempDirectory(s"graft-tsenc-sink-$enc").toString
+      val outDir = tempDir(s"graft-tsenc-sink-$enc").toString
       val q = stream
         .select(col("event_id"), Analytics.epochS(col("ts")).as("s"))
         .writeStream.format("memory").queryName(s"tsenc_$enc".replace('-', '_'))

@@ -2,7 +2,7 @@
 """Independent greedy-BPE reference implementation: applies a GPT-2
 format merges.txt to a documents.parquet corpus and writes per-doc
 token counts as JSON — the parity fixture for graft's codegen'd
-BpeCount expression (BpeSpec compares Spark's output to this file
+bpeCount kernel (BpeSpec compares Spark's output to this file
 row by row).
 
 Usage: bpe_reference.py <merges.txt> <documents.parquet> <out.json>
@@ -110,7 +110,7 @@ def main():
         json.dump(counts, f, indent=0, sort_keys=True)
     print(f"wrote {len(counts)} doc counts to {out}")
     # optional 4th/5th args: dump the PIECES of the first N docs — the
-    # tokenization fixture for graft's BpeTokens (BpeSpec)
+    # tokenization fixture for graft's bpeTokens (BpeSpec)
     if len(sys.argv) > 4:
         tokens_out = sys.argv[4]
         n_docs = int(sys.argv[5]) if len(sys.argv) > 5 else 50
