@@ -152,18 +152,18 @@ object SparkEntry {
     // hashing-trick embeddings, weak-labeled by the stopword-profile
     // heuristic (which stays the SQL-oracled q_lang_id entry)
     "q_lang_id_model" -> ((s, d) => {
-      recordClassifierRun(s, d)
+      classifierOracles.record(s, d)
       LangIdModel.classify(s, Tables.documents(s, d), d)
     }),
     // char-3..5-gram feature basis (r19) — fastText's actual basis;
     // the axis that separates no-space scripts the word-token
     // embedding collapses to one feature per line
     "q_lang_id_model_cn" -> ((s, d) => {
-      recordClassifierRun(s, d)
+      classifierOracles.record(s, d)
       LangIdModel.classify(s, Tables.documents(s, d), d, charGrams = true)
     }),
     "q_quality_classifier" -> ((s, d) => {
-      recordClassifierRun(s, d)
+      classifierOracles.record(s, d)
       QualityClassifier.classify(s, Tables.documents(s, d), d)
     }),
     "q_repetition"     -> ((s, d) => TextAnalysis.repetitionRatio(Tables.documents(s, d))),
@@ -191,7 +191,7 @@ object SparkEntry {
     // tau=0.85) → PII redaction — pins the semantic stage's doc_id
     // semi-join plumbing and placement against one DuckDB restatement
     "q_curate_semantic" -> ((s, d) => {
-      recordQuantizerRun(s, d)
+      quantizerOracles.record(s, d)
       val docs = Tables.documents(s, d)
       GraftApi.curateCorpus(
         docs.filter(col("source") =!= "src0"),
@@ -344,31 +344,31 @@ object SparkEntry {
       TextAnalysis.vocabDrift(old, nw)
     }),
     "q_cluster_embed"   -> ((s, d) => {
-      recordQuantizerRun(s, d)
+      quantizerOracles.record(s, d)
       Similarity.clusterEmbed(Tables.embeddings(s, d))
     }),
     // quota 8 leaves most clusters over-quota at every test SF (the
     // prefilter + rank arms both non-vacuous) while small clusters
     // exercise the under-quota keep-all arm
     "q_mix_cluster"     -> ((s, d) => {
-      recordQuantizerRun(s, d)
+      quantizerOracles.record(s, d)
       Similarity.mixByCluster(Tables.embeddings(s, d), quota = 8)
     }),
     "q_cluster_stats"   -> ((s, d) => {
-      recordQuantizerRun(s, d)
+      quantizerOracles.record(s, d)
       Similarity.clusterStats(Similarity.clusterEmbed(Tables.embeddings(s, d)))
     }),
     // SemDeDup (r18): embedding near-dups resolved within the shared
     // trained quantizer's clusters — the semantic third axis of
     // near-dup after the MinHash/SimHash shingle families
     "q_semdedup"        -> ((s, d) => {
-      recordQuantizerRun(s, d)
+      quantizerOracles.record(s, d)
       Similarity.semDedup(Tables.embeddings(s, d))
     }),
     // product-quantization ANN (r18): the memory-bounded axis — m int
     // codes per vector as the whole index, ADC scoring per query
     "q_ann_pq"          -> ((s, d) => {
-      recordQuantizerRun(s, d)
+      quantizerOracles.record(s, d)
       Similarity.annPq(Tables.embeddings(s, d))
     }),
     "q_hash_embed"      -> ((s, d) => {
@@ -462,14 +462,14 @@ object SparkEntry {
     "q_ann_topk"      -> ((s, d) => Similarity.annTopK(Tables.embeddings(s, d))),
     "q_ann_lsh"       -> ((s, d) => Similarity.annLsh(Tables.embeddings(s, d))),
     "q_ann_ivf"       -> ((s, d) => {
-      recordQuantizerRun(s, d)
+      quantizerOracles.record(s, d)
       Similarity.annIvf(Tables.embeddings(s, d))
     }),
     // IVF-PQ (r19): the production composition — residual PQ codes
     // scanned only within the query's nProbe inverted lists (Jégou
     // 2011 §III IVFADC); candidate sweep AND index payload bounded
     "q_ann_ivfpq"     -> ((s, d) => {
-      recordQuantizerRun(s, d)
+      quantizerOracles.record(s, d)
       Similarity.annIvfPq(Tables.embeddings(s, d))
     }),
     "q_dedup_embed_lsh" -> ((s, d) => Similarity.embedDedupLsh(Tables.embeddings(s, d))),
@@ -695,64 +695,64 @@ object SparkEntry {
        |  FROM bits GROUP BY vec_id, tbl
        |)""".stripMargin
 
-  /** Every DISTINCT (session, sfDir) a quantizer-family query has run
-    * on in this JVM — lets the TRAINED-LITERAL oracle builders below
-    * reach the same tables the queries read. Verify runs every query
-    * before dumping oracleSql, so in the driver flow exactly one pair
-    * is recorded by the time it matters. Evaluated standalone (no
-    * prior query run) OR after quantizer queries ran on SEVERAL
-    * distinct dirs (an A-then-B flow where "last dir wins" would
-    * silently pair dir-B-trained oracles with dir-A results), the
-    * quantizer entries are simply omitted — the pre-round-10
-    * rows-only behavior, never a wrong oracle. */
-  private val quantizerRuns =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
-  private def recordQuantizerRun(s: SparkSession, d: String): Unit =
-    quantizerRuns.add((s, d))
+  /** The oracle entries of one TRAINED-LITERAL query family, built
+    * against the tables its queries actually read. `record` notes
+    * every DISTINCT (session, sfDir) a family query has run on in this
+    * JVM. Verify runs every query before dumping oracleSql, so in the
+    * driver flow exactly one pair is recorded by the time it matters.
+    * Evaluated standalone (no prior query run) OR after the family ran
+    * on SEVERAL distinct dirs (an A-then-B flow where "last dir wins"
+    * would silently pair dir-B-trained oracles with dir-A results),
+    * the entries are simply omitted — rows-only, never a wrong oracle.
+    * The built entries are memoized per (session, dir): oracleSql is
+    * a def read several times per process, and without the memo every
+    * read would re-run the deterministic training's sample job. */
+  private final class TrainedOracles(build: (SparkSession, String) => Map[String, String]) {
+    private val runs =
+      java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
+    @volatile private var memo: ((SparkSession, String), Map[String, String]) = null
 
-  /** Test hook: forget any recorded quantizer run against `dir`.
-    * FuzzSpec runs the quantizer queries against the committed fuzz
-    * dir in the same JVM as the contract suites' sfDir runs; leaving
-    * both recorded would (correctly) ambiguate the query-dir ↔
-    * oracle-dir pairing and empty the trained-literal oracle map for
-    * everyone else. The fuzz goldens don't need oracle entries, so
-    * the spec un-records its own dir after each query. */
-  private[graft] def forgetQuantizerRuns(dir: String): Unit = {
-    quantizerRuns.removeIf(_._2 == dir)
-    val memo = quantizerOracleMemo
-    if (memo != null && memo._1._2 == dir) quantizerOracleMemo = null
-    // same hygiene for the classifier's trained-literal registry (one
-    // hook covers both data-dependent oracle families)
-    classifierRuns.removeIf(_._2 == dir)
-    val cMemo = classifierOracleMemo
-    if (cMemo != null && cMemo._1._2 == dir) classifierOracleMemo = null
-  }
+    def record(s: SparkSession, d: String): Unit = runs.add((s, d))
 
-  /** Every DISTINCT (session, sfDir) the classifier query has run on —
-    * the [[quantizerRuns]] pattern for q_quality_classifier's
-    * trained-weight literals. Same ambiguity rule: != 1 recorded dir ⇒
-    * the entry is omitted, never wrong. */
-  private val classifierRuns =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
-  private def recordClassifierRun(s: SparkSession, d: String): Unit =
-    classifierRuns.add((s, d))
+    def forget(dir: String): Unit = {
+      runs.removeIf(_._2 == dir)
+      val m = memo
+      if (m != null && m._1._2 == dir) memo = null
+    }
 
-  @volatile private var classifierOracleMemo:
-      ((SparkSession, String), Map[String, String]) = null
-
-  private def classifierOracles: Map[String, String] = {
-    val keys = classifierRuns.toArray(Array.empty[(SparkSession, String)])
-    if (keys.length != 1) Map.empty
-    else {
-      val key = keys(0)
-      val memo = classifierOracleMemo
-      if (memo != null && memo._1 == key) memo._2
+    def entries: Map[String, String] = {
+      val keys = runs.toArray(Array.empty[(SparkSession, String)])
+      if (keys.length != 1) Map.empty
       else {
-        val built = buildClassifierOracles(key._1, key._2)
-        classifierOracleMemo = (key, built)
-        built
+        val m = memo
+        if (m != null && m._1 == keys(0)) m._2
+        else {
+          val built = build(keys(0)._1, keys(0)._2)
+          memo = (keys(0), built)
+          built
+        }
       }
     }
+  }
+
+  /** The quantizer family (q_cluster_embed / q_ann_ivf / q_mix_cluster /
+    * q_cluster_stats …): all entries share one trained matrix (k =
+    * nList = 16, iters 3, seed 42 defaults). */
+  private val quantizerOracles = new TrainedOracles(buildQuantizerOracles)
+
+  /** q_quality_classifier's and q_lang_id_model*'s trained weights. */
+  private val classifierOracles = new TrainedOracles(buildClassifierOracles)
+
+  /** Test hook: forget any recorded trained-literal run against `dir`
+    * (both families). FuzzSpec runs the quantizer queries against the
+    * committed fuzz dir in the same JVM as the contract suites' sfDir
+    * runs; leaving both recorded would (correctly) ambiguate the
+    * query-dir ↔ oracle-dir pairing and empty the trained-literal
+    * oracle map for everyone else. The fuzz goldens don't need oracle
+    * entries, so the spec un-records its own dir after each query. */
+  private[graft] def forgetQuantizerRuns(dir: String): Unit = {
+    quantizerOracles.forget(dir)
+    classifierOracles.forget(dir)
   }
 
   /** q_quality_classifier's trained-literal oracle: the TRAINED weight
@@ -980,36 +980,6 @@ object SparkEntry {
        |               i -> n.v[i] * ct.c[i])) AS d
        |  FROM n CROSS JOIN cents ct
        |)""".stripMargin
-
-  /** Memo for [[quantizerOracles]] keyed on the (session, dir) that
-    * produced it: oracleSql is a def read several times per process
-    * (Verify once, the contract specs repeatedly), and without the
-    * memo every read would re-run the deterministic training's sample
-    * job just to rebuild identical SQL. */
-  @volatile private var quantizerOracleMemo:
-      ((SparkSession, String), Map[String, String]) = null
-
-  /** Data-dependent oracle entries (trained-literal pattern): built
-    * against the dir the queries actually ran on; empty when no
-    * quantizer query has run in this JVM. All entries share one
-    * trained matrix (k = nList = 16, iters 3, seed 42 defaults). */
-  private def quantizerOracles: Map[String, String] = {
-    val keys = quantizerRuns.toArray(Array.empty[(SparkSession, String)])
-    // 0 recorded dirs: nothing ran, old rows-only behavior. >1: the
-    // pairing query-dir ↔ oracle-dir is ambiguous — omit rather than
-    // risk a silently wrong oracle (see quantizerRuns scaladoc).
-    if (keys.length != 1) Map.empty
-    else {
-      val key = keys(0)
-      val memo = quantizerOracleMemo
-      if (memo != null && memo._1 == key) memo._2
-      else {
-        val built = buildQuantizerOracles(key._1, key._2)
-        quantizerOracleMemo = (key, built)
-        built
-      }
-    }
-  }
 
   private def buildQuantizerOracles(spark: SparkSession,
                                     dir: String): Map[String, String] = {
@@ -1507,7 +1477,7 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = quantizerOracles ++ classifierOracles ++ Map(
+  def oracleSql: Map[String, String] = quantizerOracles.entries ++ classifierOracles.entries ++ Map(
     "q_metrics" ->
       """SELECT (round(CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) / count(value) + 1e-9, 4) + 0) AS avg_value,
         |       (round(max(value), 4) + 0) AS max_value,

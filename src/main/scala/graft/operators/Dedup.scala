@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType,
+  StructField, StructType}
 
 import graft.functions.GraftFunctions
 
@@ -208,37 +210,20 @@ object Dedup {
     // 300-400 MB at 1M pairs, safe for common 2-4 GB driver sizings.
     // Beyond the bound, distributed min-label propagation (below) is
     // the path that scales to billions of pairs.
-    // The size check IS the collect: limit(bound+1) pulls at most one
-    // row past the bound, so the common small case pays ONE job over
-    // the pairs instead of a count job plus a collect job, and an
-    // over-bound pair set still stops at bound+1 driver rows.
-    // Over-bound probe cost: those bound+1 rows are a TRANSIENT
-    // allocation discarded before distributedClusters runs — by
-    // construction the same ~300-400 MB budget the within-bound
-    // union-find legitimately holds, so the guard's driver-memory
-    // envelope is unchanged; it is wasted work only on the rare
-    // distributed path, where one bounded collect (and one repeated
-    // pair computation feeding the persist) is noise against the
-    // propagation rounds that follow.
-    // The caller's bound is clamped to what THIS driver's heap can
-    // plausibly hold (~350 bytes/pair of boxed tuple + HashMap entries
-    // — the same estimate the default bound's comment derives), never
-    // past the JVM array-length cap: a Long.MaxValue caller bound with
-    // ~1-2G pairs must route to the distributed path, not to a
-    // collect() that would OOM long before the array limit. The clamp
-    // applies BEFORE the probe, so the probe collect itself can never
-    // exceed the heap-plausible budget either (an unclamped 500M-pair
-    // caller bound previously OOMed in the probe on small heaps); and
-    // since the clamp is < Int.MaxValue by construction, the limit()
-    // probe covers every caller bound — no separate count-then-collect
-    // shape for huge bounds.
-    val collectCap = math.min(
-      Runtime.getRuntime.maxMemory / 350,
-      (Int.MaxValue - 8).toLong) // max JVM array length
-    val bound = math.min(driverMaxPairs, collectCap)
-    val probe = typedPairs(p).limit((bound + 1).toInt).collect()
-    if (probe.length <= bound) driverUnionFind(p.sparkSession, probe)
-    else distributedClusters(Caches.persistTracked(p), maxIters)
+    // The size check IS the collect ([[BoundedFold.within]]): the
+    // common small case pays ONE job over the pairs, and an over-bound
+    // pair set stops at bound+1 driver rows, a transient allocation in
+    // the same ~300-400 MB envelope the union-find holds, discarded
+    // before distributedClusters runs. The caller's bound is clamped
+    // to what THIS driver's heap can plausibly hold (~350 bytes/pair
+    // of boxed tuple + HashMap entries, the estimate above) BEFORE the
+    // probe, so a Long.MaxValue caller bound with ~1-2G pairs routes
+    // to the distributed path instead of OOMing in the probe.
+    val collectCap = Runtime.getRuntime.maxMemory / 350
+    BoundedFold.within(typedPairs(p), math.min(driverMaxPairs, collectCap)) match {
+      case Some(probe) => driverUnionFind(p.sparkSession, probe)
+      case None => distributedClusters(Caches.persistTracked(p), maxIters)
+    }
   }
 
   /** Typed (doc_a, doc_b) view: a primitive-tuple collect holds two
@@ -377,14 +362,13 @@ object Dedup {
     val hits = shingleHashes(corpus, n)
       .select(col("doc_id"), explode(col("sh")).as("s"))
       .join(benchSide, "s")
-      // count(1), NOT countDistinct(s) (r21): the exploded stream is
-      // distinct-per-doc by construction — shingleHash64 emits each
-      // doc's DISTINCT shingle set, and the benchmark side is itself
-      // distinct (one row per s), so the join cannot duplicate a
-      // (doc, s) pair. countDistinct planned Catalyst's distinct
-      // rewrite: an extra (doc_id, s)-keyed aggregate level + exchange
-      // re-deduplicating already-unique rows.
-      .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
+      // distinct shingles per doc_id, as the oracle's count(DISTINCT
+      // s): each row's shingle set is distinct and so is the benchmark
+      // side, so only two rows sharing a doc_id can repeat a (doc, s)
+      // pair. size(collect_set) dedups those inside the one doc_id
+      // aggregate; countDistinct(s) would plan Catalyst's distinct
+      // rewrite, an extra (doc_id, s)-keyed aggregate level + exchange.
+      .groupBy("doc_id").agg(size(collect_set(col("s"))).cast("long").as("n_shared"))
     corpus.select(col("doc_id"))
       .join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -407,20 +391,16 @@ object Dedup {
         s"benchmark shingle set exceeds maxShingles=$maxShingles — " +
           "is the corpus being passed as the benchmark?"))
 
-  /** [[benchmarkShingles]] as one bounded collect that yields None
-    * past `maxShingles` distinct shingles, for callers with a
-    * fallback. */
+  /** [[benchmarkShingles]] as one bounded collect
+    * ([[BoundedFold.within]]) that yields None past `maxShingles`
+    * distinct shingles, for callers with a fallback. */
   def benchmarkShinglesWithin(benchmark: DataFrame, n: Int = 3,
                               maxShingles: Long = DefaultMaxBroadcastShingles)
-      : Option[Array[Long]] = {
-    val rows = spreadToCores(benchmark.select(col("text")))
+      : Option[Array[Long]] =
+    BoundedFold.within(spreadToCores(benchmark.select(col("text")))
       .select(explode(
         GraftFunctions.shingleHash64(TextAnalysis.tokens(col("text")), n)).as("s"))
-      .distinct()
-      .limit(math.min(maxShingles + 1, Int.MaxValue.toLong).toInt)
-      .collect()
-    if (rows.length > maxShingles) None else Some(rows.map(_.getLong(0)))
-  }
+      .distinct(), maxShingles).map(_.map(_.getLong(0)))
 
   /** Scan-local keep predicate: true iff the row's text shares fewer
     * than `minShared` distinct n-gram shingles with the benchmark set
@@ -464,31 +444,33 @@ object Dedup {
     * order, so pair generation and output ordering are identical to
     * the string form; the final ≤ nSources²/2-row projection decodes.
     *
-    * NOTE eager construction (laziness break): the source dictionary
-    * is collected when the DataFrame is BUILT, and for
-    * k ≤ `driverFoldMaxK` the ≤2^k-row mask rollup is too — the
-    * totals/pair aggregation then finishes in a driver loop and the
-    * result ships as a LocalRelation (bounded driver state, see the
+    * Construction-time pulls ([[BoundedFold]]): the source
+    * dictionary, and for k ≤ `driverFoldMaxK` the ≤2^k-row mask
+    * rollup too — the totals/pair aggregation then finishes in a
+    * driver loop and the result ships as a LocalRelation (see the
     * fold comment in the body; past the bound, the distributed arm
     * collects only the k-row totals, and its final job is a pure
-    * cache read with zero broadcast builds). A docs table that
-    * changes between construction and execution would miss it;
-    * rebuild to re-snapshot. */
+    * cache read with zero broadcast builds).
+    *
+    * Order and nulls: ids are ranks in code-point order (Spark's
+    * string order, and DuckDB's `a.source < b.source`), so each pair
+    * is oriented as the oracle orients it; a driver-side String sort
+    * (UTF-16 order) would flip pairs of U+E000–U+FFFF and
+    * supplementary-plane labels. A null `source` gets no id, so its
+    * shingles count toward no source. */
   def sourceOverlap(docs: DataFrame, n: Int = 3,
                     driverFoldMaxK: Int = 20): DataFrame = {
     val spark = docs.sparkSession
     // ONE-exchange dictionary pull: collect_set aggregates the source
     // column in a single partial+final pass (the hash-distinct form
-    // materialized an extra AQE exchange job for the same ≤k strings).
-    // Sources are non-null by the corpus contract — a null source
-    // crashed the former form too (String.compareTo in .sorted).
+    // materialized an extra AQE exchange job for the same ≤k strings)
+    // and drops nulls; sort_array gives the code-point order
     val sources = docs.agg(sort_array(collect_set(col("source"))))
       .collect()(0).getSeq[String](0).toArray
     val k = sources.length
-    val encodeMap = map(sources.zipWithIndex.flatMap { case (s, i) =>
-      Seq(lit(s), lit(i)) }.toSeq: _*)
-    val decodeMap = map(sources.zipWithIndex.flatMap { case (s, i) =>
-      Seq(lit(i), lit(s)) }.toSeq: _*)
+    val encodeMap = BoundedFold.literalMap(sources.zipWithIndex, StringType, IntegerType)
+    val decodeMap = BoundedFold.literalMap(sources.zipWithIndex.map(_.swap),
+      IntegerType, StringType)
     val shingled = spreadToCores(docs)
       .select(element_at(encodeMap, col("source")).as("src"),
         explode(GraftFunctions.shingleHash64(
@@ -529,7 +511,8 @@ object Dedup {
       val nSh = new Array[Long](k)
       val pairCnt = new Array[Long](k * k)
       maskRows.foreach { r =>
-        val m = r.getLong(0); val c = r.getLong(1)
+        // a null mask: shingles only null-source docs hold
+        val m = if (r.isNullAt(0)) 0L else r.getLong(0); val c = r.getLong(1)
         var i = 0
         while (i < k) {
           if (((m >> i) & 1L) != 0L) {
@@ -559,19 +542,10 @@ object Dedup {
         }
         a += 1
       }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("src_a",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("src_b",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n_shared",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_a",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_b",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("containment",
-          org.apache.spark.sql.types.DoubleType)))
+      val schema = StructType(Seq(
+        StructField("src_a", StringType), StructField("src_b", StringType),
+        StructField("n_shared", LongType), StructField("n_a", LongType),
+        StructField("n_b", LongType), StructField("containment", DoubleType)))
       return spark.createDataFrame(rows, schema)
     }
     val srcsFrame =
@@ -610,11 +584,8 @@ object Dedup {
     // Degenerate empty corpus: no masks rows → no pair rows → the
     // lookup expression is never evaluated, matching the former
     // inner-join's empty output.
-    val totalRows = totals.collect()
-    val totalsLit =
-      if (totalRows.isEmpty) map().cast("map<int,bigint>")
-      else map(totalRows.flatMap(r =>
-        Seq(lit(r.getInt(0)), lit(r.getLong(1)))).toSeq: _*)
+    val totalsLit = BoundedFold.literalMap(
+      totals.collect().map(r => r.get(0) -> r.get(1)), IntegerType, LongType)
     srcsFrame
       .select(explode(pairCol).as("p"), col("cnt"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))

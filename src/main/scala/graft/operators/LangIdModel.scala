@@ -70,9 +70,7 @@ object LangIdModel {
     val emb = docs.select(col("doc_id"),
       featEmbed(col("text"), dim, charGrams).as("embedding"))
     val labels = TextAnalysis.langId(docs).select(col("doc_id"), col("lang_pred"))
-    emb.join(labels, "doc_id")
-      .withColumn("h", xxhash64(col("doc_id"), lit(seed)))
-      .orderBy("h", "doc_id").limit(sampleN)
+    BoundedFold.sample(emb.join(labels, "doc_id"), "doc_id", sampleN, seed)
       .select(col("embedding"), col("lang_pred"))
       .collect()
       .map { r =>
@@ -87,8 +85,8 @@ object LangIdModel {
       }
   }
 
-  /** Train the one-vs-rest model on heuristic weak labels — the
-    * [[QualityClassifier.train]] GD loop run once per class with
+  /** Train the one-vs-rest model on heuristic weak labels —
+    * [[QualityClassifier.fit]] run once per class with
     * y = (label == class). Deterministic: seeded hash-ordered sample,
     * fixed step and iteration count. A class absent from the sample
     * still trains (its GD drives the bias negative and stays bounded
@@ -100,41 +98,10 @@ object LangIdModel {
     val sample = trainingSample(docs, dim, sampleN, seed, charGrams)
     require(sample.nonEmpty,
       "LangIdModel.train: documents input is empty — nothing to train on")
-    val d = sample.head._1.length
-    val n = sample.length
-    val ws = Array.ofDim[Double](classes.length, d)
-    val bs = new Array[Double](classes.length)
-    var c = 0
-    while (c < classes.length) {
-      val w = ws(c)
-      var b = 0.0
-      var it = 0
-      while (it < iters) {
-        val gw = new Array[Double](d)
-        var gb = 0.0
-        var r = 0
-        while (r < n) {
-          val (v, yi) = sample(r)
-          val y = if (yi == c) 1.0 else 0.0
-          var z = b
-          var i = 0
-          while (i < d) { z += v(i).toDouble * w(i); i += 1 }
-          val p = 1.0 / (1.0 + math.exp(-z))
-          val g = p - y
-          i = 0
-          while (i < d) { gw(i) += g * v(i).toDouble; i += 1 }
-          gb += g
-          r += 1
-        }
-        var i = 0
-        while (i < d) { w(i) -= lr * gw(i) / n; i += 1 }
-        b -= lr * gb / n
-        it += 1
-      }
-      bs(c) = b
-      c += 1
-    }
-    Model(classes, ws, bs)
+    val xs = sample.map(_._1)
+    val fits = classes.indices.map(c => QualityClassifier.fit(
+      xs, sample.map(s => if (s._2 == c) 1.0 else 0.0), iters, lr))
+    Model(classes, fits.map(_.weights).toArray, fits.map(_.bias).toArray)
   }
 
   /** Score every document — (doc_id, s_<lang>…, lang_model): the
@@ -181,36 +148,17 @@ object LangIdModel {
     * memoized default-trained model. */
   private val defaultHyper = (8192, 200, 0.5, 42L)
 
-  /** Both feature bases run in one Verify/test JVM, so the memo is a
-    * small map (word + char per corpus), not a single slot — but
-    * BOUNDED (r19 advice): sessions are WEAK outer keys so a stopped
-    * session's models unpin with it, and each session's inner map
-    * clears past [[MemoCap]] so a long-lived JVM scoring many
-    * distinct plan shapes re-trains (deterministic, bit-identical)
-    * instead of accumulating models forever. WeakHashMap is not
-    * thread-safe — outer access synchronizes on the map. */
-  private val MemoCap = 32
-  private val modelMemo = new java.util.WeakHashMap[SparkSession,
-    java.util.concurrent.ConcurrentHashMap[
-      (String, Int, (Int, Int, Double, Long), Int, Boolean), Model]]()
+  /** Both feature bases run in one Verify/test JVM: the memo holds
+    * word + char models per corpus. */
+  private val modelMemo =
+    new SessionMemo[(String, Int, (Int, Int, Double, Long), Int, Boolean), Model]
 
   def trainedModel(spark: SparkSession, docs: DataFrame, dir: String,
-                   dim: Int = 64, charGrams: Boolean = false): Model = {
-    val inner = modelMemo.synchronized {
-      var m = modelMemo.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap()
-        modelMemo.put(spark, m)
-      }
-      m
-    }
-    if (inner.size > MemoCap) inner.clear()
-    val key = (dir, dim, defaultHyper,
-      docs.queryExecution.analyzed.semanticHash(), charGrams)
-    inner.computeIfAbsent(key, _ => train(docs, dim, charGrams = charGrams))
-  }
+                   dim: Int = 64, charGrams: Boolean = false): Model =
+    modelMemo(spark, (dir, dim, defaultHyper,
+      docs.queryExecution.analyzed.semanticHash(), charGrams))(
+      train(docs, dim, charGrams = charGrams))
 
   /** Test hook: drop the model memo. */
-  private[graft] def invalidate(): Unit =
-    modelMemo.synchronized(modelMemo.clear())
+  private[graft] def invalidate(): Unit = modelMemo.clear()
 }

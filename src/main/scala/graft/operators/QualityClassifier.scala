@@ -59,9 +59,7 @@ object QualityClassifier {
       TextAnalysis.qualityKeepExpr().cast("int").as("rule_keep"))
     val lm = TextAnalysis.unigramScores(docs)
       .select(col("doc_id"), col("mean_nll"))
-    emb.join(rules, "doc_id").join(lm, "doc_id")
-      .withColumn("h", xxhash64(col("doc_id"), lit(seed)))
-      .orderBy("h", "doc_id").limit(sampleN)
+    BoundedFold.sample(emb.join(rules, "doc_id").join(lm, "doc_id"), "doc_id", sampleN, seed)
       .select(col("embedding"), col("rule_keep"), col("mean_nll"))
       .collect()
       .map(r => (r.getSeq[Float](0).toArray, r.getInt(1), r.getDouble(2)))
@@ -92,23 +90,31 @@ object QualityClassifier {
     val labeled: Array[(Array[Float], Double)] =
       if (agree.nonEmpty) agree
       else sample.map { case (v, rk, _) => (v, rk.toDouble) }
+    fit(labeled.map(_._1), labeled.map(_._2), iters, lr)
+  }
 
-    val d = labeled.head._1.length
+  /** Binary logistic regression of labels `ys` (0.0 / 1.0) on rows
+    * `xs` by full-batch gradient descent from zero weights: fixed step
+    * `lr` and `iters` iterations, so the same rows give bit-identical
+    * weights. [[LangIdModel.train]] runs it once per class. */
+  private[operators] def fit(xs: Array[Array[Float]], ys: Array[Double],
+                             iters: Int, lr: Double): LogitModel = {
+    val d = xs.head.length
     val w = new Array[Double](d)
     var b = 0.0
-    val n = labeled.length
+    val n = xs.length
     var it = 0
     while (it < iters) {
       val gw = new Array[Double](d)
       var gb = 0.0
       var r = 0
       while (r < n) {
-        val (v, y) = labeled(r)
+        val v = xs(r)
         var z = b
         var i = 0
         while (i < d) { z += v(i).toDouble * w(i); i += 1 }
         val p = 1.0 / (1.0 + math.exp(-z))
-        val g = p - y
+        val g = p - ys(r)
         i = 0
         while (i < d) { gw(i) += g * v(i).toDouble; i += 1 }
         gb += g
@@ -159,29 +165,41 @@ object QualityClassifier {
                dim: Int = 64): DataFrame =
     score(docs, trainedModel(spark, docs, dir, dim), dim)
 
-  /** Memoized trained model — the quantizerOracleMemo pattern:
-    * deterministic training means any rebuild is bit-identical, the
-    * memo only saves the sample job. The key includes the analyzed
-    * plan's semanticHash of `docs` (r19, the LangIdModel advice
-    * applied to its template): a filtered slice or a rewritten table
-    * under the same dir trains its own model instead of silently
-    * scoring against the first call's. */
-  @volatile private var modelMemo:
-      ((SparkSession, String, Int, Int), LogitModel) = null
+  /** Memoized trained model: deterministic training means any rebuild
+    * is bit-identical, the memo only saves the sample job. The key
+    * includes the analyzed plan's semanticHash of `docs` (r19): a
+    * filtered slice or a rewritten table under the same dir trains
+    * its own model instead of silently scoring against the first
+    * call's. */
+  private val modelMemo = new SessionMemo[(String, Int, Int), LogitModel]
 
   def trainedModel(spark: SparkSession, docs: DataFrame, dir: String,
-                   dim: Int = 64): LogitModel = {
-    val key = (spark, dir, dim, docs.queryExecution.analyzed.semanticHash())
-    val memo = modelMemo
-    if (memo != null && memo._1 == key) memo._2
-    else {
-      val m = train(docs, dim)
-      modelMemo = (key, m)
-      m
-    }
-  }
+                   dim: Int = 64): LogitModel =
+    modelMemo(spark, (dir, dim, docs.queryExecution.analyzed.semanticHash()))(
+      train(docs, dim))
 
   /** Test hook: drop the model memo (for suites that rewrite a table
     * dir within one session). */
-  private[graft] def invalidate(): Unit = modelMemo = null
+  private[graft] def invalidate(): Unit = modelMemo.clear()
+}
+
+/** Per-session memo of trained models ([[QualityClassifier]],
+  * [[LangIdModel]]). Sessions are WEAK keys, so a stopped session's
+  * models unpin with it, and a session's map clears past `cap`
+  * entries, so a long-lived JVM scoring many distinct plan shapes
+  * re-trains (deterministic, bit-identical) instead of accumulating
+  * models forever. */
+private[operators] final class SessionMemo[K, V](cap: Int = 32) {
+  private val bySession = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[K, V]]()
+
+  def apply(spark: SparkSession, key: K)(build: => V): V = {
+    // WeakHashMap is not thread-safe: outer access synchronizes on it
+    val inner = bySession.synchronized(bySession.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap[K, V]()))
+    if (inner.size > cap) inner.clear()
+    inner.computeIfAbsent(key, _ => build)
+  }
+
+  def clear(): Unit = bySession.synchronized(bySession.clear())
 }

@@ -324,17 +324,15 @@ object Similarity {
   private[graft] def trainQuantizer(e: DataFrame, nList: Int, iters: Int,
                                     seed: Long): Array[Array[Float]] = {
     quantizerTrainings.incrementAndGet()
-    val sample: Array[Array[Float]] = e
-      // zero-norm vectors (empty docs under hashEmbedDocs) cannot be
-      // unit-scaled — a NaN sample row would poison every centroid
-      .filter(col("nrm") > 0)
-      .withColumn("h", xxhash64(col("vec_id"), lit(seed)))
-      .orderBy("h", "vec_id").limit(nList * 256)
-      .select(col("v"), col("nrm")).collect()
-      .map { r =>
-        val n = r.getDouble(1)
-        r.getSeq[Float](0).map(x => (x / n).toFloat).toArray
-      }
+    // zero-norm vectors (empty docs under hashEmbedDocs) cannot be
+    // unit-scaled — a NaN sample row would poison every centroid
+    val sample: Array[Array[Float]] =
+      BoundedFold.sample(e.filter(col("nrm") > 0), "vec_id", nList * 256, seed)
+        .select(col("v"), col("nrm")).collect()
+        .map { r =>
+          val n = r.getDouble(1)
+          r.getSeq[Float](0).map(x => (x / n).toFloat).toArray
+        }
     require(sample.nonEmpty,
       "trainQuantizer: embeddings input is empty — nothing to train on")
     val dim = sample.head.length
@@ -561,12 +559,7 @@ object Similarity {
   def trainPqCodebooks(embeddings: DataFrame, m: Int = 16, kCodes: Int = 32,
                        iters: Int = 5, seed: Long = 42L)
       : Array[Array[Array[Float]]] = {
-    val sample: Array[Array[Float]] = embeddings
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("h", xxhash64(col("vec_id"), lit(seed)))
-      .orderBy("h", "vec_id").limit(kCodes * 256)
-      .select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).toArray)
+    val sample = pqSample(embeddings, kCodes, seed)
     require(sample.nonEmpty,
       "trainPqCodebooks: embeddings input is empty — nothing to train on")
     // widened floats are EXACT doubles, so routing through the shared
@@ -684,21 +677,18 @@ object Similarity {
                           m: Int = 16, kCodes: Int = 32,
                           iters: Int = 5, seed: Long = 42L)
       : Array[Array[Array[Float]]] =
-    ivfPqLloydFromSample(ivfPqSample(embeddings, kCodes, seed), cents,
+    ivfPqLloydFromSample(pqSample(embeddings, kCodes, seed), cents,
       m, kCodes, iters)
 
-  /** The bounded training-sample collect of [[trainIvfPqCodebooks]],
-    * split out so [[annIvfPq]] can overlap it with the coarse
-    * quantizer's own sample job (the two collects are independent —
-    * only the Lloyd step needs the trained centroids; guide §2.6's
-    * overlap-independent-jobs form). Same rows, same order, same
-    * result. */
-  private[graft] def ivfPqSample(embeddings: DataFrame, kCodes: Int,
-                                 seed: Long): Array[Array[Float]] =
-    embeddings
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("h", xxhash64(col("vec_id"), lit(seed)))
-      .orderBy("h", "vec_id").limit(kCodes * 256)
+  /** The bounded training-sample collect of [[trainPqCodebooks]] and
+    * [[trainIvfPqCodebooks]], split out so [[annIvfPq]] can overlap it
+    * with the coarse quantizer's own sample job (the two collects are
+    * independent — only the Lloyd step needs the trained centroids;
+    * guide §2.6's overlap-independent-jobs form). */
+  private[graft] def pqSample(embeddings: DataFrame, kCodes: Int,
+                              seed: Long): Array[Array[Float]] =
+    BoundedFold.sample(embeddings.select(col("vec_id"), col("embedding")),
+      "vec_id", kCodes * 256, seed)
       .select(col("embedding")).collect()
       .map(_.getSeq[Float](0).toArray)
 
@@ -870,7 +860,7 @@ object Similarity {
       trainQuantizer(withNorm(embeddings), nList, iters, seed))))
     val cbSampleF =
       if (codebooks.isDefined) Future.successful(Array.empty[Array[Float]])
-      else Future(blocking(ivfPqSample(embeddings, kCodes, seed)))
+      else Future(blocking(pqSample(embeddings, kCodes, seed)))
     val qvecsF = Future(blocking(embeddings.filter(col("vec_id") < nQueries)
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))))

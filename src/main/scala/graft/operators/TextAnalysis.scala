@@ -1741,10 +1741,9 @@ object TextAnalysis {
     * scoring row produces was counted by this model's own rawFreq
     * over the same docs.
     *
-    * NOTE eager construction (laziness break, same contract as
-    * [[graft.operators.Dedup.sourceOverlap]]): a docs/target table
-    * mutating between build and execution uses the stale model;
-    * rebuild to re-snapshot. */
+    * Construction-time pull (the [[BoundedFold]] laziness break) of
+    * at most `nBuckets` rows, collected without a `limit` so it stays
+    * one plain job. */
   private def dsirLlrScaled(docs: DataFrame, target: DataFrame,
                             nBuckets: Int, bucketsOf: Column => Column,
                             logOf: Column => Column): Array[Long] = {
@@ -2091,10 +2090,9 @@ object TextAnalysis {
     // Bounds collected and folded as a literal map (r21, see
     // [[saltBoundFilter]]): source-cardinality rows, and the former
     // broadcast build was a whole extra job in front of the window.
-    val bounds = sampleSaltBounds(docs, perSource).collect()
     docs
       .select(col("doc_id"), col("source"), sampleSalt.as("sample_key"))
-      .filter(saltBoundFilter(bounds, col("source")))
+      .filter(saltBoundFilter(sampleSaltBounds(docs, perSource), col("source")))
       .withColumn("sample_rank", row_number().over(w).cast("long"))
       .filter(col("sample_rank") <= perSource)
       .select(col("doc_id"), col("source"), col("sample_rank"))
@@ -2168,24 +2166,21 @@ object TextAnalysis {
   }
 
   /** The refined rank window's prefilter with the (key, salt_bound)
-    * rows folded in as a LITERAL map — replaces the former
+    * rows collected and folded in as a LITERAL map
+    * ([[BoundedFold.literalMap]]) — replaces the former
     * `left join broadcast(bounds)` + `salt_bound.isNull || key <
     * salt_bound` pair with the exact same semantics: a key absent
     * from the map (an under-quota stratum, or a null key the join
     * could never match) keeps all its rows via try_element_at's null,
     * identical to the join's null salt_bound. Bounds cardinality is
     * the stratum-key cardinality (quota buckets / sources / langs) —
-    * the same bounded-literal class as the sourceOverlap totals. A
-    * null-key bound row is dropped before the fold: a map literal
-    * rejects a null key, and the join it replaces never matched one,
-    * so null-key rows keep all their rows either way. */
-  private def saltBoundFilter(bounds: Array[org.apache.spark.sql.Row],
-                              key: Column): Column = {
-    val keyed = bounds.filterNot(_.isNullAt(0))
-    if (keyed.isEmpty) lit(true)
+    * the same bounded-literal class as the sourceOverlap totals. */
+  private def saltBoundFilter(bounds: DataFrame, key: Column): Column = {
+    val rows = bounds.collect()
+    if (rows.forall(_.isNullAt(0))) lit(true)
     else {
-      val m = map(keyed.flatMap(r =>
-        Seq(lit(r.get(0)), lit(r.getLong(1)))).toSeq: _*)
+      val m = BoundedFold.literalMap(rows.map(r => r.get(0) -> r.get(1)),
+        bounds.schema(0).dataType, bounds.schema(1).dataType)
       try_element_at(m, key).isNull || col("sample_key") < try_element_at(m, key)
     }
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.{BoundedFold, Dedup, TextAnalysis}
 import graft.sources.Bucketed
 
 /** Configuration of the OPTIONAL streaming near-dup membership store
@@ -817,17 +817,16 @@ object CorpusIngest {
   private val CheckCollectCap = 1 << 20
 
   /** Eagerly materialize a check query's membership under
-    * [[CheckCollectCap]] — limit(cap+1) so the violation is detected
-    * from cap+1 collected rows, never by materializing the full
-    * oversized result first. */
-  private def collectBounded(membership: DataFrame, what: String)
-      : java.util.List[org.apache.spark.sql.Row] = {
-    val rows = membership.limit(CheckCollectCap + 1).collect()
-    require(rows.length <= CheckCollectCap,
-      s"$what: admitted membership exceeds the contract-query bound " +
-        s"of $CheckCollectCap rows — this check is defined on " +
-        "gate-sized test tables, not production corpora; pass a " +
-        "bounded slice")
+    * [[CheckCollectCap]] ([[BoundedFold.within]]: the violation is
+    * detected from cap+1 collected rows, never by materializing the
+    * full oversized result first). */
+  private def collectBounded(membership: DataFrame, what: String): java.util.List[Row] = {
+    val rows = BoundedFold.within(membership, CheckCollectCap)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$what: admitted membership exceeds the contract-query bound " +
+          s"of $CheckCollectCap rows — this check is defined on " +
+          "gate-sized test tables, not production corpora; pass a " +
+          "bounded slice"))
     java.util.Arrays.asList(rows: _*)
   }
 

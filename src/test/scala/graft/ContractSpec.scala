@@ -2,7 +2,10 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.Tables
 
 /** Locks the driver contract's internal consistency: every oracle has
   * a query, and every query without an oracle is on the DOCUMENTED
@@ -127,5 +130,74 @@ class ContractSpec extends AnyFunSuite {
         java.nio.file.Paths.get(p)), "UTF-8").contains("SparkSession.builder("))
       .toSeq
     assert(builders.isEmpty, s"build the session through GraftSession.builder: $builders")
+  }
+
+  test("only BoundedFold holds the bound+1 probe and the seeded-sample recipes") {
+    // a construction-time driver pull goes through one module, so its
+    // bound clamp, ordering and null-key rule live in one place
+    val limitCollect = raw"\.limit\(((?:[^()]|\([^()]*\))*)\)\s*\.collect\(\)".r
+    val seeded = raw"xxhash64\(col\([^)]*\),\s*lit\(seed\)\)".r
+    val offenders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator.asScala.map(_.toString)
+      .filter(p => p.endsWith(".scala") && !p.endsWith("/operators/BoundedFold.scala"))
+      .filter { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(p)), "UTF-8")
+        limitCollect.findAllMatchIn(src).exists(_.group(1).matches(raw"(?s).*\+\s*1\b.*")) ||
+          seeded.findFirstIn(src).isDefined
+      }.toSeq
+    assert(offenders.isEmpty, s"pull through graft.operators.BoundedFold: $offenders")
+  }
+
+  test("building a query runs only the pinned construction-time jobs") {
+    // Jobs fired while each declared query's DataFrame is BUILT (no
+    // action runs), at sf0.001, with the trained-model memos cleared
+    // so every build trains. The keys are the queries whose
+    // construction runs jobs; each value is the job count measured
+    // when this lock was set (the maximum of three runs), an upper
+    // bound. A new eager pull, or one that runs more jobs, fails here.
+    val eager = Map(
+      "q_ann_ivf" -> 1, "q_ann_ivfpq" -> 3, "q_ann_pq" -> 2,
+      "q_assign_ids" -> 2, "q_bigram_logprob" -> 4,
+      "q_bloom_membership_check" -> 4, "q_cluster_embed" -> 1,
+      "q_cluster_stats" -> 1, "q_corpus_ingest_check" -> 35,
+      "q_curate" -> 34, "q_curate_manifest" -> 39,
+      "q_curate_semantic" -> 24, "q_dedup_clusters" -> 10,
+      "q_dsir_select" -> 4, "q_importance_weights_ng" -> 4,
+      "q_lang_id_model" -> 2, "q_lang_id_model_cn" -> 2,
+      "q_mix_cluster" -> 1, "q_ml_feature_prep" -> 2,
+      "q_neardup_store_check" -> 93, "q_quality_classifier" -> 6,
+      "q_recent_window" -> 2, "q_semantic_decontaminate" -> 1,
+      "q_semdedup" -> 1, "q_shard_plan" -> 2, "q_source_overlap" -> 6,
+      "q_stratified_sample" -> 3, "q_train_bpe" -> 2)
+    val spark = TestSession.spark
+    val dir = TestSession.sfDir
+    // a table's first read in a JVM runs a parquet schema job that
+    // belongs to whichever query reads it first: resolve them all here
+    Seq(Tables.region _, Tables.nation _, Tables.customer _, Tables.supplier _,
+      Tables.part _, Tables.orders _, Tables.lineitem _, Tables.documents _,
+      Tables.embeddings _, Tables.events _).foreach(_(spark, dir))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val counts = try SparkEntry.queries.keys.toSeq.sorted.map { name =>
+      graft.operators.QualityClassifier.invalidate()
+      graft.operators.LangIdModel.invalidate()
+      Bridge.drainListenerBus(spark)
+      jobs.set(0)
+      SparkEntry.queries(name)(spark, dir)
+      Bridge.drainListenerBus(spark)
+      graft.operators.Caches.releaseAll()
+      name -> jobs.get
+    }.filter(_._2 > 0).toMap
+    finally spark.sparkContext.removeSparkListener(listener)
+    assert(counts.keySet == eager.keySet,
+      s"new eager queries: ${counts.keySet -- eager.keySet}; " +
+        s"no longer eager: ${eager.keySet -- counts.keySet}")
+    val over = counts.filter { case (name, n) => n > eager(name) }
+    assert(over.isEmpty, s"construction jobs over their pinned bound: $over")
   }
 }

@@ -110,6 +110,42 @@ class EdgeCaseSpec extends AnyFunSuite {
     Caches.releaseAll()
   }
 
+  test("decontaminate counts a shingle once per doc_id when the doc_id repeats") {
+    import spark.implicits._
+    // both doc-1 rows hold the benchmark shingles {alpha beta gamma,
+    // beta gamma delta, gamma delta epsilon}; the second adds {delta
+    // epsilon zeta}. The oracle counts DISTINCT shared shingles per
+    // doc_id (4), not per row (3 + 4 = 7), and keeps both rows.
+    val corpus = Seq(
+      (1L, "alpha beta gamma delta epsilon"),
+      (1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "alpha beta gamma delta unrelated words"))
+      .toDF("doc_id", "text")
+    val bench = Seq("alpha beta gamma delta epsilon zeta").toDF("text")
+    val out = Dedup.decontaminate(corpus, bench).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(out == Seq((1L, 4L, 1L), (1L, 4L, 1L), (2L, 2L, 0L)))
+    Caches.releaseAll()
+  }
+
+  test("BoundedFold: the probe bound, the null-key rule and the key order") {
+    import org.apache.spark.sql.functions.{col, map_keys}
+    import org.apache.spark.sql.types.{IntegerType, StringType}
+    assert(BoundedFold.within(spark.range(3), 3).map(_.length) == Some(3))
+    assert(BoundedFold.within(spark.range(4), 3).isEmpty)
+    assert(BoundedFold.within(spark.range(0), Long.MaxValue).map(_.length) == Some(0))
+    // keys sort by UTF-8 bytes (code points): U+E000 < U+FF21 <
+    // U+1D400, where a String sort (UTF-16 units) puts U+1D400 first
+    val m = BoundedFold.literalMap(Seq[(String, Int)]("\uD835\uDC00" -> 3, (null, 9),
+      "\uFF21" -> 2, "\uE000" -> 1), StringType, IntegerType)
+    val keys = spark.range(1).select(map_keys(m)).head().getSeq[String](0)
+    assert(keys == Seq("\uE000", "\uFF21", "\uD835\uDC00"))
+    val empty = BoundedFold.literalMap(Nil, StringType, IntegerType)
+    assert(spark.range(1).select(empty.as("m")).schema("m").dataType.simpleString ==
+      "map<string,int>")
+    assert(spark.range(1).select(empty(col("id").cast("string"))).head().isNullAt(0))
+  }
+
   test("annIvf refuses an empty corpus with a clear message") {
     val ex = intercept[IllegalArgumentException] {
       Similarity.annIvf(noEmb).count()

@@ -618,6 +618,32 @@ class SimilaritySpec extends AnyFunSuite {
     graft.operators.Caches.releaseAll()
   }
 
+  test("sourceOverlap: pairs in code-point order on both arms, a null source contributes nothing") {
+    import spark.implicits._
+    // DuckDB orients a pair by `a.source < b.source` over UTF-8 bytes,
+    // i.e. code points: U+E000 < U+FF21 < U+1D400. A UTF-16 String
+    // sort would put the surrogate pair of U+1D400 (0xD835) first.
+    val (pua, wide, bold) = ("\uE000", "\uFF21", "\uD835\uDC00")
+    val docs = Seq[(Long, String, String)](
+      (1L, pua, "one two three four"),         // {123, 234}
+      (2L, wide, "two three four five"),       // {234, 345}
+      (3L, bold, "one two three four five"),   // {123, 234, 345}
+      // shares three shingles and holds one ({456}) no source holds
+      (4L, null, "one two three four five six"))
+      .toDF("doc_id", "source", "text")
+    val expected = Seq(
+      (pua, wide, 1L, 2L, 2L, 0.5),   // {234}
+      (pua, bold, 2L, 2L, 3L, 1.0),   // {123, 234}
+      (wide, bold, 2L, 2L, 3L, 1.0))  // {234, 345}
+    Seq(20, -1).foreach { foldMaxK =>
+      val out = Dedup.sourceOverlap(docs, driverFoldMaxK = foldMaxK).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getDouble(5))).toSeq
+      assert(out == expected, s"driverFoldMaxK=$foldMaxK")
+    }
+    graft.operators.Caches.releaseAll()
+  }
+
   test("semanticDecontaminate: argmax cosine with rounded-tie determinism and zero-norm guard") {
     import spark.implicits._
     val benchmark = Seq(
