@@ -1,16 +1,23 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
-import graft.monitoring.PerformanceTracker
+import graft.monitoring.{PerformanceTracker, PlanMetrics}
+import graft.monitoring.PerformanceTracker.Run
+import graft.operators.{Dedup, Similarity, TimeSeries}
+import graft.sources.{ScaledCorpus, Tables}
 
 /** Benchmark surface: times every SparkEntry query at the SF dir from
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. A warmup action runs
-  * first so JVM/codegen/parquet-reader initialization is not billed to
-  * whichever query happens to run first.
+  * first, and every table of the SF dir is resolved, so JVM/codegen/
+  * parquet-reader initialization is not billed to whichever query
+  * happens to run first.
   *
   * Each query runs three times and reports the fastest run —
   * steady-state throughput, the TPC convention. The passes are
@@ -18,15 +25,20 @@ import graft.monitoring.PerformanceTracker
   * back-to-back repeats of each query: a transient stall on a shared
   * machine (co-tenant CPU burst, page-cache eviction) then lands in
   * one pass and the min recovers, where back-to-back samples would
-  * both absorb it — exactly the round-2 artifact where an
-  * alphabetically contiguous window of queries reported 3-10× their
-  * reproducible times. The first execution of a query additionally
-  * pays one-time Catalyst planning + whole-stage-codegen javac
-  * compilation (~0.3–2 s, independent of data size — profiled with
-  * graft.Profile); that cost is amortized away in any real deployment
-  * and is excluded the same way the pandas baseline excludes
-  * interpreter startup and imports. The sum of first-pass runs is
-  * still reported as `cold_total`.
+  * both absorb it (an alphabetically contiguous window of queries once
+  * reported 3-10× their reproducible times). The first execution of a
+  * query additionally pays one-time Catalyst planning + whole-stage-
+  * codegen javac compilation (~0.3–2 s, independent of data size —
+  * profiled with graft.Profile); that cost is amortized away in any
+  * real deployment and is excluded the same way the pandas baseline
+  * excludes interpreter startup and imports. The sum of first-pass
+  * runs is still reported as `cold_total`.
+  *
+  * Every run is measured by [[graft.monitoring.PerformanceTracker]]:
+  * `exec_times` is the Spark-measured execution duration of a query's
+  * actions (summed per run, min across passes) — the executed-plan
+  * cost with this harness's plan-construction overhead excluded — and
+  * `jobs` the number of Spark jobs its min-wall run fired.
   *
   * SCALING-SLOPE PROBE: after the primary passes the suite re-runs at
   * one SF step down (sf0.1 → sf0.01 → sf0.001) and the JSON line
@@ -34,61 +46,52 @@ import graft.monitoring.PerformanceTracker
   * steady-state mins. The step is 10× the data, so a ratio near 1
   * means the query is still fixed-overhead-bound at this scale, a
   * ratio up to ~10 is at-most-linear marginal cost, and a ratio well
-  * past the data ratio flags superlinear work — the measured form of
-  * the "would this survive 100×?" question, and self-diagnosing under
-  * driver-machine stalls (a stall inflates ABSOLUTE times on both
-  * SFs but leaves the ratios near their reproducible values).
-  *
-  * Each query also reports `exec_times`: the Spark-measured execution
-  * duration of its actions (QueryExecutionListener, summed per run,
-  * min across passes) — the executed-plan cost with this harness's
-  * plan-construction overhead excluded, mirroring the per-operation
-  * timing summary the reference's performance monitor logs.
+  * past the data ratio flags superlinear work. Two up-step windows
+  * (`slope2_*`, `slope3_*`) time the heavy queries on 10× and 100×
+  * synthetic corpora the same way.
   *
   * LOAD-IMMUNITY PROBE: `load` carries a /proc/loadavg timeline
   * sampled at every pass start/third boundary, `floor_sentinel` the
-  * re-timed fixed cheap query whose max/min `drift` reads ~1 on a
-  * quiet box and the inflation factor under co-tenant load, and
-  * `repassed` the queries that earned extra timing passes — the 16
-  * slowest ALWAYS (uniform min-of-5 refinement on the heavy tail;
-  * 4th/5th samples run ~1.5x warmer there, see the inline r12 A/B),
-  * plus any query flagged by a wall-vs-exec-floor gap, a 2x blowout
-  * vs the committed quiet baseline (`bench_quiet.json`, falling back
-  * to the previous round's `bench_detail.json`), or — the round-10
-  * lesson — the
-  * round's OWN load evidence (sentinel drift > 1.8, PRE-suite 1m
-  * loadavg > cpus/8, or mid-run loadavg > cpus/2 — mid-run samples
-  * self-inflate to ~0.3x cpus on an idle box, so only the pre-suite
-  * sample gets the tight threshold), which repasses the slowest
-  * queries unconditionally: a
-  * SUSTAINED uniform ~1.5x load inflates wall and exec together and
-  * stays under every per-query 2x threshold, so without the load
-  * arm the artifact convicts itself yet still ships inflated
-  * primaries (BENCH_r10: floor_drift 22.4, repassed empty). The
+  * re-timed fixed cheap query whose drift reads ~1 on a quiet box and
+  * the inflation factor under co-tenant load, and `repassed` the
+  * queries that earned extra timing passes — the 16 slowest ALWAYS
+  * (uniform min-of-5 refinement on the heavy tail), plus any query
+  * flagged by a wall-vs-exec-floor gap, a 2x blowout vs the committed
+  * quiet baseline (`bench_quiet.json`), or the run's OWN load evidence
+  * (see [[loadEvidence]]), which repasses the slowest queries
+  * unconditionally: a SUSTAINED uniform ~1.5x load inflates wall and
+  * exec together and stays under every per-query 2x threshold. The
   * primary value is the min across passes AND repasses — so a
   * loaded-box artifact heals itself when a quieter window arrives,
-  * and marks itself double-checked when it doesn't (it happened in
-  * rounds 2, 9 and 10).
+  * and marks itself double-checked when it doesn't.
   *
   * SHUFFLE/SPILL PROBE: `shuffle_bytes` carries each query's measured
   * exchange write volume (executed-plan SQL metrics, see
   * [[graft.monitoring.PlanMetrics]]) and `spill_bytes_total` the
-  * suite-wide sort/agg spill (expected 0 at bench scale). The volume
-  * is that of the plan the bench ACTUALLY times — the `count()` form,
-  * where Catalyst prunes unreferenced columns and eliminates the
-  * terminal presentation sort — so a scan-local projection correctly
-  * reports near-zero and an aggregation/join query reports the bytes
-  * its exchanges really moved. With the slope probe this also emits
-  * `shuffle_ratios` = bytes(primary)/bytes(small) — unlike wall-clock
-  * ratios these are machine-independent, so the data-volume slope
-  * stays readable even through a driver-machine stall, and a query
-  * whose shuffle grows faster than its input is flagged by the
-  * artifact itself. */
+  * suite-wide sort/agg spill (expected 0 at bench scale). With the
+  * slope probe this also emits `shuffle_ratios` = bytes(primary)/
+  * bytes(small) — unlike wall-clock ratios these are
+  * machine-independent, so the data-volume slope stays readable even
+  * through a driver-machine stall. */
 object Bench {
 
-  /** The load-evidence decision, pure so BenchSpec can pin the r12
-    * calibration as executable facts (see the threshold comment at
-    * the call site for the measured populations behind each arm). */
+  type Query = (SparkSession, String) => DataFrame
+
+  /** The load-evidence decision, pure so MonitoringSpec can pin the
+    * idle-box calibration as executable facts:
+    *  - sentinel drift > 1.8 (samples are per-checkpoint MEDIANS of 3,
+    *    so quiet full-suite residue reads well under the loaded
+    *    populations 2.05 / 22.4 while sustained contention still
+    *    inflates every sample);
+    *  - PRE-suite 1m loadavg > max(2, cpus/8): the co-tenant check,
+    *    sampled before any Spark work so the bench cannot convict
+    *    itself (floored at 2.0 — cpus/8 on a 4-cpu box is 0.5 and
+    *    would fire on background noise);
+    *  - mid-run 1m loadavg > max(4, cpus/2): catastrophic-arrival
+    *    backstop, ~1.7x above the measured self-load ceiling (0.3x cpus:
+    *    an idle 32-cpu box read 9.39 mid-run on its own burn) and under
+    *    both observed co-tenant incidents (20.4, 20.42).
+    * A false trigger costs only bounded extra mins, never a wrong value. */
   private[graft] def loadEvidence(drift: Double, pre1m: Double,
                                   mid1mMax: Double, cpus: Int): Boolean =
     drift > 1.8 ||
@@ -97,20 +100,19 @@ object Bench {
 
   /** Sentinel drift as a SUSTAINED-contention statistic: second-max /
     * min of the steady samples (max/min when only two exist). The arm
-    * exists to catch load present across the whole suite (r9/r12
-    * populations: EVERY sample inflated 2.05/22.4×) — a co-tenant
+    * exists to catch load present across the whole suite (EVERY sample
+    * inflated 2.05/22.4× in the loaded populations) — a co-tenant
     * sustained enough to poison the per-query minima inflates every
     * checkpoint, so the second-max reads it just as well as the max.
     * What the max reads and the second-max correctly forgives is the
-    * bench's OWN tail residue: under the r14 honest checksum action
-    * the FINAL suite checkpoint — fired right after the third full
-    * pass — read 0.370/0.418 s against quiet neighbors 0.16–0.25 on
-    * BOTH of two consecutive idle-box runs (pre_1m 0.70/0.77, totals
-    * agreeing within 2%, and the post-repass sample immediately after
-    * back at 0.16–0.21), a deterministic single-point GC/JIT spike
-    * that max/min misread as drift 2.3–2.5 and falsely convicted both
-    * runs. A genuine single-checkpoint arrival is not lost: it
-    * inflates the adjacent queries, which arms (a)/(b) flag per-query. */
+    * bench's OWN tail residue: the FINAL suite checkpoint — fired right
+    * after the third full pass — read 0.370/0.418 s against quiet
+    * neighbors 0.16–0.25 on BOTH of two consecutive idle-box runs
+    * (pre_1m 0.70/0.77, totals agreeing within 2%, and the post-repass
+    * sample immediately after back at 0.16–0.21), a deterministic
+    * single-point GC/JIT spike that max/min misread as drift 2.3–2.5.
+    * A genuine single-checkpoint arrival is not lost: it inflates the
+    * adjacent queries, which arms (a)/(b) flag per-query. */
   private[graft] def sustainedDrift(steady: Seq[Double]): Double =
     if (steady.size < 2) 1.0
     else {
@@ -124,10 +126,10 @@ object Bench {
     * step's ceiling while the BYTE step stays well under it is a
     * clock/bytes contradiction — the plan moved ~linear bytes but the
     * wall says superlinear — i.e. a measurement artifact to repass,
-    * not a plan property (BENCH_r12's loaded-box hash_embed read wall
-    * 123x on a 3.3x byte step; the quiet re-measure read 3.24x). A
-    * genuine byte blowup (minhash's one-time broadcast→SMJ jump:
-    * bytes 7952x) keeps its wall ratio untouched. */
+    * not a plan property (a loaded-box hash_embed read wall 123x on a
+    * 3.3x byte step; the quiet re-measure read 3.24x). A genuine byte
+    * blowup (minhash's one-time broadcast→SMJ jump: bytes 7952x) keeps
+    * its wall ratio untouched. */
   private[graft] def wallAnomaly(wallRatio: Double, byteRatio: Double,
                                  maxRatio: Double): Boolean =
     wallRatio > maxRatio && byteRatio <= maxRatio * 0.6
@@ -136,25 +138,22 @@ object Bench {
     * queries rank by quiet-baseline deviation (steady / committed
     * baseline; slowest first breaks ties): the per-query arms (a)/(b)
     * first, then arm (d) — queries past 1.3x their baseline — then the
-    * load arm (c), which flags every ok query on a loaded round. The
+    * load arm (c), which flags every ok query on a loaded run. The
     * first 16 form the arm base.
     *
-    * r19 (the BENCH_r18 residual, verdict item 6): repass RUNS are a
-    * budget allocated by DEVIATION RANK with a 1-run floor, replacing
-    * the fixed-cardinality reserve whose overflow truncated the tail
-    * on every burst-regime round (r17: 20 unrepassed; r18: 16 even at
-    * budget 48). The core set — the 16-slot arm base plus the whole
-    * refinement tail — keeps its TWO extra runs (the min-of-5 warmth
-    * contract); every remaining arm-(d) deviator then gets ONE run in
-    * deviation order while the run budget lasts, and leftover budget
-    * upgrades the highest-deviation tail members back to two. A board
-    * so flooded that even the 1-run floor exhausts cuts the lowest
-    * deviators and publishes the LOWEST FUNDED deviation as
-    * `suspect_cutoff` — every unrepassed suspect is then provably at
-    * or below the published cutoff (the adjudicable-degradation
-    * contract). Budget 96 runs ≈ the r18 worst case (48 suspects × 2),
-    * but it now covers up to ~28 core + 40 floor suspects ≈ 68 — more
-    * than any observed board — before cutting anything. */
+    * Repass RUNS are a budget allocated by DEVIATION RANK with a 1-run
+    * floor, so a burst-regime board degrades by rank instead of
+    * truncating its tail at a fixed reserve. The core set — the 16-slot
+    * arm base plus the whole refinement tail — keeps its TWO extra runs
+    * (the min-of-5 warmth contract); every remaining arm-(d) deviator
+    * then gets ONE run in deviation order while the run budget lasts,
+    * and leftover budget upgrades the highest-deviation tail members
+    * back to two. A board so flooded that even the 1-run floor
+    * exhausts cuts the lowest deviators and publishes the LOWEST FUNDED
+    * deviation as `suspect_cutoff` — every unrepassed suspect is then
+    * provably at or below the published cutoff. Budget 96 runs covers
+    * up to ~28 core + 40 floor suspects ≈ 68 — more than any observed
+    * board — before cutting anything. */
   private[graft] val RepassRunBudget = 96
   private[graft] def allocateRepasses(armAB: Seq[String], armC: Seq[String],
                                       refine: Seq[String],
@@ -177,10 +176,10 @@ object Bench {
     val cutoff =
       if (funded.size < tail.size)
         // lowest FUNDED deviation, or — when the 1-run floor itself
-        // funded nothing (r19 advice: reachable if core ever grows to
-        // runBudget/2) — the HIGHEST tail deviation, so "every
-        // unrepassed suspect is at or below the cutoff" stays true in
-        // both regimes instead of silently publishing null
+        // funded nothing (reachable if core ever grows to runBudget/2)
+        // — the HIGHEST tail deviation, so "every unrepassed suspect is
+        // at or below the cutoff" stays true in both regimes instead of
+        // silently publishing null
         funded.lastOption.orElse(tail.headOption)
           .map(k => deviationOf.getOrElse(k, 0.0))
       else None
@@ -196,133 +195,165 @@ object Bench {
     }
 
   /** The 1/5/15-minute load averages; empty when unreadable. */
-  private def loadavg(): Seq[String] =
-    orWarn("/proc/loadavg unreadable", Seq.empty[String]) {
+  private def loadavg(): Seq[Double] =
+    orWarn("/proc/loadavg unreadable", Seq.empty[Double]) {
       val f = scala.io.Source.fromFile("/proc/loadavg")
-      try f.mkString.trim.split("\\s+").take(3).toSeq finally f.close()
+      try f.mkString.trim.split("\\s+").take(3).map(_.toDouble).toSeq finally f.close()
     }
+
+  /** The 1-minute load average, or -1.0 when unreadable: a VISIBLE
+    * sentinel — the co-tenant arm still fails open (-1.0 never exceeds
+    * its threshold), but the artifact's load.pre_1m then distinguishes
+    * "arm disabled" from "genuinely idle box". */
+  private[graft] def load1m(): Double = loadavg().headOption.getOrElse(-1.0)
 
   /** Key under which a slope window's WALL-TIME maps publish (the
     * ratio maps AND the raw per-query seconds): a CONVICTED window
     * (sustained sentinel contention, or suite-level load) renames the
     * key with a `_loaded` suffix, so a reader scanning the artifact
     * for the quiet-name key cannot misquote load samples as
-    * measurements — BENCH_r15 published `slope3_step_ratios` of 10.7
-    * (dedup_minhash) from a self-convicted window, with the conviction
-    * one key away; honest but misquotable. The samples still ship
-    * (under the flagged name) and BYTE ratios are machine-independent,
-    * so they never rename. */
+    * measurements (a self-convicted window once published a 10.7
+    * dedup_minhash step ratio under the quiet name, its conviction one
+    * key away). The samples still ship (under the flagged name) and
+    * BYTE ratios are machine-independent, so they never rename. */
   private[graft] def ratioKey(base: String, convicted: Boolean): String =
     if (convicted) base + "_loaded" else base
 
   /** One SF step down from `sfDir` for the slope probe; None when
     * already at the smallest step (or an unrecognized layout). */
   private def slopeDirFor(sfDir: String): Option[String] =
-    sys.env.get("SPARK_GRAFT_SLOPE_DIR").filter(_.nonEmpty)
-      .orElse(sfDir.replaceAll("/+$", "") match {
-        case d if d.endsWith("sf0.1")  => Some(d.stripSuffix("0.1") + "0.01")
-        case d if d.endsWith("sf0.01") => Some(d.stripSuffix("0.01") + "0.001")
-        case _ => None
-      })
-      .filter(_ != sfDir)
-      .filter(d => new java.io.File(d).isDirectory)
+    (sfDir.replaceAll("/+$", "") match {
+      case d if d.endsWith("sf0.1")  => Some(d.stripSuffix("0.1") + "0.01")
+      case d if d.endsWith("sf0.01") => Some(d.stripSuffix("0.01") + "0.001")
+      case _ => None
+    }).filter(d => new java.io.File(d).isDirectory)
 
-  def main(args: Array[String]): Unit = {
-    // pre-suite loadavg, read before ANY Spark work: the only loadavg
-    // sample guaranteed free of the bench's own burn. Mid-run 1m
-    // loadavg on a VERIFIED-idle 32-cpu box reaches 9.39 during the
-    // full suite (r12 calibration — local[32] passes + the factor-100
-    // slope corpora ARE the load), so mid-run samples cannot
-    // discriminate a co-tenant below ~cpus/3; this one can.
-    // On read failure the sample records -1.0, a VISIBLE sentinel: the
-    // co-tenant arm still fails open (-1.0 never exceeds the
-    // threshold), but the artifact's load.pre_1m then distinguishes
-    // "arm disabled, /proc/loadavg unreadable" from "genuinely idle
-    // box" — a 0.0 fallback conflated the two.
-    val preLoad1m: Double = loadavg().headOption.fold(-1.0)(_.toDouble)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.get()
+  /** One query's measurement across its timed runs: the first run's
+    * wall (`cold`), the min wall and the job count of that min-wall
+    * run, the min exec time, whether every run succeeded, and the
+    * shuffle volume. */
+  private final case class Timed(name: String, cold: Double, wall: Double, jobs: Int,
+                                 exec: Double, ok: Boolean, shuffle: PlanMetrics.ShuffleStats) {
+    def bytes: Long = shuffle.bytesWritten
+
+    /** The same measurement with `extra` runs folded into its mins. */
+    def refine(extra: Seq[Run]): Timed = {
+      val best = extra.minBy(_.wallS)
+      val e = math.min(exec, extra.map(_.execS).min)
+      if (best.wallS < wall) copy(wall = best.wallS, jobs = best.jobs, exec = e)
+      else copy(exec = e)
+    }
+  }
+
+  private object Timed {
+    def of(name: String, runs: Seq[Run]): Timed = {
+      val best = runs.minBy(_.wallS)
+      // shuffle volume is a property of the data, not the run: take the
+      // max so a run that short-circuits on an error cannot underreport.
+      // Spill is transient memory pressure that can land in any run,
+      // including one with fewer bytes, so its max is taken on its own
+      val shuffle = runs.map(_.shuffle).maxBy(_.bytesWritten)
+        .copy(spillBytes = runs.map(_.shuffle.spillBytes).max)
+      Timed(name, runs.head.wallS, best.wallS, best.jobs, runs.map(_.execS).min,
+        runs.forall(_.ok), shuffle)
+    }
+  }
+
+  /** Add-one smoothed byte ratio: 0/0 reads 1.0 (flat), and bytes
+    * appearing only at the larger scale read as the byte count itself
+    * — still a flag, never a sentinel. */
+  private def byteRatio(big: Long, small: Long): Double = (big + 1).toDouble / (small + 1)
+
+  private def jobj(res: Seq[Timed])(f: Timed => JValue): JObject =
+    JObject(res.map(r => r.name -> f(r)).toList)
+
+  private def jstrs(ks: Seq[String]): JArray = JArray(ks.map(JString(_)).toList)
+
+  private def jstats(n: Long, max: Long, candPairs: Long): JObject =
+    JObject("n" -> JLong(n), "max" -> JLong(max), "cand_pairs" -> JLong(candPairs))
+
+  // Composition-pin entries EXCLUDED from the timed suite (visible in
+  // the JSON as `bench_excluded`, never silent): q_curate* re-run
+  // operators this suite already times individually (~9 s/pass at
+  // sf0.1) and are measured separately in BASELINE.md's end-to-end
+  // table; q_corpus_ingest_check and q_neardup_store_check REPLAY
+  // batches through a throwaway on-disk store (~16 s of store DDL at
+  // sf0.1) — correctness contracts whose wall is temp-store writes,
+  // not an operator. Timing them would double-count member stages.
+  private val composedPins =
+    Set("q_curate", "q_curate_manifest", "q_curate_semantic",
+      "q_corpus_ingest_check", "q_neardup_store_check")
+
+  // First up-step window (10x synthetic ScaledCorpus: token-bijective
+  // document copies, user-offset event copies, sign-flip-decorrelated
+  // embedding copies — linear by construction). Heavy queries of every
+  // table family whose per-row work is independent of corpus size.
+  // Deliberately absent, because their pair or benchmark space grows
+  // quadratically BY SEMANTICS on a synthetic corpus that copies the
+  // benchmark slice too: q_contamination_report and
+  // q_semantic_decontaminate (corpus x benchmark = 100x per decade;
+  // ScaleSpec measures their fixed-benchmark deployment shape), the
+  // pair-forming LSH ops and q_semdedup (fixed plane/band params and
+  // fixed k — production scales them with the corpus; see BUILD_NOTES
+  // and the semDedup scaladoc). Wordcount-shaped and scan-local ops are
+  // covered by the members below.
+  private val slope2Keys = Set("q_ngram_jaccard", "q_dedup_minhash",
+    "q_source_overlap", "q_bigram_logprob", "q_dedup_lines",
+    "q_mix_quality", "q_dedup_clusters", "q_decontaminate_fuzzy",
+    "q_dedup_spans", "q_hash_embed",
+    "q_feature_pipeline", "q_sessionize", "q_dedup_key",
+    "q_tfidf_topk", "q_shard_plan",
+    "q_quality_classifier", "q_bloom_membership_check",
+    "q_importance_weights", "q_importance_weights_ng",
+    "q_dsir_select", "q_lang_id_model",
+    "q_cluster_embed", "q_mix_cluster", "q_ann_pq",
+    "q_ann_ivfpq", "q_lang_id_model_cn")
+
+  // Second up-step window (100x): the heaviest representative of each
+  // table family. q_semdedup stays out by the fixed-k caveat and is
+  // represented by its 100x cluster-skew stats instead.
+  private val slope3Keys = Set("q_source_overlap", "q_dedup_minhash",
+    "q_feature_pipeline", "q_hash_embed", "q_mix_cluster",
+    "q_dsir_select", "q_ann_pq")
+
+  /** Times `queries` (composition pins excluded) at `sfDir` and returns
+    * the compact `total` line and the `total_full` detail line. The
+    * session stays open. `preLoad1m` is the 1-minute load average read
+    * before the session was built (see [[loadEvidence]]). */
+  def run(spark: SparkSession, sfDir: String, queries: Map[String, Query],
+          preLoad1m: Double): (String, String) = {
     val tracker = PerformanceTracker.install(spark)
+    try measureAll(spark, sfDir, queries, preLoad1m, tracker)
+    finally PerformanceTracker.uninstall(spark, tracker)
+  }
 
-    // warmup: JIT + codegen + shuffle machinery on the smallest SF;
-    // drain its listener events so they are not attributed to the
-    // alphabetically-first query's delta
+  private def measureAll(spark: SparkSession, sfDir: String, queries: Map[String, Query],
+                         preLoad1m: Double, tracker: PerformanceTracker): (String, String) = {
+    // warmup: JIT + codegen + shuffle machinery on the smallest SF, and
+    // every primary table resolved (a table's first read in a JVM runs
+    // a parquet schema job that pass 0 would charge to the first query
+    // reading it); drained so no event of theirs reaches a query's run
     orWarn("warmup failed", 0L)(SparkEntry.entry(spark).count())
+    orWarn("tables not resolved", ())(Tables.all(spark, sfDir))
     Bridge.drainListenerBus(spark)
 
-    // CHECKSUM ACTION: graft.Checksum.fullEval — xxhash64 over every
-    // output column + a terminal BIT_XOR aggregate (the r13
-    // measurement-honesty correction, r14-fixed: the original
-    // sum(xxhash64) deterministically overflowed under Spark 4's
-    // default ANSI mode and failed 96/104 queries in BENCH_r13; see
-    // the Scaladoc on [[graft.Checksum]] and ChecksumSpec's pins).
-    //
-    // Failure-demo hook (r14): SPARK_GRAFT_BENCH_BREAK=<query> makes
-    // exactly that query's action throw, so the loud-failure path
-    // (head-of-line failed_count + the one-retry arm below) is
-    // demonstrable end-to-end without editing SparkEntry.
-    val breakKey = sys.env.get("SPARK_GRAFT_BENCH_BREAK")
-
-    // (wall sec, spark-measured exec sec, ok, shuffle stats)
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-             dir: String, name: String = ""): (Double, Double, Boolean, graft.monitoring.PlanMetrics.ShuffleStats) = {
-      val before = tracker.recorded.size
-      val t0 = System.nanoTime()
-      val ok = try {
-        if (name.nonEmpty && breakKey.contains(name))
-          sys.error(s"bench break hook fired for $name")
-        Checksum.fullEval(fn(spark, dir)); true
-      } catch { case NonFatal(e) =>
-        System.err.println(s"[bench] ${if (name.isEmpty) "a sentinel or repass run" else name} failed: $e")
-        false
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
+    // One timed run: the clock covers the query function and the shared
+    // CHECKSUM action (graft.Checksum.fullEval: xxhash64 over every
+    // output column + a terminal BIT_XOR aggregate, so no column is
+    // pruned); the cache drain is outside it.
+    def time(name: String, fn: Query, dir: String): Run = {
+      val run = tracker.measure(spark)(Checksum.fullEval(fn(spark, dir)))
+      run.error.foreach(e => System.err.println(s"[bench] $name failed: $e"))
       // drop operator-internal caches so no query's footprint leaks
-      // into the next measurement (the shared-session pollution fix)
+      // into the next measurement
       graft.operators.Caches.releaseAll()
-      // the listener bus is async: drain it so every action this run
-      // fired (eager queries fire several) has posted its SQL
-      // execution end to the tracker before the delta is read, and no
-      // straggler lands in the NEXT query's delta. Outside the timed
-      // region.
-      Bridge.drainListenerBus(spark)
-      val runOps = tracker.recorded.drop(before).filterNot(_.failed)
-      val exec = runOps.map(_.durationMs).sum / 1e3
-      // total shuffle the run caused, across EVERY action it fired
-      // (eager queries run construction jobs beyond the terminal count)
-      val shuffle = runOps.map(_.shuffle)
-        .foldLeft(graft.monitoring.PlanMetrics.zero)(_ + _)
-      (dt, exec, ok, shuffle)
+      run
     }
 
-    // Composition-pin entries EXCLUDED from the timed suite (visible in
-    // the JSON as `bench_excluded`, never silent): q_curate re-runs
-    // eight operators this suite already times individually (strip,
-    // quality, keep-best, decontam, minhash+clusters, spans, redact,
-    // sample — ~9 s/pass at sf0.1), and its manifest sibling adds the
-    // per-stage counting jobs. They exist to pin the COMPOSITION's
-    // correctness (the driver's Verify/DuckDB gate runs them every
-    // round); timing them here would double-count every member stage
-    // in the suite total without measuring any new operator.
-    // composed/contract pins excluded from the throughput suite:
-    // q_curate* time a whole pipeline (measured separately in
-    // BASELINE.md's end-to-end table); q_corpus_ingest_check REPLAYS
-    // batches through a throwaway on-disk store + catalog DDL — a
-    // correctness contract whose wall is temp-store writes, not an
-    // operator; q_neardup_store_check is the same class (r17 — a
-    // 3-batch band-store replay with two compactions and synthetic
-    // text generation, ~16 s of store DDL at sf0.1 that would have
-    // been a third of the suite total while timing nothing new)
-    val composedPins =
-      Set("q_curate", "q_curate_manifest", "q_curate_semantic",
-        "q_corpus_ingest_check", "q_neardup_store_check")
-
-    def suite(dir: String, passes: Int, only: Option[Set[String]] = None,
-              checkpoint: Option[() => Unit] = None):
-        Seq[(String, Double, Double, Double, Boolean, graft.monitoring.PlanMetrics.ShuffleStats)] = {
-      val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (k, _) => !composedPins.contains(k) }
-        .filter { case (k, _) => only.forall(_.contains(k)) }
+    def suite(dir: String, passes: Int, keys: Set[String] = queries.keySet,
+              checkpoint: () => Unit = () => ()): Seq[Timed] = {
+      val ordered = queries.toSeq.sortBy(_._1)
+        .filter { case (k, _) => keys.contains(k) && !composedPins.contains(k) }
       val n = ordered.size
       // pass-major order: pass 0 = cold, passes 1..n-1 = steady samples;
       // the load/floor checkpoint fires at each pass's start and third
@@ -330,280 +361,149 @@ object Bench {
       // arrival is visible in the artifact's own timeline
       val samples = (0 until passes).map(_ => ordered.zipWithIndex.map {
         case ((k, fn), i) =>
-          if (checkpoint.isDefined &&
-              (i == 0 || i == n / 3 || i == 2 * n / 3)) checkpoint.get.apply()
-          time(fn, dir, k)
+          if (i == 0 || i == n / 3 || i == 2 * n / 3) checkpoint()
+          time(k, fn, dir)
       })
-      checkpoint.foreach(_.apply())
-      ordered.zipWithIndex.map { case ((name, _), qi) =>
-        val runs = samples.map(_(qi))
-        // shuffle volume is a property of the data, not the run — any
-        // pass's stats serve; take the max so a pass that short-circuits
-        // on an error cannot underreport. Spill is NOT: it's transient
-        // memory pressure that can land in any pass, including one with
-        // lower shuffle bytes — aggregate it independently (max across
-        // passes) so the max-bytes pass selection can never drop it
-        val byBytes = runs.map(_._4)
-        val shuffle = byBytes.maxBy(_.bytesWritten)
-          .copy(spillBytes = byBytes.map(_.spillBytes).max)
-        (name, runs.head._1, runs.map(_._1).min, runs.map(_._2).min, runs.forall(_._3), shuffle)
-      }
+      checkpoint()
+      ordered.indices.map(qi => Timed.of(ordered(qi)._1, samples.map(_(qi))))
     }
 
-    // local-iteration escape hatch mirroring Verify's: time a subset
-    // (the driver never sets it, so its artifacts stay exhaustive)
-    val onlyEnv = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-
-    // LOAD-IMMUNITY INSTRUMENTATION: a loaded driver box has twice
-    // manufactured a phantom regression (round 2; BENCH_r09 +58%
-    // steady), and the interleaved-pass min cannot absorb a stall
-    // SUSTAINED across all passes. Three defenses, all visible in the
-    // artifact so a loaded run is identifiable from the JSON alone:
-    //  1. /proc/loadavg + availableProcessors sampled at every pass
-    //     start/third boundary ("load" timeline) — co-tenant load is
-    //     measured, not inferred;
+    // LOAD-IMMUNITY INSTRUMENTATION: a loaded driver box has
+    // manufactured phantom regressions (+58% steady once), and the
+    // interleaved-pass min cannot absorb a stall SUSTAINED across all
+    // passes. Three defenses, all visible in the artifact so a loaded
+    // run is identifiable from the JSON alone:
+    //  1. /proc/loadavg sampled at every pass start/third boundary
+    //     ("load" timeline) — co-tenant load is measured, not inferred;
     //  2. a fixed floor-sentinel query (a dedicated events aggregate,
-    //     NOT a suite member, ~0.15 s quiet) re-timed at checkpoints;
-    //     "floor_drift" = max/min of its samples — a quiet run reads
-    //     ~1, a loaded run reads the inflation factor directly;
-    //  3. per-query auto-repass (below): queries whose steady min
-    //     blows past their own exec-time-implied floor get up to two
-    //     extra timed runs, so a transient stall that survived three
-    //     interleaved passes still gets two more chances to recover.
+    //     ~0.15 s quiet) re-timed at checkpoints; "floor_drift" reads ~1
+    //     on a quiet run and the inflation factor on a loaded one;
+    //  3. per-query auto-repass (below).
     val cpusAvail = Runtime.getRuntime.availableProcessors
-    def loadavgJ(): String = loadavg().mkString("[", ",", "]")
-    // the sentinel is a DEDICATED fixed query, deliberately NOT a
-    // suite member: re-timing a suite query at every checkpoint (plus
-    // the warmups below) would leave its pass-0 sample warm and
-    // silently shrink cold_total round-over-round with no code change
+    // the sentinel is deliberately NOT a suite member: re-timing a
+    // suite query at every checkpoint would leave its pass-0 sample
+    // warm and silently shrink cold_total
     val sentinelName = "sentinel_events_agg"
-    val sentinelFn: Option[(SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      Some((s, d) => graft.sources.Tables.events(s, d).groupBy("user_id").count())
-    val sentinelTimes = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val loadSamples = scala.collection.mutable.ArrayBuffer.empty[String]
+    val sentinel: Query = (s, d) => Tables.events(s, d).groupBy("user_id").count()
+    val sentinelTimes = ArrayBuffer.empty[Double]
+    val loadSamples = ArrayBuffer.empty[Seq[Double]]
     // median of 3 back-to-back runs, not a single sample: sampling
     // fires right after arbitrary suite queries, whose JIT/GC residue
-    // inflates a lone sentinel run ~1.8-2x even on a verified-idle
-    // box (r12 calibration: single-sample drift 1.84, max = the
-    // sample adjacent to the heaviest pass window). The median kills
-    // the one-off residue spike but keeps SUSTAINED co-tenant
-    // contention (which inflates all three) fully visible. ONE
-    // sampler for the suite checkpoints and the slope-window pre/post
-    // probes — the two timelines are compared against each other, so
-    // a discipline tweak applied to one site only would silently
-    // desynchronize them.
-    def sentinelMedian3(): Double = sentinelFn.map { fn =>
-      val ts = (0 until 3).map(_ => time(fn, sfDir)._1).sorted
-      ts(1)
-    }.getOrElse(0.0)
+    // inflates a lone sentinel run ~1.8-2x even on a verified-idle box.
+    // The median kills the one-off residue spike but keeps SUSTAINED
+    // co-tenant contention (which inflates all three) fully visible.
+    // ONE sampler for the suite checkpoints and the slope-window pre/post
+    // probes, which are compared against each other.
+    def sentinelMedian3(): Double =
+      (0 until 3).map(_ => time(sentinelName, sentinel, sfDir).wallS).sorted.apply(1)
     val checkpoint: () => Unit = () => {
-      loadSamples += loadavgJ()
+      loadSamples += loadavg()
       sentinelTimes += sentinelMedian3()
     }
     // warm the sentinel TWICE so neither one-time codegen nor
     // second-run JIT residue is read as drift by the first checkpoint
     // (a single warm run still left the first sample ~3x the rest)
-    sentinelFn.foreach { fn => time(fn, sfDir); time(fn, sfDir) }
+    time(sentinelName, sentinel, sfDir); time(sentinelName, sentinel, sfDir)
 
-    // Per-query baselines for the repass arms. Two files, same shape
-    // ({"sf":…,"queries":{k:sec}}), different trust levels:
-    //  - bench_quiet.json: a COMMITTED quiet-box per-query record
-    //    (judge- or locally-measured on an idle machine, provenance in
-    //    the file). Preferred — it cannot have inherited a loaded
-    //    round's inflation.
-    //  - bench_detail.json: the previous round's driver artifact, read
-    //    BEFORE this run overwrites it. Fallback only: the r10 artifact
-    //    was itself ~1.5x load-inflated, so "2x of prev" silently
-    //    became "3x of quiet" and the arm went blind.
-    // The wall-vs-exec arm alone misses sustained CPU contention — in
-    // the r9 phantom, Spark-measured exec inflated WITH wall
-    // (q_quality_missing 2.57 wall / 2.44 exec vs a 0.48 quiet
-    // reality), because starved tasks run slowly rather than waiting.
-    def readQueryBaseline(path: String): Map[String, Double] =
-      orWarn(s"no per-query baseline from $path", Map.empty[String, Double]) {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)), "UTF-8")
-        import org.json4s._
-        val parsed = org.json4s.jackson.JsonMethods.parse(txt)
-        // only comparable baselines: a detail line from a DIFFERENT SF
-        // (a stray subset artifact, an sf0.01 iteration file) would make
-        // every larger-SF query "exceed 2x prior" and mis-trigger the
-        // repass budget. Compare NORMALIZED paths — a trailing slash or
-        // ./-relative spelling of the same dir must not silently drop
-        // the baseline and blind arm (b)
-        def normPath(s: String): String =
-          java.nio.file.Paths.get(s).normalize.toString.replaceAll("/+$", "")
-        val sameSf = (parsed \ "sf") match {
-          case JString(s) => normPath(s) == normPath(sfDir)
-          case _          => false
-        }
-        if (!sameSf) Map.empty
-        else (parsed \ "queries") match {
-          case JObject(fs) => fs.collect {
-            case (k, JDouble(v)) => k -> v
-            case (k, JInt(v))    => k -> v.toDouble
-          }.toMap
-          case _ => Map.empty
-        }
+    // Per-query baseline for the repass arms: the COMMITTED quiet-box
+    // record ({"sf":…,"queries":{k:sec}}), which cannot have inherited
+    // a loaded run's inflation. The wall-vs-exec arm alone misses
+    // sustained CPU contention: starved tasks run slowly rather than
+    // wait, so Spark-measured exec inflates WITH wall.
+    val quietPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIET", "bench_quiet.json")
+    val quietBase = orWarn(s"no per-query baseline from $quietPath", Map.empty[String, Double]) {
+      val parsed = JsonMethods.parse(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(quietPath)), "UTF-8"))
+      // only a baseline of the SAME SF is comparable (every larger-SF
+      // query would "exceed 2x"); compare NORMALIZED paths, so a
+      // trailing slash or ./-relative spelling cannot blind arm (b)
+      def normPath(s: String): String =
+        java.nio.file.Paths.get(s).normalize.toString.replaceAll("/+$", "")
+      (parsed \ "sf", parsed \ "queries") match {
+        case (JString(s), JObject(fs)) if normPath(s) == normPath(sfDir) => fs.collect {
+          case (k, JDouble(v)) => k -> v
+          case (k, JInt(v))    => k -> v.toDouble
+        }.toMap
+        case _ => Map.empty[String, Double]
       }
-    val prevDetail = readQueryBaseline(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "bench_detail.json"))
-    val quietBase = readQueryBaseline(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIET", "bench_quiet.json"))
-    def baselineFor(k: String): Option[Double] =
-      quietBase.get(k).orElse(prevDetail.get(k))
+    }
 
-    val results00 = suite(sfDir, passes = 3, only = onlyEnv,
-      checkpoint = Some(checkpoint))
+    val results00 = suite(sfDir, passes = 3, checkpoint = checkpoint)
 
-    // FAILURE RETRY ARM (r14, VERDICT item 5): BENCH_r13 failed 96 of
-    // 104 queries on the broken checksum action and the artifact
-    // stayed quiet about it — every repass arm filters ok==true, so a
-    // failing query was never retried and its fast-fail min became
-    // the published number. Now every failed query gets ONE more
-    // timed attempt: a transient failure (OOM under a co-tenant
-    // burst, a flaky temp dir) heals and the retry's samples REPLACE
-    // the fast-fail ones — cold included, because an honest warm
-    // number beats a contaminated exception-path one — with the query
-    // named in `retried_ok` so readers know its pass-0 semantics
-    // differ. A deterministic failure stays failed and is surfaced at
-    // the HEAD of both JSON lines as `failed_count` (plus a stderr
-    // banner), so a broken-action round can never again read as a
-    // normal artifact.
-    val retriedOk = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results0 = results00.map {
-      case r @ (k, _, _, _, false, _) =>
-        val (v, e, ok, s) = time(SparkEntry.queries(k), sfDir, k)
-        if (ok) { retriedOk += k; (k, v, v, e, true, s) } else r
-      case r => r
+    // FAILURE RETRY ARM: every failed query gets ONE more timed attempt
+    // (the repass arms consider ok queries only). A transient failure
+    // (OOM under a co-tenant burst, a flaky temp dir) heals and the
+    // retry's sample REPLACES the fast-fail ones — cold included, since
+    // an honest warm number beats an exception-path one — with the
+    // query named in `retried_ok`. A deterministic failure stays failed
+    // and is surfaced at the HEAD of both JSON lines as `failed_count`.
+    val retriedOk = ArrayBuffer.empty[String]
+    val results0 = results00.map { r =>
+      if (r.ok) r
+      else {
+        val retry = time(r.name, queries(r.name), sfDir)
+        if (retry.ok) { retriedOk += r.name; Timed.of(r.name, Seq(retry)) } else r
+      }
     }
 
     // Load evidence, available at decision time (the final checkpoint
-    // fired at the end of suite(), so the sentinel timeline and the
-    // loadavg samples are complete). Drift reads from the samples AFTER
+    // fired at the end of suite()). Drift reads from the samples AFTER
     // the first checkpoint: the first sentinel run stays ~2-3x elevated
     // even double-warmed (JVM-wide JIT/GC residue from the warmup
     // itself), which would fake a drift of ~3 on a quiet box.
-    def loadMaxOf(samples: Seq[String]): Double = samples.flatMap(
-      _.stripPrefix("[").stripSuffix("]").split(",").headOption
-        .flatMap(x => scala.util.Try(x.toDouble).toOption))
-      .foldLeft(0.0)(math.max)
+    def loadMax: Double = loadSamples.flatMap(_.headOption).foldLeft(0.0)(math.max)
     def sentinelDrift(): Double = sustainedDrift(sentinelTimes.drop(1).toSeq)
-    // thresholds, r12-recalibrated after an idle-box full-suite run
-    // (box verified externally empty, pre-launch 1m load 0.01) read
-    // single-sample drift 1.84 and mid-run 1m load 9.39 — BOTH former
-    // arms fired on the bench's own burn once the factor-100 slope
-    // corpora joined the suite. Three arms now, each answering a
-    // question self-load cannot fake:
-    //  - sentinel drift > 1.8 (samples are per-checkpoint MEDIANS of
-    //    3, so quiet full-suite residue reads well under the loaded
-    //    populations 2.05 / 22.4 while sustained contention still
-    //    inflates every sample);
-    //  - PRE-suite 1m loadavg > max(2, cpus/8): the co-tenant check,
-    //    sampled before any Spark work so the bench cannot convict
-    //    itself (floored at 2.0 — cpus/8 on a 4-cpu box is 0.5 and
-    //    would fire on background noise);
-    //  - mid-run 1m loadavg > max(4, cpus/2): catastrophic-arrival
-    //    backstop, set ~1.7x above the measured self-load ceiling
-    //    (0.3x cpus) and under both real incidents (20.4 driver box,
-    //    20.42 spinner calibration). Arrivals between cpus/8 and
-    //    cpus/2 mid-run are caught by the sentinel (sustained) or
-    //    arms (a)/(b) (per-query). A false trigger costs only bounded
-    //    extra mins (16 queries x 2 runs), never a wrong value.
     val floorDriftSuite = sentinelDrift()
-    val loadMaxSuite = loadMaxOf(loadSamples.toSeq)
-    val loadEvident =
-      loadEvidence(floorDriftSuite, preLoad1m, loadMaxSuite, cpusAvail)
+    val loadEvident = loadEvidence(floorDriftSuite, preLoad1m, loadMax, cpusAvail)
 
-    // auto-repass, three arms: (a) wall min far above the
-    // Spark-measured execution floor (the gap — scheduling,
-    // driver-side, co-tenant steal — dominated every pass); (b) wall
-    // min far above the committed baseline for the same query (quiet
-    // file preferred, prev detail fallback; 2x absorbs the ±25%
-    // cross-box variance BASELINE.md records); (c) the round's OWN
-    // load evidence convicts the box (sentinel drift or loadavg) —
-    // a SUSTAINED ~1.5x load inflates wall AND exec together and can
-    // inflate uniformly below 2x, so arms (a)/(b) both stay silent
-    // (exactly the r10 artifact: floor_drift 22.4, repassed empty);
-    // when that happens, unconditionally re-time the slowest queries
-    // so the primaries get a chance to recover in a quieter window.
-    // Repassing is harmless for a genuine regression — it stays slow
-    // through two more runs and its presence in `repassed` marks it
-    // double-checked. Bounded to the 16 worst so a fully-loaded box
-    // cannot double the suite.
-    val armAB = results0
-      .filter { case (k, _, v, e, ok, _) =>
-        ok && ((v > 2 * e && v > e + 0.5) ||
-          baselineFor(k).exists(p => v > 2 * p && v > p + 0.3))
-      }.map(_._1)
-    val armC =
-      if (loadEvident) results0.filter(_._5).sortBy(-_._3).map(_._1)
-      else Seq.empty
-    val steadyOf = results0.map(r => r._1 -> r._3).toMap
+    // auto-repass arms: (a) wall min far above the Spark-measured
+    // execution floor (the gap — scheduling, driver-side, co-tenant
+    // steal — dominated every pass); (b) wall min far above the quiet
+    // baseline (2x absorbs the ±25% cross-box variance BASELINE.md
+    // records); (c) the run's OWN load evidence, which re-times the
+    // slowest queries unconditionally; (d) quiet-baseline deviators
+    // (see [[allocateRepasses]]). Repassing is harmless for a genuine
+    // regression — it stays slow and its presence in `repassed` marks
+    // it double-checked.
+    val baselineFor = quietBase.get _
+    val armAB = results0.filter { r =>
+      r.ok && ((r.wall > 2 * r.exec && r.wall > r.exec + 0.5) ||
+        baselineFor(r.name).exists(p => r.wall > 2 * p && r.wall > p + 0.3))
+    }.map(_.name)
+    val bySlowest = results0.filter(_.ok).sortBy(-_.wall).map(_.name)
+    val armC = if (loadEvident) bySlowest else Seq.empty
+    val steadyOf = results0.map(r => r.name -> r.wall).toMap
     // REFINEMENT PASSES, unconditional: the slowest 16 get two extra
-    // timed runs whether or not any arm fired. The 4th/5th samples
-    // are systematically warmer — full-suite JIT tiering on
-    // kernel-heavy queries — and the effect is large and top-heavy:
-    // an idle-box A/B (r12, same box, same build) read the 16 heavy
-    // primaries at median 1.51x their min-of-5 values under min-of-3
-    // (q_ngram_jaccard 1.62 vs 0.86) while every other query sat at
-    // 1.04x. Before this, primaries silently switched regimes with
-    // the load arms (arm (c) fired -> min-of-5 warmth; quiet box ->
-    // min-of-3), making round-over-round deltas on the heavy tail
-    // measurement artifacts. Uniform min-of-5 on the tail keeps every
-    // artifact comparable; the arms remain as the anomaly/conviction
-    // markers they were built to be.
-    val refine = results0.filter(_._5).sortBy(-_._3).map(_._1).take(16)
-    // arm-flagged queries get their OWN budget on top of the
-    // unconditional refinement tail, ranked by quiet-baseline
-    // deviation with >1.3x deviators as arm (d) — see [[allocateRepasses]]
+    // timed runs whether or not any arm fired. The 4th/5th samples are
+    // systematically warmer on the heavy tail (full-suite JIT tiering
+    // on kernel-heavy queries: an idle-box A/B read the 16 heavy
+    // primaries at median 1.51x their min-of-5 values under min-of-3,
+    // every other query at 1.04x), so uniform min-of-5 on the tail
+    // keeps every artifact comparable whether or not an arm fired.
+    val refine = bySlowest.take(16)
     val deviationOf = results0.collect {
-      case (k, _, v, _, true, _) if baselineFor(k).isDefined =>
-        k -> v / math.max(baselineFor(k).get, 1e-3)
+      case r if r.ok && baselineFor(r.name).isDefined =>
+        r.name -> r.wall / math.max(baselineFor(r.name).get, 1e-3)
     }.toMap
-    // r19: run-budget allocation by deviation rank (see
-    // [[allocateRepasses]]) — the core set keeps min-of-5, the arm-(d)
-    // tail degrades to min-of-4 then a published cutoff instead of
-    // silently truncating at a fixed reserve
     val (repassAlloc, suspectCutoff) =
       allocateRepasses(armAB, armC, refine, steadyOf, deviationOf)
     val repassed = repassAlloc.map { case (k, nRuns) =>
-      val extra = (0 until nRuns).map(_ => time(SparkEntry.queries(k), sfDir))
-      k -> ((extra.map(_._1).min, extra.map(_._2).min))
+      k -> (0 until nRuns).map(_ => time(k, queries(k), sfDir))
     }.toMap
     // one post-repass checkpoint when arm (c) fired: the artifact then
     // records whether the repass window itself was quiet or still loaded
     if (loadEvident && repassed.nonEmpty) checkpoint()
-    // mid-pack residual-inflation marker, emitted UNCONDITIONALLY:
-    // queries whose primary stands past 1.3x their committed quiet
-    // baseline without having earned a repass retain unexplained
-    // inflation whether or not arm (c) fired this round (on a
-    // quiet-reading round the cause may be a transient the loadavg
-    // arms cannot see), so the artifact always names them and readers
-    // know which round-over-round per-query comparisons to route
-    // through bench_quiet.json instead.
-    // membership derives from the SAME >1.3 deviation predicate that
-    // feeds arm (d) (r19 advice): the old raw `v > 1.3 * p` form let a
-    // sub-millisecond-baseline query (p < 1e-3, so its deviation reads
-    // vs the 1e-3 clamp and stays <= 1.3) appear here while provably
-    // unable to enter arm (d), making the published reason string and
-    // the cutoff contract both wrong for that row
-    val suspectUnrepassed =
-      results0.collect { case (k, _, _, _, true, _)
-        if !repassed.contains(k) && deviationOf.get(k).exists(_ > 1.3) => k
-      }.sorted
-    val results = results0.map { case r @ (k, cold, v, e, ok, s) =>
-      repassed.get(k)
-        .map { case (v2, e2) => (k, cold, math.min(v, v2), math.min(e, e2), ok, s) }
-        .getOrElse(r)
-    }
-    val qs = results.map { case (k, _, v, _, _, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val execs = results.map { case (k, _, _, e, _, _) => s"\"" + k + "\":" + e }
-      .mkString("{", ",", "}")
-    val failedKeys = results.collect { case (k, _, _, _, false, _) => k }
-    val failed = failedKeys.map(k => s"\"$k\"").mkString("[", ",", "]")
+    // residual-inflation marker, emitted UNCONDITIONALLY: ok queries
+    // past 1.3x their quiet baseline (the arm-(d) predicate) that did
+    // not earn a repass, so readers know which per-query comparisons
+    // to route through bench_quiet.json instead
+    val suspectUnrepassed = results0.filter(r =>
+      r.ok && !repassed.contains(r.name) && deviationOf.get(r.name).exists(_ > 1.3))
+      .map(_.name).sorted
+    val results = results0.map(r => repassed.get(r.name).fold(r)(r.refine))
+    val primary = results.map(r => r.name -> r).toMap
+
+    val failedKeys = results.filterNot(_.ok).map(_.name)
     val failedCount = failedKeys.size
     if (failedCount > 0)
       System.err.println(s"[bench] WARNING: $failedCount quer" +
@@ -611,430 +511,213 @@ object Bench {
         s" FAILED the timing action even after retry: " +
         failedKeys.mkString(", ") +
         " — their published values are exception-path wall times, not measurements")
-    val retriedJ = retriedOk.toSeq.sorted.map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    // measured shuffle volume per query (exchange write side) and the
-    // total spill: THE direct scale signals — at a fixed plan shape,
-    // shuffle bytes grow linearly with data or something is wrong, and
-    // any nonzero spill means a partition outgrew executor memory
-    val shuffles = results.map { case (k, _, _, _, _, s) => s"\"" + k + "\":" + s.bytesWritten }
-      .mkString("{", ",", "}")
-    val spillTotal = results.map(_._6.spillBytes).sum
-    val total = results.map(_._3).sum
-    val coldTotal = results.map(_._2).sum
+    val total = results.map(_.wall).sum
 
     // slope probe: one SF step down, AFTER the primary passes so
-    // cold_total keeps measuring genuinely cold planning
-    val slope = slopeDirFor(sfDir).map { smallDir =>
-      val smallRes = suite(smallDir, passes = 2, only = onlyEnv)
-      val small = smallRes.map(r => r._1 -> r._3).toMap
-      val smallShuffle = smallRes.map(r => r._1 -> r._6.bytesWritten).toMap
-      // every ratio is REAL (no -1.0 sentinels): wall times clamp to a
-      // 1 ms measurable floor (no wall measurement is truly 0 — the
-      // clamp only guards a missing key ever yielding a sentinel)
-      val ratios = results.map { case (k, _, v, _, _, _) =>
-        val s = math.max(small.getOrElse(k, 0.0), 1e-3)
-        s"\"" + k + "\":" + v / s
-      }.mkString("{", ",", "}")
-      val smallQs = results.map { case (k, _, _, _, _, _) =>
-        s"\"" + k + "\":" + small.getOrElse(k, 1e-3)
-      }.mkString("{", ",", "}")
-      // shuffle-volume slope: bytes(primary)/bytes(small) — unlike the
-      // time ratios this is machine-independent, so it stays readable
-      // even through a driver-machine stall. Add-one smoothing keeps
-      // the ratio defined when the small SF shuffles 0 bytes (a
-      // take-ordered or scan-local query): 0/0 reads 1.0 (flat), and
-      // bytes appearing only at the larger SF read as the byte count
-      // itself — still a flag, never a sentinel
-      val shuffleRatios = results.map { case (k, _, _, _, _, s) =>
-        val sm = smallShuffle.getOrElse(k, 0L)
-        s"\"" + k + "\":" + ((s.bytesWritten + 1).toDouble / (sm + 1))
-      }.mkString("{", ",", "}")
-      s""","slope_sf":"$smallDir","slope_queries":$smallQs,"slope_ratios":$ratios,"shuffle_ratios":$shuffleRatios"""
-    }.getOrElse("")
+    // cold_total keeps measuring genuinely cold planning. Wall times
+    // clamp to a 1 ms floor so every ratio is real.
+    val slope: List[JField] = slopeDirFor(sfDir).toList.flatMap { smallDir =>
+      val small = suite(smallDir, passes = 2).map(r => r.name -> r).toMap
+      List("slope_sf" -> JString(smallDir),
+        "slope_queries" -> jobj(results)(r => JDouble(small.get(r.name).fold(1e-3)(_.wall))),
+        "slope_ratios" -> jobj(results)(r =>
+          JDouble(r.wall / math.max(small.get(r.name).fold(0.0)(_.wall), 1e-3))),
+        "shuffle_ratios" -> jobj(results)(r =>
+          JDouble(byteRatio(r.bytes, small.get(r.name).fold(0L)(_.bytes)))))
+    }
 
-    // ---- slope-probe measurement protection (r13) ----------------
-    // BENCH_r12's slope3 block printed hash_embed 123x / mix_cluster
-    // 26.5x WALL step ratios for a 10x data step on a load-convicted
-    // box, against linear byte slopes and the calibration run's
-    // 1.9-5.6x — single-pass unprotected wall times are the one place
-    // the artifact could still publish unvindicated numbers. Three
-    // defenses, mirroring the main suite's:
-    //  1. min-of-2 passes for slope3 too (suite passes=2, was 1);
+    // ---- up-step slope windows ------------------------------------
+    // Each factor's window times its keys on the ScaledCorpus of that
+    // factor (min of 2 passes) with three defenses, mirroring the main
+    // suite's, against publishing unprotected wall times:
+    //  1. min-of-2 passes;
     //  2. a median-of-3 floor-sentinel sample immediately BEFORE and
-    //     AFTER each up-step window; SUSTAINED contention (BOTH
-    //     samples past 1.8x the main suite's quiet sentinel minimum)
-    //     sets `convicted:true` on that window's load object, telling
-    //     readers to route around its TIME ratios (byte ratios are
-    //     machine-independent and stay authoritative regardless);
-    //  3. wall-anomaly self-repair: a query whose wall step ratio
-    //     blows past the data step while its BYTE ratio stays modest
-    //     is a measurement artifact by construction (the plan moved
-    //     ~linear bytes but the clock says superlinear) — it gets two
-    //     extra timed runs, min taken, and is named in `repassed`. A
-    //     genuine byte blowup (e.g. minhash's documented one-time
-    //     broadcast->SMJ jump) keeps its wall ratio untouched.
-    type QRes = (String, Double, Double, Double, Boolean,
-      graft.monitoring.PlanMetrics.ShuffleStats)
-    def sentinelQuietMin(): Double = {
-      val steady = sentinelTimes.drop(1)
-      if (steady.nonEmpty) steady.min else 0.0
+    //     AFTER the window; both past 1.8x the suite's quiet sentinel
+    //     minimum (or the suite's own load evidence, since a co-tenant
+    //     present for the ENTIRE run inflates the window and the
+    //     minimum alike) sets `convicted` and renames its wall-time keys
+    //     ([[ratioKey]]);
+    //  3. wall-anomaly self-repair ([[wallAnomaly]]) against the
+    //     previous window or the primary, with a ceiling of 2x the data
+    //     step: a flagged query gets two extra timed runs, min taken,
+    //     and is named in the window's `repassed`.
+    // `<tag>_ratios` is t(window)/t(primary); `<tag>_step_ratios` the
+    // single-decade t(window)/t(previous window). The JVM is warm and
+    // the plan shapes repeat, so codegen caches hit; corpus generation
+    // is one-time and marker-cached. SPARK_GRAFT_SLOPE2=0 /
+    // SPARK_GRAFT_SLOPE3=0 disable a window.
+    val sentinelQuietMin = sentinelTimes.drop(1).minOption.getOrElse(0.0)
+    def slopeRepass(res: Seq[Timed], dir: String, base: Map[String, Timed],
+                    maxRatio: Double): (Seq[Timed], Seq[String]) = {
+      val flagged = res.filter(r => r.ok && base.get(r.name).exists(b =>
+        wallAnomaly(r.wall / math.max(b.wall, 1e-3), byteRatio(r.bytes, b.bytes), maxRatio)))
+        .map(_.name)
+      (res.map(r => if (flagged.contains(r.name))
+        r.refine((0 until 2).map(_ => time(r.name, queries(r.name), dir))) else r), flagged.sorted)
     }
-    def slopeRepass(res: Seq[QRes], dir: String,
-                    base: Map[String, (Double, Long)],
-                    maxRatio: Double): (Seq[QRes], Seq[String]) = {
-      val flagged = res.filter { r =>
-        r._5 && base.get(r._1).exists { case (bt, bb) =>
-          wallAnomaly(r._3 / math.max(bt, 1e-3),
-            (r._6.bytesWritten + 1).toDouble / (bb + 1), maxRatio)
-        }
-      }.map(_._1).toSet
-      val fixed = res.map { r =>
-        if (!flagged.contains(r._1)) r
-        else {
-          val extra = (0 until 2).map(_ => time(SparkEntry.queries(r._1), dir))
-          (r._1, r._2, math.min(r._3, extra.map(_._1).min),
-            math.min(r._4, extra.map(_._2).min), r._5, r._6)
-        }
+    // q_semdedup's 100x datapoint, in lieu of a timed slope (the fixed-k
+    // caveat): cluster-occupancy skew of the shared quantizer — max
+    // cluster is the kernel's per-row memory and the quadratic-work hot
+    // spot. Load-independent, so it never renames under conviction.
+    def semdedupStats(dir: String): List[JField] =
+      orWarn("slope3_semdedup_clusters omitted", List.empty[JField]) {
+        val (n, mx, cp) = Similarity.semDedupClusterStats(Tables.embeddings(spark, dir))
+        List("slope3_semdedup_clusters" -> jstats(n, mx, cp))
       }
-      (fixed, flagged.toSeq.sorted)
-    }
-    // Window conviction ORs in the SUITE's load evidence: the window
-    // drift compares against the suite's own sentinel minimum, so a
-    // co-tenant present for the ENTIRE run inflates numerator and
-    // denominator together and the window alone reads ~1.0 — exactly
-    // the sustained pattern (r9/r12) the suite-level arms exist to
-    // catch. A mid-run arrival is caught by the window drift; a
-    // whole-run co-tenant by `suite_load`; either marks the window's
-    // TIME ratios untrusted (bytes stay authoritative regardless).
-    def windowConvicted(pre: Double, post: Double, suiteLoad: Boolean): Boolean = {
-      val q = math.max(sentinelQuietMin(), 1e-3)
-      math.min(pre, post) / q > 1.8 || suiteLoad
-    }
-    def slopeLoadJson(tag: String, pre: Double, post: Double,
-                      repassed: Seq[String], suiteLoad: Boolean): String = {
-      val q = math.max(sentinelQuietMin(), 1e-3)
-      val drift = math.min(pre, post) / q
-      val convicted = windowConvicted(pre, post, suiteLoad)
-      val rj = repassed.map("\"" + _ + "\"").mkString("[", ",", "]")
-      s""","${tag}_load":{"sentinel_pre":$pre,"sentinel_post":$post,""" +
-        s""""drift":$drift,"suite_load":$suiteLoad,"convicted":$convicted,"repassed":$rj}"""
-    }
-
-    // SECOND-decade slope probe (up-step): the synthetic 10x corpus
-    // (ScaledCorpus — token-bijective copies, expected scaling exactly
-    // linear by construction) measured for the heavy document family.
-    // Together with the down-step above, every heavy query carries TWO
-    // measured decades: sf_small -> sf_primary (real data, semantics-
-    // driven growth included) and sf_primary -> 10x-synthetic (pure
-    // plan/mechanical scaling). slope2 ratios near the 10x data ratio
-    // mean linear marginal cost with floors amortized; well past it
-    // flags a superlinear term the first decade's floor hid.
-    // Disable with SPARK_GRAFT_SLOPE2=0; override the dir with
-    // SPARK_GRAFT_SLOPE2=<dir>.
-    // slope2's measured (time, bytes) per query, exposed for slope3's
-    // upper-step ratios (10x-synthetic -> 100x-synthetic)
-    var slope2Times = Map.empty[String, Double]
-    var slope2Bytes = Map.empty[String, Long]
-    val slope2 = orWarn("slope2 probe omitted", Option.empty[String]) {
-      // documents family (token-bijective copies) + events family
-      // (user-offset copies): the scaled dir carries BOTH tables, so
-      // the windowed/sessionized/keyed-dedup 100 TB claims get their
-      // second measured decade too, not just the hash-keyed text ops
-      val heavyKeys0 = Set("q_ngram_jaccard", "q_dedup_minhash",
-        "q_source_overlap", "q_bigram_logprob", "q_dedup_lines",
-        "q_mix_quality", "q_dedup_clusters", "q_decontaminate_fuzzy",
-        "q_dedup_spans", "q_hash_embed",
-        "q_feature_pipeline", "q_sessionize", "q_dedup_key",
-        // r13 ops with NOVEL shapes: the group-limited rank window
-        // (tfidf) and the bucketed global cumsum (shard plan). The
-        // other r13 ops are deliberately absent: vocab_drift /
-        // heavy_hitters_check are wordcount-shaped (decade already
-        // covered), url_dedup is a scan-local projection + keep-best
-        // window (ditto), and contamination_report's src0 benchmark
-        // GROWS with this synthetic corpus — corpus x benchmark =
-        // 100x per decade by construction, the same reason
-        // q_semantic_decontaminate sits out (its fixed-benchmark
-        // deployment shape is ScaleSpec's job)
-        "q_tfidf_topk", "q_shard_plan",
-        // r16 ops (probes added r17 per the verdict): scan-local
-        // logit scoring over a capped training sample (expect ≈ byte
-        // slope), the bloom build+probe pass (auto-sized filter,
-        // mergeable aggregate), and the DSIR importance weights —
-        // its src0 target slice grows WITH the corpus, but the
-        // scoring join is a broadcast of the Zipf-bounded vocab
-        // merge, not corpus x benchmark, so the expected step stays
-        // ≈ linear (the unigram_logprob precedent)
-        "q_quality_classifier", "q_bloom_membership_check",
-        "q_importance_weights", "q_importance_weights_ng",
-        // r18 ops: the paper-complete DSIR composition (same scoring
-        // shape as the ng sibling + a constant-k TakeOrdered select)
-        // and the one-vs-rest scan-local lang-ID scoring (the
-        // quality_classifier class). q_semdedup deliberately sits out
-        // for the LSH-pair-ops reason: at FIXED k=16 the
-        // within-cluster pair space is quadratic BY SEMANTICS
-        // (production scales k ≈ √N — see the semDedup scaladoc); its
-        // decade story is the measured kernel adjudication in
-        // BASELINE.md r18 (0.29× vs pandas at 100×), and its skew
-        // stats publish below with the lsh block.
-        "q_dsir_select", "q_lang_id_model",
-        // embeddings family (sign-flip-decorrelated copies): the
-        // quantizer ops whose per-vector work is geometry-independent
-        // — linear by construction. Deliberately absent: the
-        // pair-forming LSH ops (fixed plane/band params make their
-        // candidate space quadratic BY SEMANTICS; production scales
-        // the params with the corpus — see BUILD_NOTES) and
-        // q_semantic_decontaminate (its %20 benchmark split grows
-        // WITH the corpus here, making the broadcast scoring
-        // corpus x benchmark = 100x per decade by construction;
-        // ScaleSpec measures its linear deployment shape — fixed
-        // benchmark, growing corpus — instead).
-        // PQ (r18): encoding is a geometry-independent per-vector map
-        // and ADC rows are N·m·Q ints — linear in the corpus at fixed
-        // queries, like the quantizer ops
-        "q_cluster_embed", "q_mix_cluster", "q_ann_pq",
-        // r19 ops: IVF-PQ is the PQ shape with a list-restricted sweep
-        // plus a fixed-size refine join — linear at fixed queries; the
-        // char-gram lang-ID is the lang_id_model scan shape with a
-        // heavier per-row feature loop (windows vs tokens)
-        "q_ann_ivfpq", "q_lang_id_model_cn")
-      val heavyKeys = onlyEnv.fold(heavyKeys0)(heavyKeys0.intersect)
-      if (sys.env.get("SPARK_GRAFT_SLOPE2").contains("0") ||
-          heavyKeys.isEmpty) None
-      else {
-        val bigDir = sys.env.get("SPARK_GRAFT_SLOPE2")
-          .filter(d => d.nonEmpty && d != "0" && d != "1")
-          .getOrElse(graft.sources.ScaledCorpus.dir(spark, sfDir, factor = 10))
-        val primBy = results.filter(r => heavyKeys.contains(r._1))
-          .map(r => r._1 -> ((r._3, r._6.bytesWritten))).toMap
-        val preS = sentinelMedian3()
-        val bigRes0 = suite(bigDir, passes = 2, only = Some(heavyKeys))
-        // wall-anomaly arm: 10x data step, wall past 20x with bytes
-        // under 12x is a clock artifact — repass, min, name it
-        val (bigRes, s2Repassed) =
-          slopeRepass(bigRes0, bigDir, primBy, maxRatio = 20)
-        val postS = sentinelMedian3()
-        val loadJ = slopeLoadJson("slope2", preS, postS, s2Repassed, loadEvident)
-        val s2Conv = windowConvicted(preS, postS, loadEvident)
-        slope2Times = bigRes.map(r => r._1 -> r._3).toMap
-        slope2Bytes = bigRes.map(r => r._1 -> r._6.bytesWritten).toMap
-        val qsJ = bigRes.map(r => "\"" + r._1 + "\":" + r._3)
-          .mkString("{", ",", "}")
-        val ratios = bigRes.map { r =>
-          "\"" + r._1 + "\":" + (r._3 / math.max(primBy(r._1)._1, 1e-3))
-        }.mkString("{", ",", "}")
-        val sratios = bigRes.map { r =>
-          "\"" + r._1 + "\":" +
-            ((r._6.bytesWritten + 1).toDouble / (primBy(r._1)._2 + 1))
-        }.mkString("{", ",", "}")
-        Some(s""","slope2_sf":"$bigDir","slope2_factor":10,""" +
-          s""""${ratioKey("slope2_queries", s2Conv)}":$qsJ,""" +
-          s""""${ratioKey("slope2_ratios", s2Conv)}":$ratios,""" +
-          s""""slope2_shuffle_ratios":$sratios""" + loadJ)
-      }
-    }.getOrElse("")
-
-    // THIRD-decade slope probe: factor=100 ScaledCorpus (~500k docs /
-    // 10M events at sf0.1) for the heaviest representative of each
-    // table family. With the down-step (real data, semantics-driven
-    // growth) and slope2 (10x synthetic), the heavy families then
-    // carry THREE measured decades, the upper two linear by
-    // construction — `slope3_ratios` is t(100x)/t(primary) (expect
-    // ~<=200 for linear work over a 100x data step with floors
-    // amortized) and `slope3_step_ratios` is t(100x)/t(10x), the
-    // cleanest single-decade read (expect ~<=20). Two timing passes
-    // with min (r13 — the r12 single-pass block published a 123x
-    // loaded-box wall step with no defense), plus the shared
-    // wall-anomaly repass arm and the before/after sentinel window
-    // annotation (`slope3_load.convicted`). The JVM is fully warm and
-    // the plan shapes identical to slope2's, so codegen caches hit;
-    // generation is one-time and marker-cached. Disable with
-    // SPARK_GRAFT_SLOPE3=0; override the dir with
-    // SPARK_GRAFT_SLOPE3=<dir>.
-    val slope3 = orWarn("slope3 probe omitted", Option.empty[String]) {
-      // r19 (the r18 verdict's item 8): q_dsir_select and q_ann_pq
-      // join the 100x instrument so their decade claims regenerate
-      // every round instead of living as BASELINE prose; q_semdedup
-      // stays out by the documented fixed-k caveat (pair space
-      // quadratic BY SEMANTICS at fixed k — production scales
-      // k ≈ √N) and is represented by its 100x cluster-skew stats
-      // published below instead
-      val s3Keys0 = Set("q_source_overlap", "q_dedup_minhash",
-        "q_feature_pipeline", "q_hash_embed", "q_mix_cluster",
-        "q_dsir_select", "q_ann_pq")
-      val s3Keys = onlyEnv.fold(s3Keys0)(s3Keys0.intersect)
-      if (sys.env.get("SPARK_GRAFT_SLOPE3").contains("0") ||
-          s3Keys.isEmpty) None
-      else {
-        val hugeDir = sys.env.get("SPARK_GRAFT_SLOPE3")
-          .filter(d => d.nonEmpty && d != "0" && d != "1")
-          .getOrElse(graft.sources.ScaledCorpus.dir(spark, sfDir, factor = 100))
-        val primBy = results.filter(r => s3Keys.contains(r._1))
-          .map(r => r._1 -> ((r._3, r._6.bytesWritten))).toMap
-        val preS = sentinelMedian3()
-        val hugeRes0 = suite(hugeDir, passes = 2, only = Some(s3Keys))
-        // anomaly base: the cleanest step is vs slope2's 10x corpus
-        // (10x data -> 20x wall ceiling); when slope2 is disabled,
-        // fall back to the 100x step vs primary (200x ceiling)
-        val (anomBase, anomMax) =
-          if (slope2Times.nonEmpty)
-            (slope2Times.map { case (k, t) =>
-              k -> ((t, slope2Bytes.getOrElse(k, 0L))) }, 20.0)
-          else (primBy, 200.0)
-        val (hugeRes, s3Repassed) =
-          slopeRepass(hugeRes0, hugeDir, anomBase, maxRatio = anomMax)
-        val postS = sentinelMedian3()
-        val loadJ = slopeLoadJson("slope3", preS, postS, s3Repassed, loadEvident)
-        val s3Conv = windowConvicted(preS, postS, loadEvident)
-        val qsJ = hugeRes.map(r => "\"" + r._1 + "\":" + r._3)
-          .mkString("{", ",", "}")
-        val ratios = hugeRes.map { r =>
-          "\"" + r._1 + "\":" + (r._3 / math.max(primBy(r._1)._1, 1e-3))
-        }.mkString("{", ",", "}")
-        val sratios = hugeRes.map { r =>
-          "\"" + r._1 + "\":" +
-            ((r._6.bytesWritten + 1).toDouble / (primBy(r._1)._2 + 1))
-        }.mkString("{", ",", "}")
-        // upper-decade step vs slope2's 10x measurements, when present.
-        // Time-based keys rename under conviction ([[ratioKey]]):
-        // r15's artifact published step ratios from a convicted window
-        // under the quiet name, one key from their conviction.
-        val stepJ =
-          if (slope2Times.nonEmpty) {
-            val steps = hugeRes.filter(r => slope2Times.contains(r._1)).map { r =>
-              "\"" + r._1 + "\":" + (r._3 / math.max(slope2Times(r._1), 1e-3))
-            }.mkString("{", ",", "}")
-            val sSteps = hugeRes.filter(r => slope2Bytes.contains(r._1)).map { r =>
-              "\"" + r._1 + "\":" +
-                ((r._6.bytesWritten + 1).toDouble / (slope2Bytes(r._1) + 1))
-            }.mkString("{", ",", "}")
-            s""","${ratioKey("slope3_step_ratios", s3Conv)}":$steps,""" +
-              s""""slope3_step_shuffle_ratios":$sSteps"""
-          } else ""
-        // q_semdedup's 100x datapoint, in lieu of a timed slope (the
-        // fixed-k caveat): cluster-occupancy skew of the shared
-        // quantizer at the 100x corpus — max cluster is the kernel's
-        // per-row memory and the quadratic-work hot spot, the exact
-        // quantity the k ≈ √N sizing rule bounds. Byte-free and
-        // load-independent, so it never renames under conviction.
-        val semJ = orWarn("slope3_semdedup_clusters omitted", "") {
-          val (n, mx, cp) = graft.operators.Similarity.semDedupClusterStats(
-            graft.sources.Tables.embeddings(spark, hugeDir))
-          s""","slope3_semdedup_clusters":{"n":$n,"max":$mx,"cand_pairs":$cp}"""
+    val windows = Seq(
+      ("slope2", 10, slope2Keys, "SPARK_GRAFT_SLOPE2", (_: String) => List.empty[JField]),
+      ("slope3", 100, slope3Keys, "SPARK_GRAFT_SLOPE3", semdedupStats _))
+    val (_, upSteps) = windows.foldLeft(
+        (Option.empty[(Int, Map[String, Timed])], List.empty[JField])) {
+      case ((prev, out), (tag, factor, keys0, knob, extra)) =>
+        val keys = keys0.intersect(primary.keySet)
+        if (sys.env.get(knob).contains("0") || keys.isEmpty) (prev, out)
+        else orWarn(s"$tag probe omitted", (prev, out)) {
+          val dir = ScaledCorpus.dir(spark, sfDir, factor)
+          val preS = sentinelMedian3()
+          val res0 = suite(dir, passes = 2, keys)
+          val (baseFactor, base) = prev.getOrElse((1, primary))
+          val (res, repassedW) = slopeRepass(res0, dir, base, maxRatio = 2.0 * factor / baseFactor)
+          val postS = sentinelMedian3()
+          val drift = math.min(preS, postS) / math.max(sentinelQuietMin, 1e-3)
+          val conv = drift > 1.8 || loadEvident
+          val steps = prev.toList.flatMap { case (_, p) =>
+            val stepped = res.filter(r => p.contains(r.name))
+            List(ratioKey(s"${tag}_step_ratios", conv) ->
+              jobj(stepped)(r => JDouble(r.wall / math.max(p(r.name).wall, 1e-3))),
+              s"${tag}_step_shuffle_ratios" ->
+                jobj(stepped)(r => JDouble(byteRatio(r.bytes, p(r.name).bytes))))
+          }
+          val load = JObject("sentinel_pre" -> JDouble(preS), "sentinel_post" -> JDouble(postS),
+            "drift" -> JDouble(drift), "suite_load" -> JBool(loadEvident),
+            "convicted" -> JBool(conv), "repassed" -> jstrs(repassedW))
+          val fields = List(s"${tag}_sf" -> JString(dir), s"${tag}_factor" -> JInt(factor),
+            ratioKey(s"${tag}_queries", conv) -> jobj(res)(r => JDouble(r.wall)),
+            ratioKey(s"${tag}_ratios", conv) ->
+              jobj(res)(r => JDouble(r.wall / math.max(primary(r.name).wall, 1e-3))),
+            s"${tag}_shuffle_ratios" ->
+              jobj(res)(r => JDouble(byteRatio(r.bytes, primary(r.name).bytes)))) ++
+            steps ++ extra(dir) ++ List(s"${tag}_load" -> load)
+          (Some((factor, res.map(r => r.name -> r).toMap)), out ++ fields)
         }
-        Some(s""","slope3_sf":"$hugeDir","slope3_factor":100,""" +
-          s""""${ratioKey("slope3_queries", s3Conv)}":$qsJ,""" +
-          s""""${ratioKey("slope3_ratios", s3Conv)}":$ratios,""" +
-          s""""slope3_shuffle_ratios":$sratios""" + stepJ + semJ + loadJ)
-      }
-    }.getOrElse("")
+    }
 
     // LSH bucket-population probes: a skew regression in band/RHP
     // bucketing (one hot bucket -> quadratic candidate blowup) shows
-    // up in these numbers long before a 100 TB straggler would
-    val lsh = {
-      import graft.operators.{Dedup, Similarity}
-      import graft.sources.Tables
-      // each probe fails INDEPENDENTLY (r18 review fix: one shared
-      // try made a failure in any probe erase the others' telemetry)
-      def probe(name: String)(f: => (Long, Long, Long)): String =
-        orWarn(s"lsh_buckets.$name omitted", "") {
-          val (n, mx, cp) = f
-          s""""$name":{"n":$n,"max":$mx,"cand_pairs":$cp}"""
-        }
-      val blocks = Seq(
-        probe("minhash") {
-          val m = Dedup.minhashBucketStats(Tables.documents(spark, sfDir)).collect()(0)
-          (m.getLong(0), m.getLong(1), m.getLong(2))
-        },
-        probe("rhp") {
-          val r = Similarity.rhpBucketStats(Tables.embeddings(spark, sfDir)).collect()(0)
-          (r.getLong(0), r.getLong(1), r.getLong(2))
-        },
-        // semdedup cluster-occupancy skew (r18): max cluster size is
-        // the kernel's per-row memory AND the quadratic-work hot spot
-        // — the exact quantity the k ≈ √N sizing rule bounds
-        probe("semdedup_clusters") {
-          Similarity.semDedupClusterStats(Tables.embeddings(spark, sfDir))
-        }).filter(_.nonEmpty)
-      if (blocks.isEmpty) ""
-      else s""","lsh_buckets":{${blocks.mkString(",")}}"""
+    // up in these numbers long before a 100 TB straggler would. Each
+    // probe fails independently, so one failure keeps the others.
+    def probe(name: String)(f: => (Long, Long, Long)): List[JField] =
+      orWarn(s"lsh_buckets.$name omitted", List.empty[JField]) {
+        val (n, mx, cp) = f
+        List(name -> jstats(n, mx, cp))
+      }
+    val lshBlocks =
+      probe("minhash") {
+        val m = Dedup.minhashBucketStats(Tables.documents(spark, sfDir)).collect()(0)
+        (m.getLong(0), m.getLong(1), m.getLong(2))
+      } ++ probe("rhp") {
+        val r = Similarity.rhpBucketStats(Tables.embeddings(spark, sfDir)).collect()(0)
+        (r.getLong(0), r.getLong(1), r.getLong(2))
+      } ++ probe("semdedup_clusters") {
+        Similarity.semDedupClusterStats(Tables.embeddings(spark, sfDir))
+      }
+    val lsh = if (lshBlocks.isEmpty) Nil else List("lsh_buckets" -> JObject(lshBlocks))
+    // range-join fan-out probe: incidents, buckets touched, pre-filter
+    // equi-join rows, hottest bucket — the candidate volume of the
+    // range join, computed from the bucket histograms without running it
+    val rjs = orWarn("range_join_stats omitted", List.empty[JField]) {
+      val r = TimeSeries.rangeJoinStats(Tables.events(spark, sfDir)).collect()(0)
+      List("range_join_stats" -> JObject("n_incidents" -> JLong(r.getLong(0)),
+        "n_buckets" -> JLong(r.getLong(1)), "cand_rows" -> JLong(r.getLong(2)),
+        "max_bucket_cand" -> JLong(r.getLong(3))))
     }
-    // range-join fan-out probe (r14 verdict item 5 — the slowest quiet
-    // query was the only heavy op whose candidate volume was invisible
-    // from the JSON): incidents, buckets touched, pre-filter equi-join
-    // rows, hottest bucket. Computed from the bucket histograms, never
-    // by running the join.
-    val rjs = orWarn("range_join_stats omitted", "") {
-      val r = graft.operators.TimeSeries
-        .rangeJoinStats(graft.sources.Tables.events(spark, sfDir)).collect()(0)
-      s""","range_join_stats":{"n_incidents":${r.getLong(0)},"n_buckets":${r.getLong(1)},"cand_rows":${r.getLong(2)},"max_bucket_cand":${r.getLong(3)}}"""
-    }
-    // Full per-query detail line, under its OWN metric name: a parser
-    // keying on metric=="total" must never race two candidates (one of
-    // them truncatable — BENCH_r04/r05 recorded `parsed: null` when
-    // the tens-of-KB detail line lost its tail to the driver's bounded
-    // stdout capture).
-    val excludedJ = composedPins.toSeq.sorted.map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    // load/floor metadata: the self-conviction record for a loaded box.
-    // Drift reads from the samples AFTER the first checkpoint: the
-    // first sentinel run stays ~2-3x elevated even double-warmed
-    // (JVM-wide JIT/GC residue from the warmup itself), which would
-    // fake a drift of ~3 on a quiet box; the r9 failure mode this
-    // flags — load SUSTAINED across the suite — shows in the later
-    // samples regardless, and the full times list ships for readers
-    // who want the first sample too. The output drift includes the
-    // post-repass sample (when arm (c) fired), so the artifact shows
-    // whether the repass window itself was quiet; `load_triggered`
-    // records whether arm (c) fired at decision time.
+
+    // The output drift includes the post-repass sample (when arm (c)
+    // fired), so the artifact shows whether the repass window itself
+    // was quiet; `load_triggered` records whether arm (c) fired at
+    // decision time, and the raw max/min keeps the forgiven
+    // single-point spike visible.
     val floorDrift = sentinelDrift()
-    // raw max/min alongside the second-max statistic (ADVICE r14): the
-    // forgiven single-point spike stays visible to readers even though
-    // it no longer convicts the suite
     val floorDriftRaw = {
-      val st = sentinelTimes.drop(1).toSeq
+      val st = sentinelTimes.drop(1)
       if (st.size < 2) 1.0 else st.max / math.max(st.min, 1e-3)
     }
-    val repassedJ = repassed.toSeq.sortBy(_._1)
-      .map { case (k, (v2, _)) => s"\"" + k + "\":" + v2 }
-      .mkString("{", ",", "}")
-    // r15: each unrepassed suspect carries its deviation ratio and the
-    // reason it went unrepassed (with arm (d), the only way past the
-    // selector is losing the 16-slot budget to HIGHER deviators), so
-    // the artifact itself answers "why not" per query
-    val suspectJ = suspectUnrepassed
-      .map(k => "\"" + k + "\":" + deviationOf.getOrElse(k, 0.0))
-      .mkString("{", ",", "}")
-    val suspectReason =
-      if (suspectUnrepassed.isEmpty) "\"\""
-      else "\"run_budget_exhausted_below_published_cutoff\""
-    // the published repass budget is now in RUNS (r19), with the
-    // per-suspect allocation and — when the 1-run floor itself
-    // exhausted — the lowest funded deviation as `suspect_cutoff`:
-    // a non-empty suspect_unrepassed is adjudicable row by row
-    // (every entry's deviation is at or below the cutoff)
-    val repassBudget = RepassRunBudget
-    val allocJ = repassAlloc.sortBy(_._1)
-      .map { case (k, n) => "\"" + k + "\":" + n }.mkString("{", ",", "}")
-    val cutoffJ = suspectCutoff.map(_.toString).getOrElse("null")
-    val loadMeta = s""","load":{"cpus":$cpusAvail,"pre_1m":$preLoad1m,"samples":[${loadSamples.mkString(",")}]},"floor_sentinel":{"name":"$sentinelName","times":[${sentinelTimes.mkString(",")}],"drift":$floorDrift,"drift_raw":$floorDriftRaw,"drift_suite":$floorDriftSuite},"load_triggered":$loadEvident,"quiet_baseline_n":${quietBase.size},"repass_budget":$repassBudget,"repass_budget_unit":"runs","repass_runs":$allocJ,"suspect_cutoff":$cutoffJ,"repassed":$repassedJ,"suspect_unrepassed":$suspectJ,"suspect_unrepassed_reason":$suspectReason"""
-    val fullLine = s"""{"metric":"total_full","failed_count":$failedCount,"value":$total,"unit":"sec","queries":$qs,"exec_times":$execs,"shuffle_bytes":$shuffles,"spill_bytes_total":$spillTotal,"cold_total":$coldTotal,"failed":$failed,"retried_ok":$retriedJ,"bench_excluded":$excludedJ$slope$slope2$slope3$lsh$rjs$loadMeta,"sf":"$sfDir"}"""
+    val queriesJ = jobj(results)(r => JDouble(r.wall))
+    val failedJ = jstrs(failedKeys)
+    val retriedJ = jstrs(retriedOk.toSeq.sorted)
+    val excludedJ = jstrs(composedPins.toSeq.sorted)
+    val spillTotal = JLong(results.map(_.shuffle.spillBytes).sum)
+    val coldTotal = JDouble(results.map(_.cold).sum)
+    // Full per-query detail line, under its OWN metric name: a parser
+    // keying on metric=="total" must never race two candidates, one of
+    // them a tens-of-KB line a bounded stdout capture can truncate.
+    // Each unrepassed suspect carries its deviation ratio.
+    val fullLine = JObject(List(
+      "metric" -> JString("total_full"), "failed_count" -> JInt(failedCount),
+      "value" -> JDouble(total), "unit" -> JString("sec"),
+      "queries" -> queriesJ,
+      "exec_times" -> jobj(results)(r => JDouble(r.exec)),
+      "jobs" -> jobj(results)(r => JInt(r.jobs)),
+      "shuffle_bytes" -> jobj(results)(r => JLong(r.bytes)),
+      "spill_bytes_total" -> spillTotal, "cold_total" -> coldTotal,
+      "failed" -> failedJ, "retried_ok" -> retriedJ, "bench_excluded" -> excludedJ) ++
+      slope ++ upSteps ++ lsh ++ rjs ++ List(
+      "load" -> JObject("cpus" -> JInt(cpusAvail), "pre_1m" -> JDouble(preLoad1m),
+        "samples" -> JArray(loadSamples.map(s => JArray(s.map(JDouble(_)).toList)).toList)),
+      "floor_sentinel" -> JObject("name" -> JString(sentinelName),
+        "times" -> JArray(sentinelTimes.map(JDouble(_)).toList),
+        "drift" -> JDouble(floorDrift), "drift_raw" -> JDouble(floorDriftRaw),
+        "drift_suite" -> JDouble(floorDriftSuite)),
+      "load_triggered" -> JBool(loadEvident),
+      "quiet_baseline_n" -> JInt(quietBase.size),
+      "repass_budget" -> JInt(RepassRunBudget), "repass_budget_unit" -> JString("runs"),
+      "repass_runs" -> JObject(repassAlloc.sortBy(_._1).map { case (k, n) => k -> JInt(n) }.toList),
+      "suspect_cutoff" -> suspectCutoff.fold[JValue](JNull)(JDouble(_)),
+      "repassed" -> JObject(repassed.toList.sortBy(_._1).map { case (k, runs) =>
+        k -> JDouble(runs.map(_.wallS).min) }),
+      "suspect_unrepassed" -> JObject(suspectUnrepassed.map(k =>
+        k -> JDouble(deviationOf.getOrElse(k, 0.0))).toList),
+      "suspect_unrepassed_reason" -> JString(
+        if (suspectUnrepassed.isEmpty) "" else "run_budget_exhausted_below_published_cutoff"),
+      "sf" -> JString(sfDir)))
+    // THE "total" metric line: compact, the official wall-clock record;
+    // it carries the per-query seconds too (~5 KB), so it is
+    // self-contained.
+    val compactLine = JObject(
+      "metric" -> JString("total"), "failed_count" -> JInt(failedCount),
+      "value" -> JDouble(total), "unit" -> JString("sec"),
+      "cold_total" -> coldTotal, "n_queries" -> JInt(results.size),
+      "queries" -> queriesJ, "failed" -> failedJ, "retried_ok" -> retriedJ,
+      "bench_excluded" -> excludedJ, "spill_bytes_total" -> spillTotal,
+      "slowest5" -> JObject(results.sortBy(-_.wall).take(5)
+        .map(r => r.name -> JDecimal(BigDecimal(r.wall).setScale(3, BigDecimal.RoundingMode.HALF_UP))).toList),
+      "floor_drift" -> JDouble(floorDrift), "load_max_1m" -> JDouble(loadMax),
+      "load_triggered" -> JBool(loadEvident), "n_repassed" -> JInt(repassed.size),
+      "cpus" -> JInt(GraftSession.cpus), "sf" -> JString(sfDir))
+    (JsonMethods.compact(compactLine), JsonMethods.compact(fullLine))
+  }
+
+  def main(args: Array[String]): Unit = {
+    // pre-suite loadavg, read before ANY Spark work: the only loadavg
+    // sample guaranteed free of the bench's own burn
+    val preLoad1m = load1m()
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // local-iteration escape hatch mirroring Verify's: time a subset
+    // (the driver never sets it, so its artifacts stay exhaustive)
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
+    val spark = GraftSession.get()
+    val queries = only.fold(SparkEntry.queries)(o => SparkEntry.queries.filter { case (k, _) => o(k) })
+    val (compactLine, fullLine) = run(spark, sfDir, queries, preLoad1m)
     println(fullLine)
-    // ALSO persist the full detail to a file: the driver's stdout
-    // capture is tail-bounded and has repeatedly truncated this
-    // tens-of-KB line (BENCH_r04/r05 `parsed: null`; BENCH_r07 lost
-    // half the per-query comparisons) — the file survives regardless
-    // of stdout limits. Path override for sandboxed runs.
-    //
+    // ALSO persist the lines to files: the driver's stdout capture is
+    // tail-bounded and has truncated the tens-of-KB detail line.
     // Subset runs and runs on fewer or more cores than the host has
     // NEVER default to the repo-root files: those are the driver-owned
-    // whole-suite, whole-host artifacts, and a SPARK_GRAFT_BENCH_ONLY
-    // iteration run silently clobbering them with a partial line (then
-    // swept in by `git add -A`) happened twice in round 9 — such a run
-    // without an explicit override lands in tmp instead. A failed
-    // write leaves any earlier file in place, so it says so.
-    val redirect = onlyEnv.isDefined || GraftSession.cpus != cpusAvail
+    // whole-suite, whole-host artifacts, and a subset run clobbering
+    // them (then swept in by `git add -A`) has happened — such a run
+    // without an explicit override lands in tmp instead. A failed write
+    // leaves any earlier file in place, so it says so.
+    val redirect = only.isDefined || GraftSession.cpus != Runtime.getRuntime.availableProcessors
     def writeArtifact(overrideEnv: String, name: String, line: String): Unit = {
       val path = sys.env.getOrElse(overrideEnv,
         if (redirect)
@@ -1046,26 +729,10 @@ object Bench {
       }
     }
     writeArtifact("SPARK_GRAFT_BENCH_DETAIL", "bench_detail", fullLine)
-    // THE "total" metric line: compact, printed LAST so a bounded tail
-    // capture always carries it whole — the official wall-clock record.
-    val slowest = results.sortBy(-_._3).take(5)
-      .map { case (k, _, v, _, _, _) => s"\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val loadMax = loadMaxOf(loadSamples.toSeq)
-    // per-query seconds ride in the COMPACT line too (r21): the
-    // driver's PERF comparison keys on this line's `queries` map, and
-    // the map is ~5 KB — far under any sane tail bound — so carrying
-    // it here costs nothing and makes the official record
-    // self-contained (the detail line keeps the full telemetry).
-    val compactLine = s"""{"metric":"total","failed_count":$failedCount,"value":$total,"unit":"sec","cold_total":$coldTotal,"n_queries":${results.size},"queries":$qs,"failed":$failed,"retried_ok":$retriedJ,"bench_excluded":$excludedJ,"spill_bytes_total":$spillTotal,"slowest5":$slowest,"floor_drift":$floorDrift,"load_max_1m":$loadMax,"load_triggered":$loadEvident,"n_repassed":${repassed.size},"cpus":${GraftSession.cpus},"sf":"$sfDir"}"""
+    // the compact line is printed LAST so a bounded tail capture always
+    // carries it whole, bare on stderr too (a logger prefix on stdout
+    // has defeated parsers), and to a small fixed-size file
     println(compactLine)
-    // r21 (VERDICT r20 item 1): the driver's parse of the bench stdout
-    // recorded `parsed: null` in ALL 20 rounds — the line reaches its
-    // capture behind sbt's "[info] " logger prefix. Emit the same
-    // compact line (a) bare on stderr (build.sbt now passes forked run
-    // output through unprefixed) and (b) to a small fixed-size file
-    // next to bench_detail.json, so any reasonable parse succeeds.
-    // Redirected to tmp exactly like the detail file.
     System.err.println(compactLine)
     writeArtifact("SPARK_GRAFT_BENCH_TOTAL", "bench_total", compactLine)
     spark.stop()

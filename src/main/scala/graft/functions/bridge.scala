@@ -61,9 +61,9 @@ object Bridge {
     * here because org.apache.spark.sql.* is inside the spark access
     * scope) — an action's SparkListenerJobEnd arrives on the bus
     * thread AFTER the action returns, so instrumentation that reads
-    * listener-fed counters right after an action (graft.Profile's
-    * job/exec decomposition) must drain first or it undercounts the
-    * rep and bleeds the late event into the next one. */
+    * listener-fed counters right after an action
+    * (graft.monitoring.PerformanceTracker.measure) must drain first or
+    * it undercounts the run and bleeds the late event into the next. */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 

@@ -56,32 +56,28 @@ object PlanMetrics {
     * "numTasksFallBacked" proves the hash aggregate's sort-based
     * fallback path REALLY ran in a forced-degradation test). Same
     * traversal, dedup, and -1-sentinel guard as [[shuffleStats]]. */
-  def metricSum(df: DataFrame, name: String): Long = {
-    val seen = scala.collection.mutable.HashSet.empty[Long]
-    var total = 0L
-    allNodes(df.queryExecution.executedPlan).foreach { node =>
-      node.metrics.foreach { case (key, m) =>
-        if (key == name && seen.add(m.id)) total += math.max(0L, m.value)
-      }
-    }
-    total
-  }
+  def metricSum(df: DataFrame, name: String): Long =
+    sums(df.queryExecution.executedPlan, name)(0)
 
   def shuffleStats(plan: SparkPlan): ShuffleStats = {
+    val Seq(bytes, records, spill) =
+      sums(plan, "shuffleBytesWritten", "shuffleRecordsWritten", "spillSize")
+    ShuffleStats(bytes, records, spill)
+  }
+
+  /** Per name, the sum of that SQL metric over the plan's nodes, each
+    * accumulator counted once. */
+  private def sums(plan: SparkPlan, names: String*): Seq[Long] = {
     val seen = scala.collection.mutable.HashSet.empty[Long]
-    var bytes = 0L; var records = 0L; var spill = 0L
+    val total = Array.fill(names.size)(0L)
     allNodes(plan).foreach { node =>
       node.metrics.foreach { case (key, m) =>
+        val i = names.indexOf(key)
         // max(0): an unexecuted node's SQLMetric can sit at its -1
         // zero-sentinel; never let it subtract from the rollup
-        if (seen.add(m.id)) key match {
-          case "shuffleBytesWritten"   => bytes += math.max(0L, m.value)
-          case "shuffleRecordsWritten" => records += math.max(0L, m.value)
-          case "spillSize"             => spill += math.max(0L, m.value)
-          case _                       => ()
-        }
+        if (i >= 0 && seen.add(m.id)) total(i) += math.max(0L, m.value)
       }
     }
-    ShuffleStats(bytes, records, spill)
+    total.toSeq
   }
 }

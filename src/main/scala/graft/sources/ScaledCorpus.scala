@@ -135,8 +135,4 @@ object ScaledCorpus {
         .write.mode("overwrite").parquet(s"$tmpDir/embeddings.parquet")
     }
   }
-
-  /** Former name of [[dir]], kept for call-site stability. */
-  def documentsDir(spark: SparkSession, srcDir: String, factor: Int = 10): String =
-    dir(spark, srcDir, factor)
 }

@@ -87,6 +87,13 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame  = read(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "embeddings")
 
+  /** Resolves every table of `dir` once. A table's first read in a JVM
+    * runs a parquet schema-inference job; resolving them up front keeps
+    * that job out of whichever query would read the table first. */
+  def all(spark: SparkSession, dir: String): Unit =
+    Seq(region _, nation _, customer _, supplier _, part _, orders _,
+      lineitem _, documents _, embeddings _, events _).foreach(_(spark, dir))
+
   /** Events table — the time-series analog of the reference's
     * weather_data table (city→user_id, temperature→value).
     *

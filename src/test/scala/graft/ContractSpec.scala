@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.monitoring.PerformanceTracker
 import graft.sources.Tables
 
 /** Locks the driver contract's internal consistency: every oracle has
@@ -132,6 +133,20 @@ class ContractSpec extends AnyFunSuite {
     assert(builders.isEmpty, s"build the session through GraftSession.builder: $builders")
   }
 
+  test("only graft.monitoring registers listeners") {
+    // one recorder of jobs and actions: a listener registered elsewhere
+    // is a second account of the same run
+    val registers = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator.asScala.map(_.toString)
+      .filter(p => p.endsWith(".scala") && !p.contains("/graft/monitoring/"))
+      .filter { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(p)), "UTF-8")
+        src.contains("addSparkListener") || src.contains("listenerManager.register")
+      }.toSeq
+    assert(registers.isEmpty, s"record through graft.monitoring.PerformanceTracker: $registers")
+  }
+
   test("only BoundedFold holds the bound+1 probe and the seeded-sample recipes") {
     // a construction-time driver pull goes through one module, so its
     // bound clamp, ordering and null-key rule live in one place
@@ -174,26 +189,18 @@ class ContractSpec extends AnyFunSuite {
     val dir = TestSession.sfDir
     // a table's first read in a JVM runs a parquet schema job that
     // belongs to whichever query reads it first: resolve them all here
-    Seq(Tables.region _, Tables.nation _, Tables.customer _, Tables.supplier _,
-      Tables.part _, Tables.orders _, Tables.lineitem _, Tables.documents _,
-      Tables.embeddings _, Tables.events _).foreach(_(spark, dir))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    Tables.all(spark, dir)
+    Bridge.drainListenerBus(spark)
+    val tracker = PerformanceTracker.install(spark)
     val counts = try SparkEntry.queries.keys.toSeq.sorted.map { name =>
       graft.operators.QualityClassifier.invalidate()
       graft.operators.LangIdModel.invalidate()
-      Bridge.drainListenerBus(spark)
-      jobs.set(0)
-      SparkEntry.queries(name)(spark, dir)
-      Bridge.drainListenerBus(spark)
+      val run = tracker.measure(spark)(SparkEntry.queries(name)(spark, dir))
+      run.error.foreach(e => throw e)
       graft.operators.Caches.releaseAll()
-      name -> jobs.get
+      name -> run.jobs
     }.filter(_._2 > 0).toMap
-    finally spark.sparkContext.removeSparkListener(listener)
+    finally PerformanceTracker.uninstall(spark, tracker)
     assert(counts.keySet == eager.keySet,
       s"new eager queries: ${counts.keySet -- eager.keySet}; " +
         s"no longer eager: ${eager.keySet -- counts.keySet}")

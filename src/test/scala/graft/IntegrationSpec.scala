@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.ml.regression.LinearRegressionModel
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml.{FeaturePrep, ModelRegistry, Models, TemporalSplit}
+import graft.monitoring.PerformanceTracker
 import graft.operators.TimeSeries
 import graft.sources.Tables
 
@@ -554,49 +556,31 @@ class IntegrationSpec extends AnyFunSuite {
   }
 
   test("curatePlan construction runs zero Spark jobs; frame access owns its cache scope") {
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val executions = new AtomicInteger(0)
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        executions.incrementAndGet()
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        executions.incrementAndGet()
-    }
-    // also count raw jobs: localCheckpoint/RDD actions bypass the
-    // QueryExecutionListener but not the SparkListener bus
-    val jobs = new AtomicInteger(0)
-    val jobListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
+    // the tracker counts actions (QueryExecutionListener) and raw jobs:
+    // localCheckpoint/RDD actions bypass the former but not the latter
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select("doc_id", "source", "text")
-    spark.listenerManager.register(listener)
-    spark.sparkContext.addSparkListener(jobListener)
+    Bridge.drainListenerBus(spark)
+    val tracker = PerformanceTracker.install(spark)
     try {
       val curation = GraftApi.curatePlan(docs)
-      // both listener buses are async — give them time to drain before
-      // asserting the zero
-      Thread.sleep(1000)
-      assert(executions.get() == 0 && jobs.get() == 0,
-        s"curatePlan construction ran ${executions.get()} actions / ${jobs.get()} jobs")
+      // both listener buses are async — drain before asserting the zero
+      Bridge.drainListenerBus(spark)
+      assert(tracker.recorded.isEmpty && tracker.jobs.isEmpty,
+        s"curatePlan construction ran ${tracker.recorded.size} actions / ${tracker.jobs.size} jobs")
       // first frame access resolves near-dup clusters (jobs expected)
       // and registers this curation's caches under ITS scope only
       val before = graft.operators.Caches.trackedCount
       val n = curation.frame.count()
       assert(n > 0)
-      assert(jobs.get() > 0, "frame access should run the resolution jobs")
+      Bridge.drainListenerBus(spark)
+      assert(tracker.jobs.nonEmpty, "frame access should run the resolution jobs")
       assert(graft.operators.Caches.trackedCount(curation.scope) >= 2,
         "curation caches must register under the curation's scope")
       curation.release()
       assert(graft.operators.Caches.trackedCount(curation.scope) == 0)
       assert(graft.operators.Caches.trackedCount == before,
         "curation release must not touch other scopes' caches")
-    } finally {
-      spark.listenerManager.unregister(listener)
-      spark.sparkContext.removeSparkListener(jobListener)
-    }
+    } finally PerformanceTracker.uninstall(spark, tracker)
   }
 }

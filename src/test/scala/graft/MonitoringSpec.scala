@@ -21,13 +21,26 @@ class MonitoringSpec extends AnyFunSuite {
       assert(s.contains("manual_op"))
       val (n, total, mean, maxMs, failures) = s("manual_op")
       assert(n == 1 && failures == 0 && total >= 5.0 && mean == total && maxMs == total)
-    } finally spark.listenerManager.unregister(t)
+    } finally PerformanceTracker.uninstall(spark, t)
   }
 
   test("tracker records failures from spans") {
     val t = new PerformanceTracker
     intercept[RuntimeException](t.span("boom") { throw new RuntimeException("x") })
     assert(t.summary("boom")._5 == 1)
+  }
+
+  test("tracker measure counts a run's jobs and returns its failure") {
+    val t = PerformanceTracker.install(spark)
+    try {
+      val ran = t.measure(spark)(Tables.events(spark, sfDir).groupBy("user_id").count().collect())
+      assert(ran.ok && ran.wallS > 0 && ran.execS > 0)
+      assert(ran.jobs >= 1 && ran.jobRows.map(_.id) == ran.jobRows.map(_.id).sorted)
+      assert(ran.jobRows.forall(j => j.tasks > 0 && j.ms >= 0), ran.jobRows)
+      assert(ran.shuffle.bytesWritten > 0, ran.shuffle)
+      val failed = t.measure(spark)(throw new IllegalStateException("boom"))
+      assert(!failed.ok && failed.jobs == 0 && failed.error.exists(_.getMessage == "boom"))
+    } finally PerformanceTracker.uninstall(spark, t)
   }
 
   test("PlanMetrics reads executed shuffle volume; projections shuffle zero") {
@@ -59,7 +72,7 @@ class MonitoringSpec extends AnyFunSuite {
       // sees the real one
       Tables.events(spark, sfDir).groupBy("user_id").count().count()
       eventually(t.recorded.exists(o => o.name == "count" && o.shuffle.bytesWritten > 0))
-    } finally spark.listenerManager.unregister(t)
+    } finally PerformanceTracker.uninstall(spark, t)
   }
 
   private def eventually(cond: => Boolean, tries: Int = 50): Unit = {
