@@ -1591,8 +1591,8 @@ object SparkEntry {
     "q1_pricing" ->
       """SELECT l_returnflag, l_linestatus,
         |       (round(CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) + 1e-9, 2) + 0) AS sum_qty,
-        |       (round(CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) + 1e-9, 2) + 0) AS sum_base_price,
-        |       (round(CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6)) * (CAST(1 AS DECIMAL(38,6)) - CAST(l_discount AS DECIMAL(38,6)))) AS DOUBLE) + 1e-9, 2) + 0) AS sum_disc_price,
+        |       (CAST(round(sum(CAST(l_extendedprice AS DECIMAL(38,6))), 2) AS DOUBLE) + 0) AS sum_base_price,
+        |       (CAST(round(sum(CAST(l_extendedprice AS DECIMAL(38,6)) * (CAST(1 AS DECIMAL(38,6)) - CAST(l_discount AS DECIMAL(38,6)))), 2) AS DOUBLE) + 0) AS sum_disc_price,
         |       (round(CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) / count(l_quantity) + 1e-9, 4) + 0) AS avg_qty,
         |       (round(CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) / count(l_extendedprice) + 1e-9, 4) + 0) AS avg_price,
         |       (round(CAST(sum(CAST(l_discount AS DECIMAL(38,6))) AS DOUBLE) / count(l_discount) + 1e-9, 6) + 0) AS avg_disc,

@@ -7,6 +7,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Caches
+
 /** Batch inference — Spark realization of the reference's
   * load-latest-model → engineer-features → emit-predictions chain
   * (weather_predictor.py:495-508 predict, dashboard.py:282-310
@@ -64,17 +66,30 @@ object Inference {
     * with a defined target (the last horizon rows of each entity have
     * none — the reference's dropna), split chronologically, fit, and
     * evaluate on the held-out tail. Returns the fitted pipeline and
-    * its test metrics (mse/rmse/mae/r2). */
+    * its test metrics (mse/rmse/mae/r2). The labeled frame is
+    * computed once for the whole fit ([[onMaterialized]]). */
   def train(engineered: DataFrame,
             featureCols: Seq[String] = defaultFeatures,
             targetCol: String = "value_future",
             tsCol: String = "ts", seed: Long = 42L)
-      : (PipelineModel, Map[String, Double]) = {
-    val lab = labeled(engineered, featureCols, targetCol)
-    val (trainDf, testDf) = TemporalSplit.split(lab, tsCol)
-    val model = scoringPipeline(featureCols, seed = seed).fit(trainDf)
-    val metrics = Models.regressionMetrics(model.transform(testDf))
-    (model, metrics)
+      : (PipelineModel, Map[String, Double]) =
+    onMaterialized("Inference.train", labeled(engineered, featureCols, targetCol)) { lab =>
+      val (trainDf, testDf) = TemporalSplit.split(lab, tsCol)
+      val model = scoringPipeline(featureCols, seed = seed).fit(trainDf)
+      (model, Models.regressionMetrics(model.transform(testDf)))
+    }
+
+  /** Runs `fit` on `df` computed once ([[Caches.materialize]]) in a
+    * scope of its own, and releases that scope when `fit` returns or
+    * throws. Every pass of a fit (split sketch, scaler stats, forest
+    * metadata and bagging, the holdout score) then reads the same
+    * rows, in AQE's final partitions, instead of re-running the
+    * feature windows and the global sort. `fit` must not return
+    * anything that still reads its input frame. */
+  private def onMaterialized[T](name: String, df: DataFrame)(fit: DataFrame => T): T = {
+    val scope = Caches.newScope(name)
+    try Caches.in(scope)(fit(Caches.materialize(df)))
+    finally Caches.release(scope)
   }
 
   /** The labeled training frame [[train]] fits on — rows with a
@@ -96,16 +111,18 @@ object Inference {
     * report each regression metric's mean (`cv_<m>`) and population
     * std (`cv_<m>_std`) across folds. NaN folds (e.g. r² on a
     * zero-variance window) are excluded from that metric's
-    * aggregation; a metric NaN in every fold is omitted. */
+    * aggregation; a metric NaN in every fold is omitted. All folds
+    * read `labeled` computed once ([[onMaterialized]]). */
   def walkForwardCvMetrics(labeled: DataFrame, k: Int = 3,
                            featureCols: Seq[String] = defaultFeatures,
                            tsCol: String = "ts", seed: Long = 42L)
       : Map[String, Double] = {
     require(k > 0, s"cv folds must be positive: $k")
-    val perFold = TemporalSplit.walkForward(labeled, tsCol, k).map {
-      case (tr, te) =>
+    val perFold = onMaterialized("Inference.walkForwardCvMetrics", labeled) { lab =>
+      TemporalSplit.walkForward(lab, tsCol, k).map { case (tr, te) =>
         val m = scoringPipeline(featureCols, seed = seed).fit(tr)
         Models.regressionMetrics(m.transform(te))
+      }
     }
     perFold.flatMap(_.keySet).distinct.flatMap { key =>
       val vs = perFold.flatMap(_.get(key)).filterNot(_.isNaN)

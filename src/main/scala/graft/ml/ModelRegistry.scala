@@ -1,8 +1,11 @@
 package graft.ml
 
 import java.nio.file.{Files, Paths, Path}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
+import org.apache.spark.ml.param.{ParamMap, Params}
 import org.apache.spark.ml.util.{MLReadable, MLWritable}
 
 /** Model versioning — Spark realization of model_registry.py: each
@@ -10,11 +13,25 @@ import org.apache.spark.ml.util.{MLReadable, MLWritable}
   * plus a line in a JSON-lines registry file recording name, version,
   * path and metrics. MLlib native save/load is used for persistence
   * (cluster-portable: models write to any Hadoop-compatible FS).
+  *
+  * The instance also keeps, per name, the latest model it registered
+  * or loaded, with that model's version directory. [[load]] serves a
+  * copy of it while the index still names that directory as the
+  * latest, instead of reading the files back (an MLlib load runs a
+  * Spark job per metadata file and per parquet part: 13 jobs for the
+  * random-forest pipeline). The files stay the source of truth: a
+  * version registered by another instance or session moves the
+  * index's latest path, and the next load reads it from disk.
   */
 class ModelRegistry(rootDir: String) {
   private val root: Path = Paths.get(rootDir)
   Files.createDirectories(root)
   private val indexFile = root.resolve("registry.jsonl")
+  // name -> (version dir, model); guarded by `kept.synchronized`
+  private val kept = mutable.Map.empty[String, (String, Params)]
+
+  private def keep(name: String, path: String, model: Params): Unit =
+    kept.synchronized(kept(name) = (path, model.copy(ParamMap.empty)))
 
   private def esc(s: String) = s.flatMap {
     case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString
@@ -31,7 +48,8 @@ class ModelRegistry(rootDir: String) {
   }
 
   /** Save `model` as the next version of `name`; returns the version. */
-  def register(name: String, model: MLWritable, metrics: Map[String, Double]): Int = {
+  def register(name: String, model: Params with MLWritable,
+               metrics: Map[String, Double]): Int = {
     val version = latestVersion(name).getOrElse(0) + 1
     val dir = root.resolve(name).resolve(s"v$version")
     model.write.overwrite().save(dir.toString)
@@ -43,6 +61,7 @@ class ModelRegistry(rootDir: String) {
     val line = s"""{"name": "${esc(name)}", "version": $version, "path": "${esc(dir.toString)}", "hash": "${artifactHash(dir)}", "metrics": $ms}"""
     Files.writeString(indexFile, line + "\n",
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    keep(name, dir.toString, model)
     version
   }
 
@@ -86,9 +105,17 @@ class ModelRegistry(rootDir: String) {
     entries.filter(_._1 == name).map(_._2).maxOption
 
   /** Load the latest version of `name` with the given loader
-    * (e.g. `ModelRegistry.load(reg, "rf", RandomForestRegressionModel)`). */
-  def load[M](name: String, loader: MLReadable[M]): M = {
+    * (e.g. `reg.load("rf", RandomForestRegressionModel)`): a copy of
+    * the kept model when it is that version and of type `M`, else the
+    * files read back (and kept). */
+  def load[M <: Params : ClassTag](name: String, loader: MLReadable[M]): M = {
     val (_, _, path) = entries.filter(_._1 == name).maxBy(_._2)
-    loader.load(path)
+    kept.synchronized(kept.get(name)).collect {
+      case (p, m: M) if p == path => m.copy(ParamMap.empty).asInstanceOf[M]
+    }.getOrElse {
+      val m = loader.load(path)
+      keep(name, path, m)
+      m
+    }
   }
 }

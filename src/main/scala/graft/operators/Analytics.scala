@@ -274,10 +274,10 @@ object Analytics {
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
         rnd(decSum(col("l_quantity")), 2).as("sum_qty"),
-        rnd(decSum(col("l_extendedprice")), 2).as("sum_base_price"),
-        rnd(sum(col("l_extendedprice").cast("decimal(38,6)") *
+        centsSum(col("l_extendedprice").cast("decimal(38,6)")).as("sum_base_price"),
+        centsSum(col("l_extendedprice").cast("decimal(38,6)") *
           (lit(1).cast("decimal(38,6)") - col("l_discount").cast("decimal(38,6)")))
-          .cast("double"), 2).as("sum_disc_price"),
+          .as("sum_disc_price"),
         decAvg(col("l_quantity"), 4).as("avg_qty"),
         decAvg(col("l_extendedprice"), 4).as("avg_price"),
         decAvg(col("l_discount"), 6).as("avg_disc"),

@@ -1,13 +1,16 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
 import scala.util.DynamicVariable
 import scala.util.control.NonFatal
 
-/** Lifecycle registry for operator-internal persisted frames.
+/** Lifecycle registry for operator-internal persisted frames (and the
+  * one-fit frames of [[materialize]]).
   *
   * Operators like [[Dedup.minhashPairs]] cache an intermediate (the
   * shingle-hash frame) because it feeds two plan branches; the returned
@@ -52,17 +55,48 @@ object Caches {
     * `scope`. Nesting replaces the ambient scope for the inner block. */
   def in[T](scope: Scope)(body: => T): T = ambient.withValue(scope)(body)
 
-  private val live = ArrayBuffer.empty[(Scope, DataFrame)]
-  private val pinnedFrames = ArrayBuffer.empty[(Scope, DataFrame)]
+  // a registered frame; a materialized one also carries the local
+  // checkpoint RDD that holds its rows
+  private final case class Entry(scope: Scope, df: DataFrame,
+                                 checkpoint: Option[RDD[_]] = None)
+
+  private val live = ArrayBuffer.empty[Entry]
+  private val pinnedFrames = ArrayBuffer.empty[Entry]
 
   /** Persist `df` at `level` and track it under the ambient scope. */
   def persistTracked(df: DataFrame,
                      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
     synchronized {
       df.persist(level)
-      live += ((ambient.value, df))
+      live += Entry(ambient.value, df)
       df
     }
+
+  /** Compute `df` NOW, once, and return a frame that reads its rows
+    * back; tracked under the ambient scope like [[persistTracked]].
+    *
+    * For a frame that several passes read in a row — each MLlib fit
+    * pass (scaler stats, split sketch, forest metadata, bagging, the
+    * holdout score) re-runs the input's lineage otherwise. Unlike a
+    * `persist`, this is a `localCheckpoint(eager = true)`: the adaptive
+    * plan runs to completion first, so the rows keep AQE's final
+    * (coalesced) partitions and their row order. A cached
+    * `InMemoryRelation` plans its query without that final-stage
+    * coalescing, and a random forest bags per partition: on the
+    * weather benchmark's labeled frame (seed 7) a persisted input gave
+    * the fit 4 partitions instead of 1 and a different holdout RMSE
+    * (53.55 against 53.80); the checkpoint gave 1 and 53.80.
+    *
+    * The returned frame's lineage is CUT: it reads the checkpoint
+    * blocks and nothing else. Use it only inside the unit of work of
+    * its scope (one model fit); [[release]] unpersists the checkpoint
+    * RDD, after which the frame can no longer be read. */
+  def materialize(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(eager = true)
+    val rdd = cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    synchronized(live += Entry(ambient.value, cp, Some(rdd)))
+    cp
+  }
 
   /** Persist `df` and PIN it: [[releaseAll]] and [[release]] refuse to
     * drop pinned frames. For the rare frame whose consumers CANNOT
@@ -76,14 +110,14 @@ object Caches {
                     level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
     synchronized {
       df.persist(level)
-      pinnedFrames += ((ambient.value, df))
+      pinnedFrames += Entry(ambient.value, df)
       df
     }
 
-  private def drain(buf: ArrayBuffer[(Scope, DataFrame)], scope: Option[Scope]): Unit = {
+  private def drain(buf: ArrayBuffer[Entry], scope: Option[Scope]): Unit = {
     val (drop, keep) = scope match {
-      case Some(s) => buf.partition(_._1 eq s)
-      case None    => (buf.clone(), ArrayBuffer.empty[(Scope, DataFrame)])
+      case Some(s) => buf.partition(_.scope eq s)
+      case None    => (buf.clone(), ArrayBuffer.empty[Entry])
     }
     // Spark's CacheManager keys cache entries by PLAN, not by Dataset
     // handle: if a surviving registration (either registry, any scope)
@@ -98,25 +132,30 @@ object Caches {
     // handle doesn't matter, the plan-keyed cache entry does)
     def sharedElsewhere(df: DataFrame): Boolean = {
       val plan = df.queryExecution.analyzed
-      (live.iterator ++ pinnedFrames.iterator).exists { case (_, other) =>
-        other.queryExecution.analyzed.sameResult(plan)
-      }
+      (live.iterator ++ pinnedFrames.iterator).exists(
+        _.df.queryExecution.analyzed.sameResult(plan))
     }
     buf.clear()
     buf ++= keep
-    drop.foreach { case (_, df) =>
-      // the guard and the unpersist fail independently: a plan-analysis
-      // failure in sharedElsewhere must default to "not shared" (still
-      // unpersist — leaking the entry is the worse outcome); either
-      // failure is reported and the drain continues
-      val shared = try sharedElsewhere(df) catch { case NonFatal(e) =>
-        System.err.println(s"[caches] sharing check failed, unpersisting anyway: $e")
-        false
-      }
-      if (!shared)
-        try df.unpersist(blocking = false) catch { case NonFatal(e) =>
-          System.err.println(s"[caches] unpersist failed, entry may leak: $e")
+    drop.foreach {
+      // a checkpoint RDD belongs to its one entry: nothing shares it
+      case Entry(_, _, Some(rdd)) =>
+        try rdd.unpersist(blocking = false) catch { case NonFatal(e) =>
+          System.err.println(s"[caches] checkpoint unpersist failed, blocks may leak: $e")
         }
+      case Entry(_, df, None) =>
+        // the guard and the unpersist fail independently: a plan-analysis
+        // failure in sharedElsewhere must default to "not shared" (still
+        // unpersist — leaking the entry is the worse outcome); either
+        // failure is reported and the drain continues
+        val shared = try sharedElsewhere(df) catch { case NonFatal(e) =>
+          System.err.println(s"[caches] sharing check failed, unpersisting anyway: $e")
+          false
+        }
+        if (!shared)
+          try df.unpersist(blocking = false) catch { case NonFatal(e) =>
+            System.err.println(s"[caches] unpersist failed, entry may leak: $e")
+          }
     }
   }
 
@@ -144,11 +183,11 @@ object Caches {
   def trackedCount: Int = synchronized(live.size)
 
   /** Number of tracked frames registered under `scope` (for tests). */
-  def trackedCount(scope: Scope): Int = synchronized(live.count(_._1 eq scope))
+  def trackedCount(scope: Scope): Int = synchronized(live.count(_.scope eq scope))
 
   /** Number of currently pinned cached frames (for tests). */
   def pinnedCount: Int = synchronized(pinnedFrames.size)
 
   /** Number of pinned frames registered under `scope` (for tests). */
-  def pinnedCount(scope: Scope): Int = synchronized(pinnedFrames.count(_._1 eq scope))
+  def pinnedCount(scope: Scope): Int = synchronized(pinnedFrames.count(_.scope eq scope))
 }

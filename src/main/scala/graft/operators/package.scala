@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{floor, lit, round}
+import org.apache.spark.sql.functions.{floor, lit, round, sum}
 
 package object operators {
 
@@ -13,12 +13,31 @@ package object operators {
     * doubles then sit on opposite sides and round differently. Any
     * value that is NOT an exact tie is >= ~1e-6 from the boundary, so
     * nudging by 1e-9 on BOTH sides resolves exact ties identically
-    * while leaving every other value unchanged. Oracle SQL uses the
-    * same `round(x + 1e-9, n)` form.
+    * while leaving every other value unchanged — but only while 1e-9
+    * is more than half an ulp of the value, i.e. for |x| below about
+    * 2^24 (1.7e7). Past that the nudge is lost in the addition, and two
+    * doubles an ulp apart on either side of a tie round to different
+    * results: round an exact DECIMAL total before the double cast
+    * instead ([[centsSum]]). Oracle SQL uses the same
+    * `round(x + 1e-9, n)` form.
     */
   def rnd(c: Column, scale: Int): Column = round(c + lit(1e-9), scale)
 
-  import org.apache.spark.sql.functions.{count, get_json_object, sum, trim, when}
+  /** A money total to the cent: the exact DECIMAL sum of `term` (a
+    * DECIMAL expression) rounded HALF_UP to 2 places, then cast to
+    * double. For whole-table money sums, which pass 2^24 where
+    * [[rnd]]'s nudge no longer separates a half-cent tie: a sum of
+    * 4-decimal products like Σ ext·(1−disc) can end in exactly 5 in the
+    * third place (278423198.475 in one seeded lineitem sample), and
+    * there the engines' casts of the unrounded sum differ by an ulp —
+    * Spark's is the nearest double (just above the tie), DuckDB's cast
+    * of its scale-12 product sum lands one ulp below. Oracle side:
+    * `CAST(round(sum(<term>), 2) AS DOUBLE)` — DuckDB's DECIMAL `round`
+    * rounds half away from zero, as HALF_UP does, and both casts of the
+    * exact 2-place value give its nearest double. */
+  def centsSum(term: Column): Column = round(sum(term), 2).cast("double")
+
+  import org.apache.spark.sql.functions.{count, get_json_object, trim, when}
 
   /** ANSI-safe DOUBLE extraction of a JSON string field: a malformed
     * payload or non-numeric value becomes null — quarantined by the

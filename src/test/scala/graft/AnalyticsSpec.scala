@@ -11,6 +11,15 @@ object TestSession {
   private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
   sys.addShutdownHook(tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
 
+  /** `body`'s value and the run `t` measured around it. */
+  def measured[T](t: graft.monitoring.PerformanceTracker)(body: => T)
+      : (T, graft.monitoring.PerformanceTracker.Run) = {
+    var out: Option[T] = None
+    val run = t.measure(spark) { out = Some(body) }
+    run.error.foreach(e => throw e)
+    (out.get, run)
+  }
+
   /** A fresh temp directory named `prefix`..., deleted with its
     * contents when the test JVM exits. */
   def tempDir(prefix: String): java.nio.file.Path = {
@@ -170,5 +179,32 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(rows.length == 10)
     val revs = rows.map(_.getAs[Double]("revenue"))
     assert(revs.sameElements(revs.sorted(Ordering[Double].reverse)))
+  }
+
+  test("pricing rounds a half-cent tie past 2^24 up, as the oracle's DECIMAL round does") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    import graft.operators.Analytics
+    // one N/F group whose exact Σ ext·(1−disc) is 278423198.475:
+    // 2784 × 100000.00 + 23198.00 at no discount, plus 0.95 at 50% off
+    val id = col("id")
+    val lineitem = spark.range(2786).select(
+      lit("N").as("l_returnflag"), lit("F").as("l_linestatus"),
+      lit(1.0).as("l_quantity"),
+      when(id < 2784, 100000.0).when(id === 2784, 23198.0).otherwise(0.95)
+        .as("l_extendedprice"),
+      when(id === 2785, 0.5).otherwise(0.0).as("l_discount"),
+      lit("1998-01-01 00:00:00").cast("timestamp").as("l_shipdate"))
+    val tie = 278423198.475
+    // the premise: DuckDB's cast of this scale-12 DECIMAL sum lands one
+    // ulp below the exact value, and the 1e-9 nudge (under half an ulp
+    // at this magnitude) is lost in the addition, so rounding the cast
+    // double gives .47 where the exact sum rounds to .48
+    val oneUlpLow = math.nextDown(tie)
+    assert(oneUlpLow + 1e-9 == oneUlpLow)
+    assert(new java.math.BigDecimal(oneUlpLow).setScale(2, java.math.RoundingMode.HALF_UP)
+      .doubleValue == 278423198.47)
+    val Array(r) = Analytics.pricingSummary(lineitem).collect()
+    assert(r.getAs[Double]("sum_disc_price") == 278423198.48)
+    assert(r.getAs[Double]("sum_base_price") == 278423198.95)
   }
 }

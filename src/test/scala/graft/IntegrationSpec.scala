@@ -66,10 +66,19 @@ class IntegrationSpec extends AnyFunSuite {
     val dir = tempDir("graft-e2e").toString
     val reg = new ModelRegistry(dir)
     reg.register("temperature", model, metrics)
-    val loaded = reg.load("temperature", LinearRegressionModel)
+    // the registering instance serves the model it kept; a fresh
+    // instance (another session) reads the files back
+    val tracker = PerformanceTracker.install(spark)
+    val ((loaded, keptRun), (fromDisk, diskRun)) =
+      try (measured(tracker)(reg.load("temperature", LinearRegressionModel)),
+           measured(tracker)(new ModelRegistry(dir).load("temperature", LinearRegressionModel)))
+      finally PerformanceTracker.uninstall(spark, tracker)
+    assert(keptRun.jobs == 0, keptRun.jobRows)
+    assert(diskRun.jobs > 0)
     val a = preds.agg(sum("prediction")).collect()(0).getDouble(0)
-    val b = loaded.transform(assembled).agg(sum("prediction")).collect()(0).getDouble(0)
-    assert(math.abs(a - b) < 1e-6)
+    val sums = Seq(loaded, fromDisk).map(
+      _.transform(assembled).agg(sum("prediction")).collect()(0).getDouble(0))
+    assert(sums == Seq(a, a), s"$a vs $sums")
   }
 
   test("quality report rolls all checks into one partitioned artifact") {
